@@ -41,28 +41,36 @@ class StableHashEncoder:
     _memo: dict[str, list[int]] = {}
     _MEMO_MAX = 1 << 20
 
+    @classmethod
+    def _ids_for_piece(cls, piece: str) -> list[int]:
+        """Fold one piece into ids and memoize them — the single
+        definition behind encode, encode_with_breaks and encode_split.
+        Callers look the memo up inline first (the ~99% hit path) and call
+        this on a miss: 8-char windows of the lowercased piece, each
+        blake2b-hashed to a 64-bit int mod _VOCAB."""
+        lowered = piece.lower()
+        ids = [
+            int.from_bytes(
+                hashlib.blake2b(
+                    lowered[i : i + _WINDOW].encode("utf-8"), digest_size=8
+                ).digest(),
+                "big",
+            )
+            % _VOCAB
+            for i in range(0, len(lowered), _WINDOW)
+        ]
+        if len(cls._memo) >= cls._MEMO_MAX:
+            cls._memo.clear()
+        cls._memo[piece] = ids
+        return ids
+
     def encode(self, text: str) -> list[int]:
         out: list[int] = []
-        memo = self._memo
-        memo_get = memo.get
+        memo_get = self._memo.get
         for piece in _PIECE_RE.findall(text):
             ids = memo_get(piece)
             if ids is None:
-                lowered = piece.lower()
-                ids = [
-                    int.from_bytes(
-                        hashlib.blake2b(
-                            lowered[i : i + _WINDOW].encode("utf-8"),
-                            digest_size=8,
-                        ).digest(),
-                        "big",
-                    )
-                    % _VOCAB
-                    for i in range(0, len(lowered), _WINDOW)
-                ]
-                if len(memo) >= self._MEMO_MAX:
-                    memo.clear()
-                memo[piece] = ids
+                ids = self._ids_for_piece(piece)
             out.extend(ids)
         return out
 
@@ -83,29 +91,14 @@ class StableHashEncoder:
         piece, so callers with blocks that cannot need splitting (token
         count ≤ len(text) ≤ 512) should keep plain encode()."""
         assert len(sep) == 1 and not sep.isalnum() and not sep.isspace()
-        memo = self._memo
-        memo_get = memo.get
+        memo_get = self._memo.get
         out: list[int] = []
         spans: list[tuple[int, int]] = []
         start = 0
         for piece in _PIECE_RE.findall(text):
             ids = memo_get(piece)
             if ids is None:
-                lowered = piece.lower()
-                ids = [
-                    int.from_bytes(
-                        hashlib.blake2b(
-                            lowered[i : i + _WINDOW].encode("utf-8"),
-                            digest_size=8,
-                        ).digest(),
-                        "big",
-                    )
-                    % _VOCAB
-                    for i in range(0, len(lowered), _WINDOW)
-                ]
-                if len(memo) >= self._MEMO_MAX:
-                    memo.clear()
-                memo[piece] = ids
+                ids = self._ids_for_piece(piece)
             if piece == sep:
                 spans.append((start, len(out)))
                 out.extend(ids)
@@ -130,8 +123,7 @@ class StableHashEncoder:
         Encoder-specific: a BPE encoder has no such decomposition, so the
         chunker falls back to per-sentence encode() when absent."""
         assert len(sep) == 1 and not sep.isalnum() and not sep.isspace()
-        memo = self._memo
-        memo_get = memo.get
+        memo_get = self._memo.get
         lists: list[list[int]] = [[]]
         cur = lists[0]
         for piece in _PIECE_RE.findall(text):
@@ -141,21 +133,7 @@ class StableHashEncoder:
                 continue
             ids = memo_get(piece)
             if ids is None:
-                lowered = piece.lower()
-                ids = [
-                    int.from_bytes(
-                        hashlib.blake2b(
-                            lowered[i : i + _WINDOW].encode("utf-8"),
-                            digest_size=8,
-                        ).digest(),
-                        "big",
-                    )
-                    % _VOCAB
-                    for i in range(0, len(lowered), _WINDOW)
-                ]
-                if len(memo) >= self._MEMO_MAX:
-                    memo.clear()
-                memo[piece] = ids
+                ids = self._ids_for_piece(piece)
             cur.extend(ids)
         return lists
 

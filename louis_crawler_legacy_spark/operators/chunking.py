@@ -150,6 +150,14 @@ def group_heading_by_block(soup: Soup) -> None:
         _mark_parent(parent_div.parent)
 
 
+def _is_int_pairs(value) -> bool:
+    return isinstance(value, list) and all(
+        isinstance(p, (list, tuple)) and len(p) == 2
+        and all(type(i) is int for i in p)
+        for p in value
+    )
+
+
 def _split_chunk_into_subchunks(
     large_chunk: dict, enc, sent_spans: list[tuple[int, int]] | None = None
 ) -> list[dict]:
@@ -171,6 +179,11 @@ def _split_chunk_into_subchunks(
             token_lists = splitter(large_chunk["text_content"], ".")
         else:
             token_lists = [enc.encode(s) for s in sentences]
+    if len(token_lists) != len(sentences):
+        raise ValueError(
+            f"{len(token_lists)} sentence token lists for "
+            f"{len(sentences)} sentences (stale or malformed sent_spans?)"
+        )
     sentence_chunks = []
     for sentence, tokens in zip(sentences, token_lists):
         sentence_chunks.append(
@@ -265,10 +278,13 @@ def segment_blocks_into_chunks(blocks: list[Element], enc) -> list[dict]:
                 _collect_chunks_from_block(block, 0, collected, enc)
                 all_chunks.append(_combine_chunks(collected))
         else:
+            # spans cached by _compute_tokens are a list of int pairs; an
+            # HTML attr of the same name arrives as a string — ignore it
+            spans = block.attrs.get("sent_spans")
+            if not _is_int_pairs(spans):
+                spans = None
             all_chunks.extend(
-                _split_chunk_into_subchunks(
-                    chunk, enc, sent_spans=block.attrs.get("sent_spans")
-                )
+                _split_chunk_into_subchunks(chunk, enc, sent_spans=spans)
             )
             _mark_processed(block)
     return all_chunks

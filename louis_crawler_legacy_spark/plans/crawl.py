@@ -28,14 +28,14 @@ not pin one blob/task — operators/bloom.py); the politeness window uses
 salted pre-ranking for hot hosts (axis B); the exact anti-join's probe side
 is only the Bloom-hit subset; batch selection and discovery numbering use
 the two-pass range-partitioned pattern (operators/ordering.py) — no
-unpartitioned window anywhere in the round plan; state snapshots commit on
-a background thread, overlapping the next round's compute.
+unpartitioned window anywhere in the round plan. Every round is a barrier:
+its output appends and state merges run concurrently with the candidate
+path and are joined before the round returns.
 """
 
 from __future__ import annotations
 
 import os
-import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
@@ -276,16 +276,6 @@ class CrawlConfig:
     # benchmark, off in the reference-equivalence oracle (the reference
     # chunks in a separate spider, hawn — see plans/pipelines.py)
     build_spans: bool = False
-    # overlap round k+1's batch selection with round k's tail: as soon as
-    # frontier′ materializes, select_batch(frontier′) runs on a background
-    # thread, concurrent with the round's metrics/stats bookkeeping,
-    # checkpoint submit, and the draining output appends — removing the
-    # largest remaining SERIAL driver cost from the round critical path
-    # (the r02 full-loop-efficiency gap). Deterministic: selection is a
-    # pure function of the frontier state, and the prefetch is discarded
-    # whenever the state it was computed from is replaced (resume, expire,
-    # rollback, bootstrap).
-    prefetch_batch: bool = True
     # corpus-mode fetch-output partition sizing: the join output coalesces
     # to max(cores, n_batch / fetch_rows_per_part) partitions — one per
     # core for scheduling efficiency (extraction is ~1 ms/page since r06),
@@ -295,28 +285,6 @@ class CrawlConfig:
     # (measured: BytesToBytesMap allocation failure at 8 GiB without the
     # bound). 2048 rows ≈ 4 Arrow batches ≈ ~150 MB at bench page weight.
     fetch_rows_per_part: int = 2048
-    # ceiling on how many rounds the background seen/bloom merges may lag
-    # behind the round loop before _poll_state blocks on the oldest chain
-    # entries. Each uncovered round is one more delta plan the candidate
-    # dedup recomputes per round, so unbounded lag turns the non-blocking
-    # view into O(lag) critical-path work — bounded lag keeps the overlap
-    # win while capping the recompute (and the cached round inputs the
-    # pending merges pin in memory).
-    max_merge_lag: int = 2
-
-
-class _FutureGroup:
-    """Join several futures as one (surfacing the first failure)."""
-
-    def __init__(self, futures):
-        self._futures = futures
-
-    def result(self):
-        for f in self._futures:
-            f.result()
-
-    def done(self) -> bool:
-        return all(f.done() for f in self._futures)
 
 
 @dataclass
@@ -340,6 +308,19 @@ def _host(col):
     # netloc exactly as the reference computes it (split('/')[2],
     # goldie_playwright_parallel.py:192-197)
     return F.split(col, "/").getItem(2)
+
+
+def _release(df: DataFrame) -> None:
+    """Drop a DataFrame's cached or localCheckpointed blocks.
+    ``unpersist()`` only covers ``cache()``: a localCheckpoint's blocks
+    belong to the RDD under its ``LogicalRDD`` leaf and stay until that
+    RDD is unpersisted. The blocks are lineage-truncated, so the caller
+    must know that nothing reads ``df`` any more."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().logical()
+    if (plan.getClass().getSimpleName() == "LogicalRDD"
+            and plan.rdd().isLocallyCheckpointed()):
+        plan.rdd().unpersist(False)
 
 
 class CrawlEngine:
@@ -425,237 +406,31 @@ class CrawlEngine:
         self._pending_metrics: list[tuple] = []
         self._dirty = False
         self._last_round = 0  # highest round run in-memory (≥ checkpointed)
-        # async checkpointing: snapshot writes overlap the NEXT round's
-        # compute (VERDICT r01 full-loop-efficiency item); at most one
-        # in-flight, joined before state swap / reads / shutdown
-        self._ckpt_pool = ThreadPoolExecutor(max_workers=1)
-        self._ckpt_future = None
-        # output appends (pages/links/documents) run as concurrent jobs and
-        # DRAIN ACROSS ROUND BOUNDARIES: round k's span chunking overlaps
-        # round k+1's fetch/extract. They are joined before any state
-        # checkpoint that covers them (so a committed checkpoint implies
-        # its outputs landed) and before reads/rollback/run-end.
-        self._out_pool = ThreadPoolExecutor(max_workers=5)
-        self._out_tasks: list[tuple] = []  # (future, [dfs to unpersist])
-        # next-round batch prefetch (own worker — output jobs must never
-        # queue ahead of the next round's critical path)
-        self._select_pool = ThreadPoolExecutor(max_workers=1)
-        self._next_batch: tuple | None = None  # (future, frontier_df)
-        # seen/bloom state merges run as BACKGROUND futures resolved lazily
-        # by the NEXT round (which probes against the previous state and
-        # excludes its own batch explicitly) — the merge + materialization
-        # overlaps the next round's fetch+extract instead of sitting on the
-        # round critical path. One pool (2 workers: seen ∥ bloom); round
-        # k+1's merge chains on round k's via the lazy accessor.
-        self._state_pool = ThreadPoolExecutor(max_workers=2)
-        self._state_lock = threading.Lock()
-        # pending merge chains, oldest first: [(future, covered_round), …].
-        # Entries complete in chain order (entry k+1's merge consumes entry
-        # k's result), so _advance installs the NEWEST completed entry as
-        # the view base and retires every superseded intermediate — the
-        # original single-slot design only ever checked the latest
-        # (superseded) future, so once a merge lagged one round the base
-        # could never advance until the whole chain drained, and the view's
-        # delta list grew without bound (measured: O(rounds) recompute on
-        # the critical path).
-        self._seen_chain: list[tuple] = []
-        self._blooms_chain: list[tuple] = []
-        # NON-BLOCKING state views (round 4): _seen_df/_blooms_df always
-        # hold the last MATERIALIZED base (covering rounds ≤ _*_through);
-        # _state_deltas holds each later round's seen-additions as a
-        # (round, df) plan over that round's still-cached inputs. The
-        # round pipeline probes base ∪ uncovered-deltas and never waits
-        # for a merge while the lag stays ≤ config.max_merge_lag — beyond
-        # that _poll_state blocks on the oldest chain entries
-        # (backpressure: each uncovered round is a delta the critical
-        # path recomputes, so unbounded lag is unbounded per-round work).
-        self._state_deltas: list[tuple[int, DataFrame]] = []
-        self._seen_through = 0
-        self._blooms_through = 0
-        # bases replaced by a newer merge result: (df, blockers) — each
-        # released as soon as ITS blockers (the background consumers in
-        # flight at retirement time — output appends, checkpoint writer —
-        # that could still read its lineage-truncated blocks) are done.
-        # Per-entry gating is what bounds this list: an all-or-nothing
-        # "no outputs in flight" gate starves forever on a busy crawl
-        # where some append is always running, accumulating O(seen)
-        # checkpointed blocks per round.
-        self._retired_state: list[tuple[DataFrame, list]] = []
-        # caches whose output groups the CHECKPOINT WRITER joined on its
-        # background thread: the writer must not unpersist them inline (a
-        # later round's in-flight append can still reference them through
-        # an uncovered seen delta, and the blocker set can only be read
-        # race-free on the driver) — it hands them back here and the
-        # driver retires them with current blockers at the next reap/drain
-        self._ckpt_handoff: list[DataFrame] = []
+        # the round's concurrent jobs: the three output appends
+        # (pages/links/documents) and the two state merges (seen union,
+        # filter blobs) run here while the driver thread runs the candidate
+        # path. run_round joins all five before it returns.
+        self._pool = ThreadPoolExecutor(max_workers=5)
 
     def _bg_run(self, fn, *args, _pool: str = "background", **kwargs):
         """Run ``fn`` with the calling worker thread tagged into a FAIR
-        pool (session.py): output appends and checkpoint writes go to the
-        low-share "background" pool (they gate nothing — yield task slots
-        to the next round's critical path), state merges to the
-        equal-weight "state" pool (the view's coverage gates the critical
-        path's per-round delta recompute, so a starved merge COSTS
-        foreground time). The local property is per-thread sticky (pinned
-        thread mode); setting it per call is idempotent and cheap."""
+        pool (session.py): output appends go to the low-share "background"
+        pool, so they yield task slots to the candidate path; state merges
+        run in "default" beside it, because the round waits for them. The
+        local property is per-thread sticky (pinned thread mode); setting
+        it per call is idempotent and cheap."""
         self.spark.sparkContext.setLocalProperty(
             "spark.scheduler.pool", _pool
         )
         return fn(*args, **kwargs)
 
     # -- state management --------------------------------------------------------
-    def _retire(self, df: DataFrame) -> None:
-        """Mark a replaced state base for deferred release, tagging it with
-        the background consumers in flight RIGHT NOW — only they can hold
-        a plan over this base (http-mode pages_src anti-joins the seen view
-        of its build round; a checkpoint writer writes the version it
-        captured). Anything submitted later reads the newer state, so the
-        blocker set is fixed and finite — release cannot starve. (A
-        checkpoint submit cannot interleave with a retirement: retiring
-        happens only on the driver thread — _advance, _drain_handoff,
-        _reap_outputs — the same thread checkpoint() runs on.)"""
-        blockers = [t[0] for t in self._out_tasks]
-        ckpt = self._ckpt_future
-        if ckpt is not None and not ckpt.done():
-            blockers.append(ckpt)
-        with self._state_lock:
-            self._retired_state.append(
-                (df, [b for b in blockers if not b.done()])
-            )
-
-    @staticmethod
-    def _chain_result(entry: tuple) -> DataFrame:
-        """Resolve one merge-chain entry, labeling a failure with the
-        round it covered — the same broken future is reachable from
-        several call sites (round start, delta prune, _FutureGroup), so
-        without the label the re-raised traceback loses WHICH merge died
-        and reads as several distinct failures."""
-        fut, covered = entry
-        try:
-            return fut.result()
-        except Exception as e:
-            raise RuntimeError(
-                f"background state merge covering round {covered} failed: "
-                f"{e!r}"
-            ) from e
-
-    def _advance(self, chain_attr: str, df_attr: str, thr_attr: str,
-                 block_idx: int | None = None) -> None:
-        """Install the NEWEST completed merge from the chain as the view
-        base; retire the replaced base and every superseded intermediate
-        result (each was consumed only by the next merge in the chain,
-        which must already have completed for a newer entry to be done —
-        release still defers to _release_retired's blocker gating because
-        a checkpoint writer may have captured an entry's future). With
-        ``block_idx`` set, first wait for that chain entry — entries
-        complete in chain order, so waiting on index i bounds the pending
-        chain to len-i-1 entries. Driver thread only (chains and view
-        attrs are driver-owned; the lock covers _retired_state)."""
-        chain = getattr(self, chain_attr)
-        if not chain:
-            return
-        if block_idx is not None:
-            self._chain_result(chain[min(block_idx, len(chain) - 1)])
-        newest = -1
-        for i, (fut, _) in enumerate(chain):
-            if fut.done():
-                newest = i
-        if newest < 0:
-            return
-        new_df = self._chain_result(chain[newest])
-        old = getattr(self, df_attr)
-        setattr(self, df_attr, new_df)
-        setattr(self, thr_attr, chain[newest][1])
-        superseded = chain[:newest]
-        del chain[: newest + 1]
-        for entry in superseded:
-            df = self._chain_result(entry)
-            if df is not new_df and df is not old:
-                self._retire(df)
-        if old is not None and old is not new_df:
-            self._retire(old)
-
-    def _poll_state(self, max_lag: int | None = None) -> None:
-        """Install any COMPLETED background merge as the new base and prune
-        the deltas it covers. Called at round start — non-blocking while
-        the chain is ≤ ``max_lag`` entries deep; beyond that it waits on
-        the oldest entries (backpressure: each pending entry is an
-        uncovered delta the critical path recomputes every round, so
-        unbounded lag is unbounded per-round work — the measured
-        round-4 regression)."""
-        for chain_attr, df_attr, thr_attr in (
-            ("_seen_chain", "_seen_df", "_seen_through"),
-            ("_blooms_chain", "_blooms_df", "_blooms_through"),
-        ):
-            chain = getattr(self, chain_attr)
-            block_idx = None
-            if max_lag is not None and len(chain) > max_lag:
-                block_idx = len(chain) - 1 - max_lag
-            self._advance(chain_attr, df_attr, thr_attr, block_idx)
-        covered = min(self._seen_through, self._blooms_through)
-        self._state_deltas = [
-            (r, d) for r, d in self._state_deltas if r > covered
-        ]
-
-    def _seen(self) -> DataFrame:
-        """Seen rows through the last merged round — BLOCKING until the
-        whole merge chain drains. Barrier paths only; the round pipeline
-        uses _seen_view()."""
-        chain = self._seen_chain
-        self._advance("_seen_chain", "_seen_df", "_seen_through",
-                      block_idx=len(chain) - 1 if chain else None)
-        return self._seen_df
-
-    def _blooms(self) -> DataFrame:
-        chain = self._blooms_chain
-        self._advance("_blooms_chain", "_blooms_df", "_blooms_through",
-                      block_idx=len(chain) - 1 if chain else None)
-        return self._blooms_df
-
-    def _seen_view(self) -> DataFrame:
-        """Exact seen rows through the last COMPLETED round, without
-        waiting: materialized base ∪ the uncovered per-round deltas (plans
-        over still-cached round inputs; normally ≤1 — merges usually
-        finish within the next round's fetch+extract)."""
-        view = self._seen_df
-        for r, d in self._state_deltas:
-            if r > self._seen_through:
-                view = view.unionByName(d)
-        return view
-
-    def _bloom_uncovered(self) -> list[DataFrame]:
-        """Url sets seen in rounds the materialized filter base does not
-        cover yet — the probe treats base-misses as definitively-new, so
-        these ≤batch-size sets are excluded with the same anti-join that
-        already excludes the current batch."""
-        return [
-            d.select("url") for r, d in self._state_deltas
-            if r > self._blooms_through
-        ]
-
-    def _release_retired(self) -> None:
-        """Unpersist every retired state base whose own blockers have all
-        completed (lineage is truncated: a dropped block is unrecoverable,
-        CLAUDE.md trap — so a base waits for exactly the consumers that
-        could read it, and no longer)."""
-        with self._state_lock:
-            entries, self._retired_state = self._retired_state, []
-        still = []
-        for df, blockers in entries:
-            if all(b.done() for b in blockers):
-                df.unpersist()
-            else:
-                still.append((df, blockers))
-        if still:
-            with self._state_lock:
-                self._retired_state.extend(still)
-
     def _load_state(self) -> None:
         if self._frontier_df is None:
             self._frontier_df = self.frontier.read().cache()
-        if self._seen_df is None and not self._seen_chain:
+        if self._seen_df is None:
             self._seen_df = self.seen.read().cache()
-        if self._blooms_df is None and not self._blooms_chain:
+        if self._blooms_df is None:
             # a warehouse checkpointed with one filter kind must not be
             # reopened with the other: the blobs share a table but not a
             # format (cuckoo blobs are magic-tagged, so that direction
@@ -673,186 +448,43 @@ class CrawlEngine:
                     )
             self._blooms_df = self.blooms.read().cache()
 
-    def _join_checkpoint(self) -> None:
-        """Wait for the in-flight async checkpoint (if any), surfacing its
-        failure."""
-        fut, self._ckpt_future = self._ckpt_future, None
-        if fut is not None:
-            fut.result()
+    def _swap_state(self, frontier_df, seen_df, blooms_df) -> None:
+        """Install the next round's state (None reloads from the tables at
+        the next round) and drop the replaced caches. Every round joins
+        the jobs it submitted before it returns, so nothing still reads
+        the replaced blocks."""
+        for attr, new in (("_frontier_df", frontier_df),
+                          ("_seen_df", seen_df), ("_blooms_df", blooms_df)):
+            old = getattr(self, attr)
+            if old is not None and old is not new:
+                _release(old)
+            setattr(self, attr, new)
 
-    def _discard_prefetch(self, nb: tuple | None = None) -> None:
-        """Drop a (possibly in-flight) batch prefetch whose frontier state
-        is gone — wait for it, then release its materialized blocks."""
-        if nb is None:
-            nb, self._next_batch = self._next_batch, None
-        if nb is not None:
-            try:
-                batch, _ = nb[0].result()
-                batch.unpersist()
-            except Exception:
-                pass  # its frontier may already be unpersisted — discard
+    def checkpoint(self, round_no: int) -> None:
+        """Snapshot the in-memory state (X5). At real scale seen would get
+        delta-appends; the local store rewrites (copy-on-write).
 
-    def _drain_outputs(self) -> None:
-        """Join all in-flight output appends (surfacing failures), then
-        release the cached DataFrames they were reading. Barrier path:
-        with every append joined (and callers joining the checkpoint
-        writer first), inline unpersist is safe here — nothing that could
-        read the caches is still running."""
-        tasks, self._out_tasks = self._out_tasks, []
-        for fut, _ in tasks:
-            fut.result()
-        for _, dfs in tasks:
-            for df in dfs:
-                df.unpersist()
-        self._drain_handoff()
-        self._release_retired()
-
-    def _drain_handoff(self) -> None:
-        """Retire (driver-side, with current blockers) the caches the
-        checkpoint writer joined on its background thread."""
-        with self._state_lock:
-            handoff, self._ckpt_handoff = self._ckpt_handoff, []
-        for df in handoff:
-            self._retire(df)
-
-    def _reap_outputs(self) -> None:
-        """Non-blocking: release the caches of output groups that have
-        ALREADY completed. Keeps the cached round inputs (extracted,
-        fetched, old state) bounded on long runs with checkpoint_every=0,
-        where no per-round checkpoint writer drains them.
-
-        Caches are RETIRED (blocker-gated), never unpersisted inline: a
-        completed round-k group's extracted/fetched can still back an
-        uncovered seen delta inside a LATER round's in-flight append plan
-        (built while merge k was pending). An inline unpersist there
-        forces a lineage recompute mid-append — in http mode that re-runs
-        the live fetch for round k's whole batch (duplicate requests, and
-        the refetched rows need not equal the originals). The blocker set
-        (in-flight groups + checkpoint writer at retire time) is exactly
-        the set of jobs that can still read the cache."""
-        self._drain_handoff()
-        still = []
-        for task in self._out_tasks:
-            if task[0].done():
-                task[0].result()  # surface failures
-                for df in task[1]:
-                    self._retire(df)
-            else:
-                still.append(task)
-        self._out_tasks = still
-        self._release_retired()
-
-    def _swap_state(self, frontier_df, seen, blooms) -> None:
-        """Install the next round's state. ``seen``/``blooms`` are either a
-        resolved DataFrame (or None, for reload-from-tables paths) or a
-        ``(future, covered_round)`` pair for a merge still running in the
-        background. On the round path the current base df STAYS installed
-        (it is the non-blocking view's base until a merge lands via
-        _poll_state/_advance); the pending pair is appended to the merge
-        chain."""
-        # a pending prefetch was computed from the OLD frontier — discard
-        # (run_round re-submits from the new state right after swapping)
-        self._discard_prefetch()
-        reload_path = not isinstance(seen, tuple)
-        if reload_path:
-            # settle merges still pending before dropping in-memory state
-            # (expire/rollback/bootstrap re-read the tables)
-            if self._seen_chain:
-                self._seen()
-            if self._blooms_chain:
-                self._blooms()
-        # an in-flight checkpoint reads the OLD state DataFrames — join it
-        # before unpersisting them
-        self._join_checkpoint()
-        if self._frontier_df is not None:
-            self._frontier_df.unpersist()
-        self._frontier_df = frontier_df
-        for df_attr, chain_attr, new in (
-            ("_seen_df", "_seen_chain", seen),
-            ("_blooms_df", "_blooms_chain", blooms),
-        ):
-            cur = getattr(self, df_attr)
-            if isinstance(new, tuple):
-                # pending merge — keep `cur` installed as the view base;
-                # the merge result replaces it at _poll_state/_advance
-                getattr(self, chain_attr).append(new)
-            else:
-                if cur is not None and cur is not new:
-                    cur.unpersist()
-                setattr(self, df_attr, new)
-        if reload_path:
-            # tables now carry everything the deltas described
-            self._state_deltas = []
-            self._seen_through = 0
-            self._blooms_through = 0
-            self._release_retired()
-
-    def checkpoint(self, round_no: int, wait: bool = False) -> None:
-        """Snapshot the in-memory state (X5) — asynchronously, so the
-        snapshot writes overlap the next round's compute (the state
-        DataFrames are already materialized via localCheckpoint, so the
-        background thread only runs parquet-write jobs). At real scale seen
-        would get delta-appends; the local store rewrites (copy-on-write).
-
-        Output appends for rounds ≤ N are joined INSIDE the background
-        write, before the snapshot commits: a committed round-N checkpoint
-        implies every output row for rounds ≤ N landed (crash-resume rolls
-        outputs back to the last checkpoint, so this ordering is what makes
-        that sound) — while the in-flight output jobs still overlap the
-        next round's compute."""
-        if self._dirty:
-            self._join_checkpoint()  # keep snapshot commits ordered
-            out_tasks, self._out_tasks = self._out_tasks, []
-            # capture the state VERSION at submit time: a still-pending
-            # merge chain is captured as its NEWEST future (covers every
-            # earlier entry; resolved by the background writer — never on
-            # this thread)
-            sc, bc = self._seen_chain, self._blooms_chain
-            state = (
-                self._frontier_df,
-                sc[-1][0] if sc else self._seen_df,
-                bc[-1][0] if bc else self._blooms_df,
-                list(self._pending_metrics), out_tasks,
-            )
-            self._pending_metrics = []
-            self._dirty = False
-            self._ckpt_future = self._ckpt_pool.submit(
-                self._bg_run, self._write_checkpoint, round_no, state
-            )
-        if wait:
-            self._join_checkpoint()
-            self._drain_outputs()
-
-    def _write_checkpoint(self, round_no: int, state: tuple) -> None:
-        frontier_df, seen_df, blooms_df, pending_metrics, out_tasks = state
-        # a captured pending merge resolves here, off the round loop
-        if hasattr(seen_df, "result"):
-            seen_df = seen_df.result()
-        if hasattr(blooms_df, "result"):
-            blooms_df = blooms_df.result()
-        # outputs first: the snapshot must not commit before its rounds'
-        # appends are durable
-        for fut, _ in out_tasks:
-            fut.result()
-        # hand the joined groups' caches back to the driver for
-        # blocker-gated retirement (NOT unpersist-inline: a later round's
-        # in-flight append can still reference a cache through an
-        # uncovered seen delta, and this thread cannot read the live
-        # blocker set race-free)
-        with self._state_lock:
-            self._ckpt_handoff.extend(
-                df for _, dfs in out_tasks for df in dfs
-            )
-        self.frontier.overwrite(frontier_df, {"round": round_no})
-        self.seen.overwrite(seen_df, {"round": round_no})
+        Rounds join their output appends before they return, so a
+        committed round-N checkpoint implies every output row for rounds
+        ≤ N landed (crash-resume rolls outputs back to the last
+        checkpoint, which is what makes that sound)."""
+        if not self._dirty:
+            return
+        self.frontier.overwrite(self._frontier_df, {"round": round_no})
+        self.seen.overwrite(self._seen_df, {"round": round_no})
         self.blooms.overwrite(
-            blooms_df, {"round": round_no, "filter": self.config.seen_filter}
+            self._blooms_df,
+            {"round": round_no, "filter": self.config.seen_filter},
         )
-        if pending_metrics:
+        if self._pending_metrics:
             self.metrics.append(
-                self.spark.createDataFrame(pending_metrics, METRICS_SCHEMA),
+                self.spark.createDataFrame(
+                    self._pending_metrics, METRICS_SCHEMA
+                ),
                 {"round": round_no},
             )
+        self._pending_metrics = []
+        self._dirty = False
 
     # -- bootstrap ------------------------------------------------------------
     def bootstrap(self, seeds: list[str]) -> None:
@@ -872,8 +504,6 @@ class CrawlEngine:
         )
         self.frontier.overwrite(rows, {"round": 0, "op": "bootstrap"})
         self._swap_state(self.frontier.read().cache(), None, None)
-        self._seen_df = None
-        self._blooms_df = None
 
     # -- one round --------------------------------------------------------------
     def select_batch(self, frontier_df: DataFrame) -> tuple[DataFrame, int]:
@@ -1024,6 +654,7 @@ class CrawlEngine:
                 self.robots_table.upsert(
                     rules, key="host", meta={"round": round_no, "op": "robots"}
                 )
+                _release(rules)
             else:
                 self.robots_table.append(
                     rules, {"round": round_no, "op": "robots"}
@@ -1059,27 +690,8 @@ class CrawlEngine:
                 _last[0] = now
 
         self._load_state()
-        # install any finished background merge; block only if the merge
-        # chain has fallen more than max_merge_lag rounds behind
-        self._poll_state(max_lag=cfg.max_merge_lag)
-        if _prof:
-            print(
-                f"    [prof r{round_no}] lag: deltas={len(self._state_deltas)}"
-                f" seen_thr={self._seen_through}"
-                f" blooms_thr={self._blooms_through}"
-                f" chains={len(self._seen_chain)}/{len(self._blooms_chain)}"
-                f" retired={len(self._retired_state)}"
-                f" out_tasks={len(self._out_tasks)}",
-                flush=True,
-            )
         frontier_df = self._frontier_df
-        nb, self._next_batch = self._next_batch, None
-        if nb is not None and nb[1] is frontier_df:
-            batch, n_batch = nb[0].result()  # prefetched last round
-        else:
-            if nb is not None:  # stale prefetch (state was replaced)
-                self._discard_prefetch(nb)
-            batch, n_batch = self.select_batch(frontier_df)
+        batch, n_batch = self.select_batch(frontier_df)
         if cfg.collect_batch_urls:
             batch_rows = batch.select("url", "batch_seq").orderBy("batch_seq").collect()
             batch_urls = [r.url for r in batch_rows]
@@ -1089,6 +701,7 @@ class CrawlEngine:
             batch_urls = []
         _mark("select_batch")
         if n_batch == 0:
+            _release(batch)
             return None
 
         # S1/J7: fetch. Corpus mode = join against the corpus table
@@ -1216,9 +829,9 @@ class CrawlEngine:
             )
             if cfg.broadcast_batch:
                 # same state-never-moves shape as the candidate dedup: the
-                # page urls are ≤ batch — semi the seen view against their
+                # page urls are ≤ batch — semi the seen state against their
                 # broadcast, anti the (small) hit set back out
-                seen_hits = self._seen_view().join(
+                seen_hits = self._seen_df.join(
                     F.broadcast(first_per_url.select("url")),
                     "url", "left_semi",
                 ).select("url")
@@ -1227,7 +840,7 @@ class CrawlEngine:
                 ).cache()
             else:
                 pages_src = first_per_url.join(
-                    self._seen_view().select("url"), "url", "left_anti"
+                    self._seen_df.select("url"), "url", "left_anti"
                 ).cache()
         else:
             pages_src = extracted
@@ -1259,10 +872,12 @@ class CrawlEngine:
                 )
                 .withColumn("updated_round", F.lit(round_no))
             )
+            learned = learned.localCheckpoint()
             self.host_state.upsert(
-                learned.localCheckpoint(), key="host",
+                learned, key="host",
                 meta={"round": round_no, "op": "throttle"},
             )
+            _release(learned)
 
         # S7: pages upsert (MERGE by url)
         page_rows = pages_src.select(
@@ -1278,15 +893,12 @@ class CrawlEngine:
         )
         # the three output writes (pages/links/spans) are independent of the
         # candidate-dedup path and of each other — run them as concurrent
-        # Spark jobs off the round's critical path, draining across round
-        # boundaries (joined by the next checkpoint / run end, so round k's
-        # span chunking overlaps round k+1's fetch+extract). The pool has a
-        # slot for every output plus the seen-state materialization below —
-        # nothing queues behind span chunking.
-        out_pool = self._out_pool
-        out_futures = []
+        # Spark jobs beside the round's critical path, joined at round end.
+        # The pool has a slot for every output plus the two state merges
+        # below — nothing queues behind span chunking.
+        futures = []
         if cfg.unique_fetch:
-            out_futures.append(out_pool.submit(
+            futures.append(self._pool.submit(
                 self._bg_run, self.pages.append, page_rows,
                 {"round": round_no}))
         else:
@@ -1311,7 +923,7 @@ class CrawlEngine:
         if cfg.unique_fetch:
             # src fetched once ⇒ (src,dst) can never repeat across rounds;
             # within-round dedup above suffices (J6 insert-if-absent holds)
-            out_futures.append(out_pool.submit(
+            futures.append(self._pool.submit(
                 self._bg_run, self.links.append, edges,
                 {"round": round_no}))
         else:
@@ -1331,7 +943,7 @@ class CrawlEngine:
                     F.col("url").alias("doc_id"), "content", "children"
                 )
             )
-            out_futures.append(out_pool.submit(
+            futures.append(self._pool.submit(
                 self._bg_run, self.documents.append, spans_df,
                 {"round": round_no}))
         _mark("spans_write")
@@ -1399,7 +1011,7 @@ class CrawlEngine:
                 .select("url", "_s.*")
             )
             if cfg.broadcast_batch:
-                add_hits = self._seen_view().join(
+                add_hits = self._seen_df.join(
                     F.broadcast(seen_add.select("url")), "url", "left_semi"
                 ).select("url")
                 seen_add = seen_add.join(
@@ -1407,19 +1019,16 @@ class CrawlEngine:
                 )
             else:
                 seen_add = seen_add.join(
-                    self._seen_view().select("url"), "url", "left_anti"
+                    self._seen_df.select("url"), "url", "left_anti"
                 )
         # localCheckpoint: materialize AND truncate the logical plan —
         # without it the state lineage grows every round and Catalyst
         # re-analysis goes exponential (the classic iterative-job trap).
         # Durability comes from checkpoint() snapshots, not these blocks.
-        # Both merges run ENTIRELY in the background and the round loop
-        # NEVER waits for one (round 4; r3 still blocked at the probe when
-        # a merge outlived the next round's fetch+extract — 4-10 s spikes
-        # under the FAIR pool): candidate dedup probes the last
-        # MATERIALIZED base and excludes the uncovered rounds' url sets +
-        # its own batch below — identical semantics (seen_r = base ∪
-        # deltas ∪ batch_r), zero serial state cost on the critical path.
+        # Both merges run beside the candidate path and never gate it: the
+        # candidate dedup probes the through-round-(r-1) state and
+        # excludes its own batch below — identical semantics
+        # (seen_r = seen_{r-1} ∪ batch_r). The round joins them at its end.
         add_hashes = bloom_mod.with_bloom_hashes(
             seen_add.select("url"), "url", cfg.num_partitions
         ).select("part_id", "h1", "h2")
@@ -1434,60 +1043,18 @@ class CrawlEngine:
         # downstream: under AQE, localCheckpoint records
         # UnknownPartitioning in the LogicalRDD — verified on this Spark —
         # so the shuffle would buy nothing and cost O(seen) per round.)
-        # each merge chains on the PREVIOUS round's future DIRECTLY (never
-        # through the blocking accessors — the round loop no longer resolves
-        # futures, so an accessor call here could wait on the caller's own
-        # pending entry). Retirement of consumed/replaced bases is ALL
-        # driver-side in _advance: the worker cannot know whether its input
-        # is (or will become) the installed view base, and a retire from
-        # two sides would double-release.
-        prev_seen_fut = self._seen_chain[-1][0] if self._seen_chain else None
-        prev_blooms_fut = (
-            self._blooms_chain[-1][0] if self._blooms_chain else None
+        seen_fut = self._pool.submit(
+            self._bg_run,
+            lambda: self._seen_df.unionByName(seen_add)
+            .coalesce(self._state_parts).localCheckpoint(),
+            _pool="default",
         )
-        prev_seen_df, prev_blooms_df = self._seen_df, self._blooms_df
-
-        _sub_t = time.time()
-
-        def merge_seen():
-            t_s = time.time()
-            base = (
-                prev_seen_fut.result()
-                if prev_seen_fut is not None else prev_seen_df
-            )
-            t_b = time.time()
-            out = (
-                base.unionByName(seen_add)
-                .coalesce(self._state_parts)
-                .localCheckpoint()
-            )
-            if _prof:
-                print(
-                    f"    [prof r{round_no}] merge_seen: queued "
-                    f"{t_s - _sub_t:.2f}s chainwait {t_b - t_s:.2f}s "
-                    f"run {time.time() - t_b:.2f}s", flush=True)
-            return out
-
-        def merge_blooms():
-            t_s = time.time()
-            base = (
-                prev_blooms_fut.result()
-                if prev_blooms_fut is not None else prev_blooms_df
-            )
-            t_b = time.time()
-            out = self.pb.merge_blobs(base, add_hashes).localCheckpoint()
-            if _prof:
-                print(
-                    f"    [prof r{round_no}] merge_blooms: queued "
-                    f"{t_s - _sub_t:.2f}s chainwait {t_b - t_s:.2f}s "
-                    f"run {time.time() - t_b:.2f}s", flush=True)
-            return out
-
-        seen_fut = self._state_pool.submit(
-            self._bg_run, merge_seen, _pool="state"
-        )
-        blooms_fut = self._state_pool.submit(
-            self._bg_run, merge_blooms, _pool="state"
+        blooms_fut = self._pool.submit(
+            self._bg_run,
+            lambda: self.pb.merge_blobs(
+                self._blooms_df, add_hashes
+            ).localCheckpoint(),
+            _pool="default",
         )
 
         _mark("seen+bloom_submit")
@@ -1524,7 +1091,7 @@ class CrawlEngine:
             )
 
         # J2 two-stage dedup: bloom probe against the THROUGH-r-1 blobs
-        # (this round's merge is still running in the background), exact
+        # (this round's merge is still running beside it), exact
         # left-anti on the hits, then exclude this round's own batch — the
         # union is exactly seen_r. The batch side is this round's ≤
         # batch_size urls (AQE broadcasts it at sandbox/production-batch
@@ -1535,10 +1102,9 @@ class CrawlEngine:
         probed = self.pb.probe(cand_h, self._blooms_df).cache()
         definitely_new = probed.filter(~F.col("maybe_seen"))
         maybe = probed.filter(F.col("maybe_seen"))
-        # NOTE: counted w.r.t. the materialized filter base (a candidate
-        # linking back to a page fetched this round — or a
-        # not-yet-merged recent round — counts as definitively-new here
-        # and is removed by the exclusion anti-join below)
+        # NOTE: counted w.r.t. the through-r-1 filter (a candidate linking
+        # back to a page fetched this round counts as definitively-new here
+        # and is removed by the batch anti-join below)
         n_bloom_hits = maybe.count() if cfg.detailed_metrics else -1
         if cfg.broadcast_batch:
             # small-round regime (broadcast_batch, the same knob that
@@ -1553,7 +1119,7 @@ class CrawlEngine:
             # set outgrows the broadcast budget — broadcast_batch=False
             # keeps the shuffled anti-join, and the blob/seen tables ride
             # the bucketed layout instead; PLANS.md multi-executor note.)
-            hit_urls = self._seen_view().join(
+            hit_urls = self._seen_df.join(
                 F.broadcast(maybe.select(F.col("cand_url").alias("url"))),
                 "url", "left_semi",
             ).select(F.col("url").alias("cand_url"))
@@ -1562,19 +1128,14 @@ class CrawlEngine:
             )
         else:
             confirmed_new = maybe.join(
-                self._seen_view().select(F.col("url").alias("cand_url")),
+                self._seen_df.select(F.col("url").alias("cand_url")),
                 "cand_url",
                 "left_anti",
             )
-        # base-blob misses are definitively-new ONLY w.r.t. the rounds the
-        # materialized filter covers — exclude the uncovered rounds' url
-        # sets (normally none; one per lagging merge round, each ≤ batch
-        # size) together with this round's own batch, in one anti-join
-        # (broadcast in the small-round regime: ≤ batch + lag·batch urls)
-        exclude = batch.select("url")
-        for d in self._bloom_uncovered():
-            exclude = exclude.unionByName(d)
-        exclude = exclude.select(F.col("url").alias("cand_url"))
+        # filter misses are definitively-new only w.r.t. rounds ≤ r-1 —
+        # exclude this round's own batch (broadcast in the small-round
+        # regime: ≤ batch urls)
+        exclude = batch.select(F.col("url").alias("cand_url"))
         if cfg.broadcast_batch:
             exclude = F.broadcast(exclude)
         new_cand = definitely_new.unionByName(confirmed_new).join(
@@ -1658,8 +1219,7 @@ class CrawlEngine:
         # for materialize+count instead of two. coalesce (narrow, free — no
         # shuffle on the round critical path) caps the union's partition
         # count at _state_parts so the frontier state stays O(1) partitions
-        # across rounds; batch selection re-distributes by url anyway (and
-        # runs on the background prefetch thread).
+        # across rounds; batch selection re-distributes by url anyway.
         frontier_new = (
             frontier_after_removal.unionByName(new_rows)
             .coalesce(self._state_parts)
@@ -1678,9 +1238,8 @@ class CrawlEngine:
         # one tiny job over the ≤P blob rows — only their headers are read,
         # no bits leave the tasks
         if cfg.detailed_metrics:
-            # post-merge stats need the merged blobs — resolves the future
-            # (tests/monitoring path; the tight bench loop runs with
-            # detailed_metrics off and never waits here)
+            # post-merge stats need the merged blobs — waits for the merge
+            # here instead of at the round-end join
             fs = bloom_mod.filter_stats(blooms_fut.result()).agg(
                 F.max("n_layers").alias("layers"), F.max("fill").alias("fill")
             ).first()
@@ -1690,50 +1249,19 @@ class CrawlEngine:
             n_filter_layers, filter_fill = -1, -1.0
 
         _mark("frontier_ckpt+counts")
-        # outputs and state merges keep running into the next round;
-        # extracted/fetched (and the http-mode redirect-deduped view) stay
-        # cached until they drain — the seen merge reads errored rows off
-        # the fetched cache and seen_add off the extracted cache. The OLD
-        # seen/bloom state releases through the SAME drain list, NOT at
-        # merge resolution: in http mode the background page/link/span
-        # appends read pages_src, whose plan anti-joins the OLD
-        # (localCheckpointed) seen — unpersisting it at resolution while an
-        # append still runs would drop lineage-truncated blocks that can
-        # never be recomputed (block-not-found, not a recompute).
-        # state BASES are no longer drained here: a base may serve several
-        # rounds' views while merges lag, so its release is deferred to
-        # _release_retired (retired at install/chain-consumption, freed once
-        # the consumers in flight at its retirement have completed)
-        out_caches = [extracted, fetched]
-        if pages_src is not extracted:
-            out_caches.append(pages_src)
-        # register THIS round's group BEFORE reaping: a completed group's
-        # caches may still back an uncovered seen delta referenced by this
-        # round's in-flight append plans (http-mode pages_src anti-joins
-        # the view of its build round) — _reap_outputs retires them with
-        # the in-flight consumers as blockers, and this round's group must
-        # be in that blocker set
-        self._out_tasks.append(
-            (_FutureGroup(out_futures + [seen_fut, blooms_fut]), out_caches)
-        )
-        self._reap_outputs()  # release earlier rounds' completed groups
-
-        # the round's seen-additions stay visible to later rounds' views
-        # until BOTH merges cover them (plan over this round's cached
-        # extracted/fetched inputs, which out_tasks keeps alive)
-        self._state_deltas.append((round_no, seen_add))
-        self._swap_state(
-            frontier_new, (seen_fut, round_no), (blooms_fut, round_no)
-        )
+        # round barrier: join every job this round submitted, surfacing the
+        # first failure. After the join nothing reads the replaced state or
+        # the round's caches, so they release inline — their blocks are
+        # lineage-truncated (a dropped block is unrecoverable), which is
+        # why no job may outlive its round.
+        for fut in futures:
+            fut.result()
+        self._swap_state(frontier_new, seen_fut.result(), blooms_fut.result())
+        for df in (batch, fetched, extracted, pages_src, probed):
+            _release(df)
         self._dirty = True
         self._last_round = round_no
-        if cfg.prefetch_batch:
-            # round k+1's batch selection starts NOW, overlapping this
-            # round's bookkeeping, checkpoint submit, and output drains
-            self._next_batch = (
-                self._select_pool.submit(self.select_batch, frontier_new),
-                frontier_new,
-            )
+        _mark("round_join")
 
         wall = time.time() - t0
         stats = RoundStats(
@@ -1757,12 +1285,7 @@ class CrawlEngine:
              n_filter_layers, filter_fill)
         )
         if cfg.checkpoint_every and round_no % cfg.checkpoint_every == 0:
-            self.checkpoint(round_no)  # async — overlaps the next round
-        probed.unpersist()
-        # extracted/fetched release via _reap_outputs/_drain_outputs once
-        # the output appends AND the background state merges complete
-        # (blocker-gated retire — later rounds' in-flight appends may
-        # still read them through an uncovered seen delta)
+            self.checkpoint(round_no)
         return stats
 
     def run(self, seeds: list[str] | None = None, max_rounds: int = 10_000,
@@ -1777,7 +1300,7 @@ class CrawlEngine:
                 break
             stats.append(s)
             r += 1
-        self.checkpoint(r - 1, wait=True)  # final checkpoint (no-op if clean)
+        self.checkpoint(r - 1)  # final checkpoint (no-op if clean)
         return stats
 
     # -- resume (X5) -----------------------------------------------------------
@@ -1825,10 +1348,7 @@ class CrawlEngine:
         # the TABLES, so stale snapshots would silently forget every URL
         # seen since the last checkpoint (their output rows already landed
         # → the next run would re-fetch and duplicate them)
-        if self._dirty:
-            self.checkpoint(self._last_round, wait=True)
-        self._join_checkpoint()
-        self._drain_outputs()
+        self.checkpoint(self._last_round)
         # distinct: a duplicated request URL must not fan out the seen join
         # (n_expired would overcount) nor request two cuckoo copy-deletions
         # for one seen row
@@ -1899,14 +1419,14 @@ class CrawlEngine:
         self.blooms.overwrite(
             blooms_new, {"round": r, "op": "expire", "filter": cfg.seen_filter}
         )
+        _release(marked)
+        _release(blooms_new)
         self._swap_state(None, None, None)  # reload from tables next round
         return n_expired
 
     def rollback_to_round(self, round_no: int) -> None:
         """Time-travel every state AND output table back to the end of
         ``round_no``."""
-        self._join_checkpoint()
-        self._drain_outputs()
         for table in (self.frontier, self.seen, self.pages, self.links,
                       self.metrics, self.blooms, self.documents,
                       self.robots_table, self.host_state):

@@ -63,21 +63,14 @@ def get_spark(
         # would otherwise each wait the default 3 s for their preferred
         # executor; remote reads of the small state blocks are cheaper
         .config("spark.locality.wait", "0s")
-        # FAIR scheduling, three pools: the crawl engine's output appends /
-        # checkpoint writes run as background jobs overlapping the next
-        # round — under FIFO they are submitted EARLIER than the next
-        # round's critical-path jobs and therefore hold strict priority for
-        # task slots at a saturated local[32]; the weighted "background"
-        # pool (1 vs default's 4) makes them yield instead. State MERGES
-        # get their own equal-weight "state" pool: the round loop never
-        # blocks on a merge (non-blocking views), so a merge stuck behind
-        # the appends in the low-share FIFO background pool starves for
-        # whole rounds at a saturated cluster — measured 10-50 s for a
-        # 32-task union — and every uncovered round adds a delta the
-        # critical path recomputes (O(lag) per round). Merges are tiny
-        # (union of one round's additions, blob aggregate); at equal
-        # weight they land within the next round's fetch. (CrawlEngine
-        # tags its worker threads with spark.scheduler.pool.)
+        # FAIR scheduling, two pools: a crawl round runs its output appends
+        # (pages/links/documents) as concurrent jobs beside the candidate
+        # path. Under FIFO the appends, submitted first, would hold strict
+        # priority for task slots; the weighted "background" pool (1 vs
+        # default's 4) makes them yield instead. The round's state merges
+        # stay in "default": the round joins them before it returns, so
+        # they are on its critical path. (CrawlEngine tags its worker
+        # threads with spark.scheduler.pool.)
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.scheduler.allocation.file", _fair_allocation_file())
     )
@@ -93,8 +86,8 @@ _FAIR_XML: str | None = None
 
 
 def _fair_allocation_file() -> str:
-    """Write the three-pool FAIR allocation (default / background /
-    state) once per process (Spark only accepts a file path for pool
+    """Write the two-pool FAIR allocation (default / background) once
+    per process (Spark only accepts a file path for pool
     definitions)."""
     global _FAIR_XML
     if _FAIR_XML is None:
@@ -115,10 +108,6 @@ def _fair_allocation_file() -> str:
                 '  <pool name="background">\n'
                 "    <schedulingMode>FIFO</schedulingMode>\n"
                 "    <weight>1</weight>\n    <minShare>0</minShare>\n"
-                "  </pool>\n"
-                '  <pool name="state">\n'
-                "    <schedulingMode>FIFO</schedulingMode>\n"
-                "    <weight>4</weight>\n    <minShare>0</minShare>\n"
                 "  </pool>\n"
                 "</allocations>\n"
             )

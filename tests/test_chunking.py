@@ -157,6 +157,38 @@ def test_preannotated_cache_path():
     }
 
 
+class EncodeOnly:
+    """An encoder with only ``encode`` (like TiktokenEncoder): no combined
+    pass overwrites a block's sent_spans attr, and no encode_split."""
+
+    def encode(self, text):
+        return ENC.encode(text)
+
+
+def test_string_sent_spans_attr_is_ignored():
+    """A fixture HTML ``sent_spans`` attr arrives as a string; the split
+    path must ignore it and chunk exactly like the unannotated block."""
+    sentences = ". ".join(words(50, f"s{j}") for j in range(12)) + "."
+    plain = f"<html><body><div><p>{sentences}</p></div></body></html>"
+    annotated = plain.replace("<body>", "<body sent_spans='[[0, 5]]'>")
+    want = chunking.chunk_html(plain, EncodeOnly())
+    assert len(want) == 2  # the >512-token split path ran
+    assert chunking.chunk_html(annotated, EncodeOnly()) == want
+
+
+def test_mismatched_sent_spans_raise():
+    """Cached spans that disagree with the sentence count must fail loudly
+    instead of zip silently dropping sentences."""
+    sentences = ". ".join(words(50, f"s{j}") for j in range(12)) + "."
+    tokens = ENC.encode(sentences)
+    large = {"text_content": sentences, "tokens": tokens,
+             "token_count": len(tokens), "title": ""}
+    with pytest.raises(ValueError, match="2 sentence token lists for 13"):
+        chunking._split_chunk_into_subchunks(
+            large, ENC, sent_spans=[(0, 10), (10, len(tokens))]
+        )
+
+
 def test_chunk_invariants_random_docs():
     # invariant from reference tests (test_chunking.py:175-180): chunks are
     # nonempty and ≤512 unless produced by the lone->512-sentence path

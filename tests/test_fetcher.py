@@ -780,7 +780,8 @@ def test_http_soak_flat_wall_bounded_driver_state(spark, tmp_path):
     """12-round live-server soak with robots TTL + adaptive throttle on —
     the http-mode twin of the 48-round corpus soak (guards the http-only
     driver state against the next O(rounds) leak): per-round wall stays
-    flat, the robots host LRU and retired-state list stay bounded, and
+    flat, the robots host LRU stays bounded, no Spark job outlives its
+    round, the persisted-RDD count stops growing from round 3 on, and
     host_state keeps exactly one row per host across all rounds."""
     import statistics
     import threading as _threading
@@ -826,20 +827,25 @@ def test_http_soak_flat_wall_bounded_driver_state(spark, tmp_path):
         eng = CrawlEngine(spark, corpus=None,
                           warehouse_dir=str(tmp_path / "wh"), config=cfg)
         eng.bootstrap([f"{base}/site/0"])
-        walls, robots_cache, retired = [], [], []
+        sc = spark.sparkContext
+        walls, robots_cache, active, persisted = [], [], [], []
         r = 1
         while r <= 12:
             s = eng.run_round(r)
             if s is None:
                 break
+            active.append(list(sc.statusTracker().getActiveJobsIds()))
+            persisted.append(sc._jsc.getPersistentRDDs().size())
             walls.append(s.wall_sec)
             robots_cache.append(len(eng._robots_hosts or {}))
-            retired.append(len(eng._retired_state))
             r += 1
-        eng.checkpoint(r - 1, wait=True)
+        eng.checkpoint(r - 1)
         assert len(walls) == 12, f"crawl ended early after {len(walls)} rounds"
         assert max(robots_cache) <= 1, robots_cache  # one host, ever
-        assert max(retired) <= 8, f"retired-state trending up: {retired}"
+        assert not any(active), f"jobs outlived their round: {active}"
+        assert max(persisted[2:]) <= persisted[2], (
+            f"persisted RDDs growing: {persisted}"
+        )
         # TTL 3 over 12 rounds: the single host refetches at most every
         # 3rd round (4-5 requests), never per-round
         assert log.count("/robots.txt") <= 5

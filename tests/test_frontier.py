@@ -198,8 +198,6 @@ def test_crash_resume_no_duplicate_outputs(spark, tmp_path):
     eng1.bootstrap(SEEDS)
     for r in (1, 2, 3):
         assert eng1.run_round(r) is not None
-    eng1._join_checkpoint()  # let the async round-2 snapshot land
-    eng1._drain_outputs()  # and round-3's in-flight output appends
     assert eng1.last_completed_round() == 2
     n_pages_dirty = eng1.pages.read().count()
 
@@ -358,9 +356,10 @@ def test_long_run_soak_flat_wall_and_partitions(spark, tmp_path):
     40 the round plan would schedule thousands of state tasks), and
     (b) late-round wall time stays within noise of early rounds (an
     O(rounds) per-round cost would show a clear upward trend by round
-    40+), and (c) the retired-state list (replaced bases awaiting their
-    blockers) stays bounded — a starved release would leak one O(seen)
-    localCheckpointed base per round."""
+    40+), and (c) every round is a barrier: no Spark job is still active
+    after run_round returns, and the persisted-RDD count stops growing
+    from round 3 on — a leaked cache or localCheckpoint would add one
+    O(seen) block set per round."""
     import statistics
 
     corpus = corpus_mod.generate_corpus(
@@ -374,22 +373,23 @@ def test_long_run_soak_flat_wall_and_partitions(spark, tmp_path):
         spark, corpus_mod.corpus_df(spark, corpus), str(tmp_path / "wh"), cfg
     )
     eng.bootstrap(corpus_mod.seed_urls(corpus, n=2))
-    walls, seen_parts, frontier_parts, retired = [], [], [], []
+    sc = spark.sparkContext
+    walls, seen_parts, frontier_parts, active, persisted = [], [], [], [], []
     r = 1
     while r <= 48:
         s = eng.run_round(r)
         if s is None:
             break
+        active.append(list(sc.statusTracker().getActiveJobsIds()))
+        persisted.append(sc._jsc.getPersistentRDDs().size())
         walls.append(s.wall_sec)
-        seen_parts.append(eng._seen().rdd.getNumPartitions())
+        seen_parts.append(eng._seen_df.rdd.getNumPartitions())
         frontier_parts.append(eng._frontier_df.rdd.getNumPartitions())
-        retired.append(len(eng._retired_state))
         r += 1
-    eng.checkpoint(r - 1, wait=True)
-    assert max(retired) <= 8, f"retired-state list trending up: {retired}"
-    eng._drain_outputs()
-    assert eng._retired_state == [], (
-        "retired bases must all free once every background consumer drains"
+    eng.checkpoint(r - 1)
+    assert not any(active), f"jobs outlived their round: {active}"
+    assert max(persisted[2:]) <= persisted[2], (
+        f"persisted RDDs growing: {persisted}"
     )
     assert len(walls) >= 40, f"corpus exhausted after {len(walls)} rounds"
     assert len(set(seen_parts[1:])) == 1, f"seen partitions grew: {seen_parts}"

@@ -304,10 +304,10 @@ def test_state_partition_count_constant_across_rounds(spark, tmp_path):
     while r <= 8:
         if eng.run_round(r) is None:
             break
-        seen_parts.append(eng._seen().rdd.getNumPartitions())
+        seen_parts.append(eng._seen_df.rdd.getNumPartitions())
         frontier_parts.append(eng._frontier_df.rdd.getNumPartitions())
         r += 1
-    eng.checkpoint(r - 1, wait=True)
+    eng.checkpoint(r - 1)
     assert len(seen_parts) >= 5, "corpus too small to exercise the loop"
     assert len(set(seen_parts[1:])) == 1, f"seen partitions grew: {seen_parts}"
     assert len(set(frontier_parts[1:])) == 1, (
@@ -315,148 +315,3 @@ def test_state_partition_count_constant_across_rounds(spark, tmp_path):
     )
     assert seen_parts[-1] <= eng._state_parts
     assert frontier_parts[-1] <= eng._state_parts
-
-
-def test_retired_state_release_is_per_entry_not_all_or_nothing():
-    """Retired state bases must free as soon as THEIR OWN blockers (the
-    background consumers in flight at retirement) complete — an
-    all-or-nothing "no outputs in flight" gate starves forever on a busy
-    crawl where some append is always running, leaking one O(seen)
-    localCheckpointed base per round. Pure-mechanics test: no Spark."""
-    import threading
-
-    from louis_crawler_legacy_spark.plans.crawl import CrawlEngine
-
-    class FakeDf:
-        def __init__(self):
-            self.released = False
-
-        def unpersist(self):
-            self.released = True
-
-    class FakeFut:
-        def __init__(self, is_done=False):
-            self._done = is_done
-
-        def done(self):
-            return self._done
-
-    eng = CrawlEngine.__new__(CrawlEngine)
-    eng._state_lock = threading.Lock()
-    eng._retired_state = []
-    eng._ckpt_future = None
-
-    slow = FakeFut(False)
-    # base A retired while `slow` is in flight; base B retired later, when
-    # only already-done consumers remain
-    a, b = FakeDf(), FakeDf()
-    eng._out_tasks = [(slow, [])]
-    eng._retire(a)
-    eng._out_tasks = [(FakeFut(True), [])]
-    eng._retire(b)
-
-    eng._release_retired()
-    assert b.released, "entry with all-done blockers must free immediately"
-    assert not a.released, "entry with a live blocker must wait"
-    assert [df for df, _ in eng._retired_state] == [a]
-
-    slow._done = True
-    eng._release_retired()
-    assert a.released
-    assert eng._retired_state == []
-
-    # a pending checkpoint writer blocks only bases retired while it runs
-    ckpt = FakeFut(False)
-    eng._ckpt_future = ckpt
-    eng._out_tasks = []
-    c = FakeDf()
-    eng._retire(c)
-    eng._release_retired()
-    assert not c.released
-    ckpt._done = True
-    eng._release_retired()
-    assert c.released
-
-
-def test_merge_chain_installs_newest_completed_and_bounds_lag():
-    """The non-blocking state views' merge-chain protocol (pure
-    mechanics, no Spark): _advance must install the NEWEST completed
-    chain entry as the view base even while later entries are still
-    running (the original single-slot design only checked the latest
-    superseded future, so one lagging merge froze the base — and the
-    per-round view deltas, recomputed on the critical path — for the
-    rest of the crawl); superseded intermediates and the replaced base
-    are retired driver-side exactly once; _poll_state(max_lag=K) blocks
-    on the oldest entries until at most K remain pending."""
-    import threading
-
-    from louis_crawler_legacy_spark.plans.crawl import CrawlEngine
-
-    class FakeDf:
-        def __init__(self, name):
-            self.name = name
-            self.released = False
-
-        def unpersist(self):
-            self.released = True
-
-    class FakeFut:
-        def __init__(self, df, is_done=False):
-            self._df = df
-            self._done = is_done
-            self.waited = False
-
-        def done(self):
-            return self._done
-
-        def result(self):
-            self.waited = True
-            self._done = True  # blocking wait completes the merge
-            return self._df
-
-    eng = CrawlEngine.__new__(CrawlEngine)
-    eng._state_lock = threading.Lock()
-    eng._retired_state = []
-    eng._ckpt_future = None
-    eng._out_tasks = []
-    eng._state_deltas = []
-    eng._blooms_chain = []
-    eng._blooms_through = 0
-    eng._blooms_df = None
-
-    base0 = FakeDf("base0")
-    r1, r2, r3 = FakeDf("r1"), FakeDf("r2"), FakeDf("r3")
-    eng._seen_df = base0
-    eng._seen_through = 0
-    f1, f2, f3 = FakeFut(r1, True), FakeFut(r2, True), FakeFut(r3, False)
-    eng._seen_chain = [(f1, 1), (f2, 2), (f3, 3)]
-
-    # non-blocking poll: f2 is the newest DONE entry — install it, retire
-    # base0 (replaced) and r1 (superseded intermediate), keep f3 pending
-    eng._poll_state()
-    assert eng._seen_df is r2 and eng._seen_through == 2
-    assert eng._seen_chain == [(f3, 3)]
-    assert not f3.waited, "poll must not block on a pending merge"
-    retired = {df.name for df, _ in eng._retired_state}
-    assert retired == {"base0", "r1"}
-    assert not r2.released and not r3.released
-
-    # lag backpressure: chain deeper than max_lag → block on the oldest
-    # entries until ≤ max_lag remain
-    f4, f5 = FakeFut(FakeDf("r4"), False), FakeFut(FakeDf("r5"), False)
-    eng._seen_chain = [(f3, 3), (f4, 4), (f5, 5)]
-    eng._poll_state(max_lag=2)
-    assert f3.waited, "beyond max_lag the oldest entry must be waited on"
-    assert len(eng._seen_chain) <= 2
-    assert eng._seen_df is r3 and eng._seen_through == 3
-
-    # delta pruning follows min(seen, blooms) coverage
-    eng._state_deltas = [(1, "d1"), (3, "d3"), (4, "d4")]
-    eng._blooms_through = 3
-    eng._poll_state()
-    assert [r for r, _ in eng._state_deltas] == [4]
-
-    # blocking accessor drains the whole chain
-    got = eng._seen()
-    assert got.name == "r5" and eng._seen_through == 5
-    assert eng._seen_chain == []
