@@ -21,7 +21,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
+
+from louis_crawler_legacy_spark.sources.tables import local_df
 
 
 def politeness_cap(
@@ -44,12 +47,11 @@ def politeness_cap(
     order = [F.col(c) for c in order_cols]
     default_budget = budget if budget is not None else 2**31 - 1
     if host_budgets:
-        spark = df.sparkSession
-        budget_df = F.broadcast(
-            spark.createDataFrame(
-                sorted(host_budgets.items()), [host_col, "_host_budget"]
-            )
-        )
+        budget_df = F.broadcast(local_df(
+            df.sparkSession, sorted(host_budgets.items()),
+            T.StructType([T.StructField(host_col, T.StringType()),
+                          T.StructField("_host_budget", T.LongType())]),
+        ))
         df = df.join(budget_df, host_col, "left")
     else:
         df = df.withColumn("_host_budget", F.lit(None).cast("int"))
@@ -171,8 +173,6 @@ def robots_disallowed_expr(target: Column, rules: Column) -> Column:
 
 
 def rules_type():
-    from pyspark.sql import types as T
-
     return T.ArrayType(
         T.StructType(
             [

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from louis_crawler_legacy_spark.operators.politeness import normalize_rules
+from louis_crawler_legacy_spark.sources.tables import local_df
 
 
 def parse_robots_txt(text: str | None, agent: str = "*") -> dict:
@@ -111,7 +112,7 @@ def robots_table(spark: SparkSession, robots_bodies: dict[str, str]) -> DataFram
     for host, body in sorted(robots_bodies.items()):
         parsed = parse_robots_txt(body)
         rows.append((host, parsed["rules"]))
-    return spark.createDataFrame(rows, ROBOTS_SCHEMA)
+    return local_df(spark, rows, ROBOTS_SCHEMA)
 
 
 def robots_map(robots_bodies: dict[str, str]) -> dict[str, list]:
@@ -128,7 +129,8 @@ def rules_df(spark: SparkSession, robots: dict[str, list]) -> DataFrame:
     rule dicts) ⇒ the joinable robots(host, rules) DataFrame."""
     from louis_crawler_legacy_spark.plans.crawl import ROBOTS_SCHEMA
 
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [(h, normalize_rules(rs)) for h, rs in sorted(robots.items())],
         ROBOTS_SCHEMA,
     )

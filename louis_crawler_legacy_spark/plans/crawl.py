@@ -18,15 +18,19 @@ UDF and the numpy Bloom probe):
      batch ──LEFT JOIN corpus──▶ fetched (miss/≥400 → errored)
    fetched ──extract (mapInPandas)──▶ pages′ + children
     pages′ ──upsert──▶ pages;  edges ──anti-join──▶ links
-  children ──robots──▶ candidates ──bloom probe──▶ {definitely-new | maybe}
-     maybe ──exact left-anti seen──▶ new ∪ definitely-new ──▶ frontier′
+  children ──robots──▶ candidates ──filter probe──▶ probed (maybe_seen flag)
+  seen_hits = seen ⋉ bc(maybe urls);  pending = frontier∖batch ⋉ bc(probed)
+    probed ▷ bc(seen_hits ∪ batch) ▷ bc(pending) ──▶ new ──▶ frontier′
   seen′ = seen ∪ batch;  blooms′ = blooms ⊕ batch;  metrics += round row
+
+(⋉ semi-join, ▷ anti-join, bc = broadcast: the state streams in place and
+no broadcast nests more than two levels deep.)
 
 Scale notes: frontier/seen are hash-partitioned by canonical host (north
 rule axis A) while the Bloom layer partitions by URL hash (a hot host must
 not pin one blob/task — operators/bloom.py); the politeness window uses
-salted pre-ranking for hot hosts (axis B); the exact anti-join's probe side
-is only the Bloom-hit subset; batch selection and discovery numbering use
+salted pre-ranking for hot hosts (axis B); the exact seen probe broadcasts
+only the filter-hit subset; batch selection and discovery numbering use
 the two-pass range-partitioned pattern (operators/ordering.py) — no
 unpartitioned window anywhere in the round plan. Every round is a barrier:
 its output appends and state merges run concurrently with the candidate
@@ -57,7 +61,7 @@ from louis_crawler_legacy_spark.operators.spans import (
     SPANS_TYPE,
     spans_from_extracted,
 )
-from louis_crawler_legacy_spark.sources.tables import Warehouse
+from louis_crawler_legacy_spark.sources.tables import Warehouse, local_df
 
 ORDER_COLS = ("depth", "discovery_round", "discovery_seq", "url")
 
@@ -135,6 +139,11 @@ HOST_STATE_SCHEMA = T.StructType(
         T.StructField("throttle_delay", T.DoubleType()),
         T.StructField("updated_round", T.IntegerType()),
     ]
+)
+
+_SEED_SCHEMA = T.StructType(
+    [T.StructField("url", T.StringType()),
+     T.StructField("seed_idx", T.LongType())]
 )
 
 METRICS_SCHEMA = T.StructType(
@@ -310,6 +319,10 @@ def _host(col):
     return F.split(col, "/").getItem(2)
 
 
+def _strings(*names: str) -> T.StructType:
+    return T.StructType([T.StructField(n, T.StringType()) for n in names])
+
+
 def _release(df: DataFrame) -> None:
     """Drop a DataFrame's cached or localCheckpointed blocks.
     ``unpersist()`` only covers ``cache()``: a localCheckpoint's blocks
@@ -478,9 +491,7 @@ class CrawlEngine:
         )
         if self._pending_metrics:
             self.metrics.append(
-                self.spark.createDataFrame(
-                    self._pending_metrics, METRICS_SCHEMA
-                ),
+                local_df(self.spark, self._pending_metrics, METRICS_SCHEMA),
                 {"round": round_no},
             )
         self._pending_metrics = []
@@ -489,12 +500,19 @@ class CrawlEngine:
     # -- bootstrap ------------------------------------------------------------
     def bootstrap(self, seeds: list[str]) -> None:
         """Round 0: seeds ∖ seen → frontier at depth 0
-        (goldie_playwright_parallel.py:763-766 + U4 resume reconciliation)."""
-        seed_df = self.spark.createDataFrame(
-            [(u, i) for i, u in enumerate(seeds)], ["url", "seed_idx"]
+        (goldie_playwright_parallel.py:763-766 + U4 resume reconciliation).
+
+        The anti-join is the round's semi-then-anti pair: the seen state
+        streams in place against the broadcast seeds and only the matched
+        urls broadcast back, so seen never shuffles — and an empty seen
+        table (a local relation) prunes both joins at plan time."""
+        seed_df = local_df(
+            self.spark, [(u, i) for i, u in enumerate(seeds)], _SEED_SCHEMA
         )
-        seen_urls = self.seen.read().select("url")
-        fresh = seed_df.join(seen_urls, "url", "left_anti")
+        seen_hits = self.seen.read().join(
+            F.broadcast(seed_df.select("url")), "url", "left_semi"
+        ).select("url")
+        fresh = seed_df.join(F.broadcast(seen_hits), "url", "left_anti")
         rows = fresh.select(
             "url",
             _host(F.col("url")).alias("host"),
@@ -570,8 +588,8 @@ class CrawlEngine:
         ).collect()
         unknown = [p.host for p in pairs if p.host not in self._robots_hosts]
         if unknown:
-            host_df = self.spark.createDataFrame(
-                [(h,) for h in unknown], ["host"]
+            host_df = local_df(
+                self.spark, [(h,) for h in unknown], _strings("host")
             )
             for r in (
                 self.robots_table.read()
@@ -595,8 +613,8 @@ class CrawlEngine:
             if stale(p.host)
         ]
         if new_pairs:
-            robots_req = self.spark.createDataFrame(
-                new_pairs, ["url", "host"]
+            robots_req = local_df(
+                self.spark, new_pairs, _strings("url", "host")
             )
             fetched = http_fetch(robots_req, timeout=self.config.fetch_timeout)
 
@@ -1090,110 +1108,73 @@ class CrawlEngine:
                 url_col="cand_url",
             )
 
-        # J2 two-stage dedup: bloom probe against the THROUGH-r-1 blobs
-        # (this round's merge is still running beside it), exact
-        # left-anti on the hits, then exclude this round's own batch — the
-        # union is exactly seen_r. The batch side is this round's ≤
-        # batch_size urls (AQE broadcasts it at sandbox/production-batch
-        # sizes it fits; plain shuffled anti otherwise).
+        # J2 two-stage dedup: filter probe against the THROUGH-r-1 blobs
+        # (this round's merge is still running beside it), then exact
+        # anti-joins. Both state probes key off the cached `probed` frame,
+        # so no broadcast nests more than two levels deep:
+        #   seen_hits = seen ⋉ bc(maybe urls)
+        #   pending   = frontier_after_removal ⋉ bc(probed (url, depth))
+        #   new_cand  = probed ▷ bc(seen_hits ∪ batch [∪ final urls])
+        #                      ▷ bc(pending)
+        # Same rows as anti-joining maybe ▷ seen first: anti-joins commute,
+        # seen_hits holds only maybe urls (a url probes alike at every
+        # depth), and pending keys outside the candidates remove nothing.
+        # In the small-round regime (broadcast_batch, the knob that
+        # broadcasts the batch into the corpus) the seen and frontier STATE
+        # never shuffle: each streams in place against a ≤batch-sized
+        # broadcast and only the matched keys broadcast back out — a plain
+        # left-anti would exchange BOTH sides every round. At 10^7-row
+        # production batches the probe sets outgrow the broadcast budget:
+        # broadcast_batch=False runs the same joins unhinted (PLANS.md
+        # multi-executor note).
+        def bc(df):
+            return F.broadcast(df) if cfg.broadcast_batch else df
+
         cand_h = bloom_mod.with_bloom_hashes(
             cand, "cand_url", cfg.num_partitions
         )
         probed = self.pb.probe(cand_h, self._blooms_df).cache()
-        definitely_new = probed.filter(~F.col("maybe_seen"))
         maybe = probed.filter(F.col("maybe_seen"))
         # NOTE: counted w.r.t. the through-r-1 filter (a candidate linking
         # back to a page fetched this round counts as definitively-new here
         # and is removed by the batch anti-join below)
         n_bloom_hits = maybe.count() if cfg.detailed_metrics else -1
-        if cfg.broadcast_batch:
-            # small-round regime (broadcast_batch, the same knob that
-            # broadcasts the batch into the corpus): the seen STATE must
-            # never shuffle — a plain left-anti exchanges BOTH sides on
-            # url, moving the ever-growing state cross-JVM every round.
-            # Instead stream the state in place against the broadcast
-            # bloom-hit set (semi — output is the small matched-url set),
-            # then anti the hits back out of `maybe` with a second
-            # broadcast. Two broadcast joins, zero Exchange, state scanned
-            # where it is cached. (At 10^7-row production batches the hit
-            # set outgrows the broadcast budget — broadcast_batch=False
-            # keeps the shuffled anti-join, and the blob/seen tables ride
-            # the bucketed layout instead; PLANS.md multi-executor note.)
-            hit_urls = self._seen_df.join(
-                F.broadcast(maybe.select(F.col("cand_url").alias("url"))),
-                "url", "left_semi",
-            ).select(F.col("url").alias("cand_url"))
-            confirmed_new = maybe.join(
-                F.broadcast(hit_urls), "cand_url", "left_anti"
-            )
-        else:
-            confirmed_new = maybe.join(
-                self._seen_df.select(F.col("url").alias("cand_url")),
-                "cand_url",
-                "left_anti",
-            )
+        seen_hits = self._seen_df.join(
+            bc(maybe.select(F.col("cand_url").alias("url"))),
+            "url", "left_semi",
+        ).select("url")
         # filter misses are definitively-new only w.r.t. rounds ≤ r-1 —
-        # exclude this round's own batch (broadcast in the small-round
-        # regime: ≤ batch urls)
-        exclude = batch.select(F.col("url").alias("cand_url"))
-        if cfg.broadcast_batch:
-            exclude = F.broadcast(exclude)
-        new_cand = definitely_new.unionByName(confirmed_new).join(
-            exclude, "cand_url", "left_anti",
-        )
+        # exclude this round's own batch too
+        exclude = seen_hits.unionByName(batch.select("url"))
         if cfg.fetcher == "http":
             # redirects make this round's seen additions a superset of the
             # batch: a FINAL url reached this round is seen without being a
             # batch url — a same-round candidate link to it must not enter
             # the frontier (it would cost one wasted refetch next round).
-            # Corpus mode has extracted.url ⊆ batch.url, so this join would
-            # be pure overhead there. (≤ batch urls — broadcast regime.)
-            final_urls = extracted.select(
-                F.col("url").alias("cand_url")
-            ).distinct()
-            if cfg.broadcast_batch:
-                final_urls = F.broadcast(final_urls)
-            new_cand = new_cand.join(final_urls, "cand_url", "left_anti")
-
-        _mark("bloom_probe+anti")
+            # Corpus mode has extracted.url ⊆ batch.url, so this union would
+            # be pure overhead there.
+            exclude = exclude.unionByName(extracted.select("url"))
         # not already pending at the same (url, depth) (reference
         # `(url, depth) not in pending`, :610-616) — vs post-removal
-        # frontier. Small-round regime: the frontier state never shuffles
-        # either — broadcast the ≤batch url set into the frontier scan for
-        # the removal, and run the pending check as the same
-        # semi-then-anti double broadcast as the seen dedup above.
-        batch_urls_side = batch.select("url")
-        if cfg.broadcast_batch:
-            batch_urls_side = F.broadcast(batch_urls_side)
+        # frontier
         frontier_after_removal = frontier_df.join(
-            batch_urls_side, "url", "left_anti"
+            bc(batch.select("url")), "url", "left_anti"
         )
-        if cfg.broadcast_batch:
-            pending_hits = frontier_after_removal.join(
-                F.broadcast(
-                    new_cand.select(
-                        F.col("cand_url").alias("url"),
-                        F.col("next_depth").alias("depth"),
-                    )
-                ),
-                ["url", "depth"], "left_semi",
-            ).select(
-                F.col("url").alias("cand_url"),
-                F.col("depth").alias("next_depth"),
-            )
-            new_cand = new_cand.join(
-                F.broadcast(pending_hits), ["cand_url", "next_depth"],
-                "left_anti",
-            )
-        else:
-            new_cand = new_cand.join(
-                frontier_after_removal.select(
-                    F.col("url").alias("cand_url"),
-                    F.col("depth").alias("next_depth"),
-                ),
-                ["cand_url", "next_depth"],
-                "left_anti",
-            )
+        pending = frontier_after_removal.join(
+            bc(probed.select(
+                F.col("cand_url").alias("url"),
+                F.col("next_depth").alias("depth"),
+            )),
+            ["url", "depth"], "left_semi",
+        ).select(
+            F.col("url").alias("cand_url"),
+            F.col("depth").alias("next_depth"),
+        )
+        new_cand = probed.join(
+            bc(exclude.select(F.col("url").alias("cand_url"))),
+            "cand_url", "left_anti",
+        ).join(bc(pending), ["cand_url", "next_depth"], "left_anti")
+        _mark("bloom_probe+anti")
 
         # discovery order key: encode (batch_seq, pos) into ONE long —
         # (batch_seq << 32) | pos is monotone and unique over the round's
@@ -1349,12 +1330,12 @@ class CrawlEngine:
         # seen since the last checkpoint (their output rows already landed
         # → the next run would re-fetch and duplicate them)
         self.checkpoint(self._last_round)
-        # distinct: a duplicated request URL must not fan out the seen join
-        # (n_expired would overcount) nor request two cuckoo copy-deletions
-        # for one seen row
-        url_df = self.spark.createDataFrame(
-            [(u,) for u in urls], ["url"]
-        ).distinct()
+        # deduplicated: a repeated request URL must not fan out the seen
+        # join (n_expired would overcount) nor request two cuckoo
+        # copy-deletions for one seen row
+        url_df = local_df(
+            self.spark, [(u,) for u in dict.fromkeys(urls)], _strings("url")
+        )
         # ONE pass over seen: mark expired rows, materialize, fused count
         marked = self.seen.read().join(
             F.broadcast(url_df.withColumn("_gone", F.lit(True))), "url", "left"
@@ -1394,7 +1375,7 @@ class CrawlEngine:
                     keep.select("url"), "url", cfg.num_partitions
                 ).select("part_id", "h1", "h2")
                 rebuilt = self.pb.merge_blobs(
-                    self.spark.createDataFrame([], bloom_mod.BLOOM_SCHEMA),
+                    local_df(self.spark, [], bloom_mod.BLOOM_SCHEMA),
                     keep_h.filter(F.col("part_id").isin(multi)),
                 )
                 deleted = self.pb.delete_blobs(
@@ -1410,7 +1391,7 @@ class CrawlEngine:
             hashes = bloom_mod.with_bloom_hashes(
                 keep.select("url"), "url", cfg.num_partitions
             )
-            empty = self.spark.createDataFrame([], bloom_mod.BLOOM_SCHEMA)
+            empty = local_df(self.spark, [], bloom_mod.BLOOM_SCHEMA)
             blooms_new = self.pb.merge_blobs(
                 empty, hashes.select("part_id", "h1", "h2")
             ).localCheckpoint()

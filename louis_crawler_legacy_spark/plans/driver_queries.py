@@ -1767,3 +1767,12 @@ def st1_windowed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from louis_crawler_legacy_spark.streaming.events import windowed_event_counts
 
     return windowed_event_counts(_t(spark, sf_dir, "events"), window="1 hour")
+
+
+# Rows-only queries (no oracle to compare against) go last, so every
+# exact-oracled query is among the first 50 registry entries — as far as a
+# correctness sweep capped at 50 queries reads.
+for _name in (
+    "d4x_minhash_lsh_engine", "p1_hawn_chunks", "p2_kurt_embeddings",
+):
+    QUERIES[_name] = QUERIES.pop(_name)

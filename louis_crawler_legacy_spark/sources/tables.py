@@ -31,6 +31,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
+def local_df(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
+    """Driver-side ``rows`` (tuples in ``schema`` order) as a DataFrame
+    Catalyst can see into. ``createDataFrame(list)`` parallelizes the rows
+    into a Python-RDD scan that the optimizer cannot prune; an Arrow table
+    becomes a ``LocalRelation`` up to
+    ``spark.sql.execution.arrow.localRelationThreshold`` (and an RDD above
+    it), so joins against an empty or tiny side fold away at plan time."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    rows = list(rows)
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type)
+         for i, f in enumerate(arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 class SnapshotTable:
     def __init__(self, spark: SparkSession, warehouse: str, name: str,
                  schema: T.StructType | None = None):
@@ -94,8 +114,13 @@ class SnapshotTable:
             assert self.schema is not None, (
                 f"empty table {self.name} needs a schema for empty reads"
             )
-            return self.spark.createDataFrame([], self.schema)
-        return self.spark.read.parquet(*dirs)
+            return local_df(self.spark, [], self.schema)
+        reader = self.spark.read
+        if self.schema is not None:
+            # schema-on-read: writes are checked against the declared
+            # schema (_write_snapshot), so no footer-inference job is needed
+            reader = reader.schema(self.schema)
+        return reader.parquet(*dirs)
 
     def is_empty(self) -> bool:
         manifest = self._load_manifest()
@@ -103,6 +128,12 @@ class SnapshotTable:
 
     # -- writes ---------------------------------------------------------------
     def _write_snapshot(self, df: DataFrame, op: str, meta: dict | None) -> int:
+        if (self.schema is not None
+                and df.schema.simpleString() != self.schema.simpleString()):
+            raise ValueError(
+                f"table {self.name}: written schema {df.schema.simpleString()}"
+                f" differs from declared schema {self.schema.simpleString()}"
+            )
         with self._write_lock:
             return self._write_snapshot_locked(df, op, meta)
 
@@ -144,7 +175,9 @@ class SnapshotTable:
         cluster."""
         with self._write_lock:  # read-modify-write must be atomic
             current = self.read()
-            kept = current.join(df.select(key), on=key, how="left_anti")
+            kept = current.join(
+                df.select(key), on=key, how="left_anti"
+            ).select(*current.columns)  # the join moves the key first
             return self.overwrite(kept.unionByName(df), meta)
 
     def rollback_to(self, version: int) -> None:

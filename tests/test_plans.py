@@ -315,3 +315,130 @@ def test_state_partition_count_constant_across_rounds(spark, tmp_path):
     )
     assert seen_parts[-1] <= eng._state_parts
     assert frontier_parts[-1] <= eng._state_parts
+
+
+# -- crawl-engine plans: walk the physical tree (AQE's initial plan) -------
+def _physical(df):
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()  # the initial plan, exchanges included
+    return plan
+
+
+def _nodes(plan, ancestors=()):
+    """(node, ancestor node names) for every node; cached relations are
+    leaves (their plans ran when they were materialized)."""
+    yield plan, ancestors
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _nodes(children.apply(i), ancestors + (plan.nodeName(),))
+
+
+def _out(node) -> set[str]:
+    out = node.output()
+    return {out.apply(i).name() for i in range(out.size())}
+
+
+def _crawl_engine(spark, wh, **overrides):
+    from louis_crawler_legacy_spark.plans.crawl import CrawlConfig, CrawlEngine
+    from louis_crawler_legacy_spark.sources import corpus as corpus_mod
+
+    corpus = corpus_mod.generate_corpus(
+        seed=7, n_hosts=4, pages_per_host=30, hub_factor=3, links_per_page=6
+    )
+    cfg = CrawlConfig(
+        max_depth=6, batch_size=16, num_partitions=4,
+        detailed_metrics=False, collect_batch_urls=False, **overrides,
+    )
+    eng = CrawlEngine(spark, corpus_mod.corpus_df(spark, corpus), wh, cfg)
+    return eng, corpus_mod.seed_urls(corpus, n=2)
+
+
+def _bootstrap_plan(eng, seeds):
+    """Physical plan of the frontier rows bootstrap writes."""
+    plans = []
+    overwrite = eng.frontier.overwrite
+
+    def spy(df, meta=None):
+        plans.append(_physical(df))
+        return overwrite(df, meta)
+
+    eng.frontier.overwrite = spy
+    eng.bootstrap(seeds)
+    eng.frontier.overwrite = overwrite
+    (plan,) = plans
+    return plan
+
+
+def test_bootstrap_into_empty_warehouse_plans_no_join(spark, tmp_path):
+    """Driver-side seeds and an empty seen table are both local
+    relations, so seeds ∖ seen folds away at plan time: no join, no
+    Exchange — not a shuffled anti-join against nothing."""
+    eng, seeds = _crawl_engine(spark, str(tmp_path / "wh"))
+    names = [n.nodeName() for n, _ in _nodes(_bootstrap_plan(eng, seeds))]
+    assert not [n for n in names if "Join" in n or "Exchange" in n], names
+
+
+def test_bootstrap_scans_seen_in_place(spark, tmp_path):
+    """Re-seeding a warehouse with seen state: seen streams in place
+    against the broadcast seeds (semi), the hits broadcast back (anti) —
+    the seen scan sits under no shuffle Exchange even when seen is past
+    the auto-broadcast budget (threshold off, as at crawl scale)."""
+    eng, seeds = _crawl_engine(spark, str(tmp_path / "wh"))
+    eng.bootstrap(seeds)
+    eng.run_round(1)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    threshold = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plan = _bootstrap_plan(eng, seeds)
+    finally:
+        spark.conf.set(key, threshold)
+    scans = [
+        anc for n, anc in _nodes(plan)
+        if n.nodeName().startswith("Scan parquet")
+    ]
+    assert len(scans) == 1, "seen is the bootstrap's only table scan"
+    assert "Exchange" not in scans[0]
+
+
+def test_round_dedup_nests_two_broadcast_levels(spark, tmp_path, monkeypatch):
+    """The round's candidate dedup keys both state probes off the cached
+    probe output: no broadcast nests more than two levels deep, and the
+    seen and frontier state scans sit under no shuffle Exchange."""
+    from louis_crawler_legacy_spark.plans.crawl import (
+        FRONTIER_SCHEMA,
+        SEEN_SCHEMA,
+    )
+
+    eng, seeds = _crawl_engine(
+        spark, str(tmp_path / "wh"), broadcast_batch=True
+    )
+    eng.bootstrap(seeds)
+    eng.run_round(1)
+    plans = []
+    df_class = type(eng._seen_df)
+    local_checkpoint = df_class.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        if set(self.columns) == set(FRONTIER_SCHEMA.fieldNames()):
+            plans.append(_physical(self))
+        return local_checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(df_class, "localCheckpoint", spy)
+    assert eng.run_round(2) is not None
+    monkeypatch.undo()
+    (plan,) = plans
+    nodes = list(_nodes(plan))
+    depth = max(
+        (anc + (n.nodeName(),)).count("BroadcastExchange") for n, anc in nodes
+    )
+    assert depth <= 2, f"broadcasts nest {depth} levels"
+    for schema in (SEEN_SCHEMA, FRONTIER_SCHEMA):
+        scans = [
+            anc for n, anc in nodes
+            if n.nodeName() == "Scan ExistingRDD"
+            and _out(n) == set(schema.fieldNames())
+        ]
+        assert scans, f"no {schema.fieldNames()} state scan in the plan"
+        assert all("Exchange" not in anc for anc in scans)

@@ -64,3 +64,62 @@ def test_concurrent_same_table_appends_allocate_distinct_versions(
     assert sorted(versions) == [1, 2, 3, 4, 5, 6]
     assert t.read().count() == 6
     assert [v["v"] for v in t.history()] == [1, 2, 3, 4, 5, 6]
+
+
+def test_mismatched_write_raises(spark, tmp_path):
+    """Reads trust the declared schema (no footer inference), so a write
+    whose column names or types differ must fail loudly, naming the table
+    and both schemas — not land files the next read misparses."""
+    import pytest
+
+    wh = Warehouse(spark, str(tmp_path / "whm"))
+    t = wh.table("frontier", SCHEMA)
+    wrong_type = spark.createDataFrame([("a", 0)], "url string, depth long")
+    wrong_name = spark.createDataFrame([("a", 0)], "url string, d int")
+    for df in (wrong_type, wrong_name):
+        with pytest.raises(ValueError) as err:
+            t.append(df)
+        msg = str(err.value)
+        assert "frontier" in msg
+        assert SCHEMA.simpleString() in msg
+        assert df.schema.simpleString() in msg
+    assert t.is_empty()  # nothing was committed
+
+
+def test_empty_read_is_local_relation(spark, tmp_path):
+    """An empty table reads as a local relation, so joins and unions
+    against it fold away at plan time instead of scanning a Python RDD."""
+    t = Warehouse(spark, str(tmp_path / "whe")).table("seen", SCHEMA)
+    plan = t.read()._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LocalRelation"), plan
+
+
+def test_engine_tables_round_trip_declared_schema(spark, tmp_path):
+    """Every table a corpus crawl with span building writes holds exactly
+    its declared schema on disk (the parquet footers agree with the
+    schema-on-read) and reads back every row."""
+    from louis_crawler_legacy_spark.plans.crawl import CrawlConfig, CrawlEngine
+    from louis_crawler_legacy_spark.sources import corpus as corpus_mod
+
+    corpus = corpus_mod.generate_corpus(
+        seed=3, n_hosts=2, pages_per_host=8, links_per_page=4,
+        max_words=120,
+    )
+    eng = CrawlEngine(
+        spark, corpus_mod.corpus_df(spark, corpus), str(tmp_path / "wht"),
+        CrawlConfig(max_depth=2, batch_size=8, num_partitions=2,
+                    build_spans=True, seen_filter="cuckoo"),
+    )
+    eng.run(corpus_mod.seed_urls(corpus, n=2), max_rounds=1)
+    written = [t for t in eng.wh._tables.values() if not t.is_empty()]
+    assert {t.name for t in written} == {
+        "frontier", "seen", "pages", "links", "metrics", "documents",
+        "seen_bloom",
+    }
+    for t in written:
+        manifest = t._load_manifest()
+        on_disk = spark.read.parquet(
+            *t._dirs_for_version(manifest, manifest["current"])
+        )
+        assert on_disk.schema.simpleString() == t.schema.simpleString(), t.name
+        assert t.read().count() == on_disk.count(), t.name
