@@ -41,6 +41,9 @@ so probe tasks need no driver-shared (m, k).
 Blob layout (little-endian): uint64 magic "SBLOOM01" | uint64 n_layers |
 n_layers × (uint64 m_bits, uint64 k, uint64 cap, uint64 n) | concatenated
 bitmaps (m_bits/8 bytes each).
+
+``BlobFilter`` is the cogroup merge/probe/stats driver; ``PartitionedBloom``
+is this format's codec on it, and operators/cuckoo.py supplies the other.
 """
 
 from __future__ import annotations
@@ -199,65 +202,54 @@ def insert_layers(layers: list[_Layer], h1: np.ndarray, h2: np.ndarray,
     return layers
 
 
-class PartitionedBloom:
-    """Driver-facing API over the seen_bloom table contents.
+class BlobFilter:
+    """The cogroup driver both seen-filter kinds share: merge, probe and
+    per-partition stats over (part_id, bits, n_items) blob rows.
 
     All per-row work happens inside cogrouped applyInPandas tasks; the
-    driver only moves (part_id, blob) rows, never URLs. Each blob is a
-    scalable layer chain (module docstring) — capacity is a starting
-    point, not a ceiling.
+    driver only moves (part_id, blob) rows, never URLs, and each task
+    touches exactly one blob. A kind is a codec over its decoded state:
+    ``fresh()``, ``decode(blob, n_items)``, ``encode(state)``,
+    ``insert(state, h1, h2) -> (state, n_added)``,
+    ``contains(state, h1, h2) -> bool array`` and
+    ``stats(state) -> (n_layers, capacity, newest-layer fill)``.
     """
 
-    def __init__(self, m_bits: int, k_hashes: int, capacity: int | None = None,
-                 fpp: float | None = None):
-        self.m = m_bits
-        self.k = k_hashes
-        # (m, k)-only construction (legacy callers/tests): invert the
-        # optimal-k identities — cap ≈ m·ln2/k, fpp ≈ 2^-k
-        self.cap0 = capacity if capacity else max(1, int(m_bits * math.log(2) / k_hashes))
-        self.fpp0 = fpp if fpp else 0.5 ** k_hashes
+    def _update(self, blobs: DataFrame, hashes: DataFrame, op) -> DataFrame:
+        """blobs(part_id, bits, n_items) ⊕ hashes(part_id, h1, h2) through
+        ``op(state, h1, h2) -> (state, n_delta)``. Cogrouped per partition;
+        a partition without a blob starts from ``fresh()``."""
 
-    @classmethod
-    def for_capacity(cls, capacity: int, fpp: float = 0.01) -> "PartitionedBloom":
-        m, k = bloom_params(capacity, fpp)
-        return cls(m, k, capacity=capacity, fpp=fpp)
-
-    def merge_blobs(self, blooms: DataFrame, new_hashes: DataFrame) -> DataFrame:
-        """blooms(part_id, bits, n_items) ⊕ new_hashes(part_id, h1, h2)
-        → refreshed blooms. Cogrouped per partition; partitions without new
-        URLs pass through untouched; a full partition grows a new layer in
-        place (no rebuild, no extra shuffle)."""
-        cap0, fpp0 = self.cap0, self.fpp0
-
-        def merge(key, blob_pdf: pd.DataFrame, hashes_pdf: pd.DataFrame) -> pd.DataFrame:
-            part_id = int(key[0])
+        def run(key, blob_pdf: pd.DataFrame, hashes_pdf: pd.DataFrame) -> pd.DataFrame:
             if len(blob_pdf):
-                layers = deserialize_layers(blob_pdf["bits"].iloc[0])
                 n0 = int(blob_pdf["n_items"].iloc[0])
+                state = self.decode(blob_pdf["bits"].iloc[0], n0)
             else:
-                layers = [_fresh_layer(0, cap0, fpp0)]
-                n0 = 0
-            layers = insert_layers(
-                layers,
-                hashes_pdf["h1"].to_numpy(),
-                hashes_pdf["h2"].to_numpy(),
-                cap0, fpp0,
+                n0, state = 0, self.fresh()
+            state, delta = op(
+                state, hashes_pdf["h1"].to_numpy(), hashes_pdf["h2"].to_numpy()
             )
             return pd.DataFrame(
                 {
-                    "part_id": [part_id],
-                    "bits": [serialize_layers(layers)],
-                    "n_items": [n0 + len(hashes_pdf)],
+                    "part_id": [int(key[0])],
+                    "bits": [self.encode(state)],
+                    "n_items": [max(n0 + delta, 0)],
                 }
             )
 
         return (
-            blooms.groupBy("part_id")
-            .cogroup(new_hashes.groupBy("part_id"))
-            .applyInPandas(merge, schema=BLOOM_SCHEMA)
+            blobs.groupBy("part_id")
+            .cogroup(hashes.groupBy("part_id"))
+            .applyInPandas(run, schema=BLOOM_SCHEMA)
         )
 
-    def probe(self, candidates: DataFrame, blooms: DataFrame,
+    def merge_blobs(self, blobs: DataFrame, new_hashes: DataFrame) -> DataFrame:
+        """blobs ⊕ new_hashes(part_id, h1, h2) → refreshed blobs. Partitions
+        without new URLs pass through; a full partition grows its chain in
+        place (no rebuild, no extra shuffle)."""
+        return self._update(blobs, new_hashes, self.insert)
+
+    def probe(self, candidates: DataFrame, blobs: DataFrame,
               h1_col: str = "h1", h2_col: str = "h2") -> DataFrame:
         """candidates(…, part_id, h1, h2) → same rows + maybe_seen boolean.
 
@@ -276,55 +268,71 @@ class PartitionedBloom:
             if len(blob_pdf) == 0:
                 cand_pdf["maybe_seen"] = False
             else:
-                cand_pdf["maybe_seen"] = probe_layers(
-                    deserialize_layers(blob_pdf["bits"].iloc[0]),
-                    cand_pdf[h1_col].to_numpy(),
-                    cand_pdf[h2_col].to_numpy(),
+                state = self.decode(
+                    blob_pdf["bits"].iloc[0], int(blob_pdf["n_items"].iloc[0])
+                )
+                cand_pdf["maybe_seen"] = self.contains(
+                    state, cand_pdf[h1_col].to_numpy(), cand_pdf[h2_col].to_numpy()
                 )
             return cand_pdf
 
         return (
             candidates.groupBy("part_id")
-            .cogroup(blooms.groupBy("part_id"))
+            .cogroup(blobs.groupBy("part_id"))
             .applyInPandas(run, schema=out_schema)
         )
 
+    def filter_stats(self, blobs: DataFrame) -> DataFrame:
+        """Per-partition saturation metadata (no bits leave the task): layer
+        count, items, total layer capacity, fill of the NEWEST layer (the
+        one that triggers growth)."""
 
-def filter_stats(blooms: DataFrame) -> DataFrame:
-    """Per-partition saturation metadata (no bits leave the task): layer
-    count, items, total layer capacity, fill of the NEWEST layer (the one
-    that triggers growth). Works for both blob kinds (cuckoo blobs report
-    chain stats via their own header)."""
+        def run(batches):
+            for pdf in batches:
+                rows = []
+                for part_id, bits, n in zip(pdf["part_id"], pdf["bits"], pdf["n_items"]):
+                    n_layers, cap, fill = self.stats(self.decode(bits, int(n)))
+                    rows.append((int(part_id), n_layers, int(n), cap, round(fill, 4)))
+                if rows:
+                    yield pd.DataFrame(rows, columns=FILTER_STATS_SCHEMA.names)
 
-    def stats(batches):
-        from louis_crawler_legacy_spark.operators import cuckoo as cuckoo_mod
+        return blobs.mapInPandas(run, schema=FILTER_STATS_SCHEMA)
 
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                blob = r["bits"]
-                magic = np.frombuffer(blob[:8], dtype=np.uint64)[0]
-                if magic == _MAGIC:
-                    layers = deserialize_layers(blob)
-                    cap = sum(l.cap for l in layers)
-                    last = layers[-1]
-                    fill = last.n / last.cap if last.cap else 0.0
-                    rows.append(
-                        (int(r["part_id"]), len(layers), int(r["n_items"]),
-                         cap, round(fill, 4))
-                    )
-                else:
-                    rows.append(cuckoo_mod.chain_stats_row(
-                        int(r["part_id"]), blob, int(r["n_items"])
-                    ))
-            if rows:
-                yield pd.DataFrame(
-                    rows,
-                    columns=["part_id", "n_layers", "n_items", "capacity",
-                             "fill"],
-                )
 
-    return blooms.mapInPandas(stats, schema=FILTER_STATS_SCHEMA)
+class PartitionedBloom(BlobFilter):
+    """Scalable-Bloom codec (module docstring): capacity is a starting
+    point, not a ceiling. ``n_items`` counts inserted rows."""
+
+    def __init__(self, m_bits: int, k_hashes: int, capacity: int | None = None,
+                 fpp: float | None = None):
+        self.m = m_bits
+        self.k = k_hashes
+        # (m, k)-only construction (legacy callers/tests): invert the
+        # optimal-k identities — cap ≈ m·ln2/k, fpp ≈ 2^-k
+        self.cap0 = capacity if capacity else max(1, int(m_bits * math.log(2) / k_hashes))
+        self.fpp0 = fpp if fpp else 0.5 ** k_hashes
+
+    @classmethod
+    def for_capacity(cls, capacity: int, fpp: float = 0.01) -> "PartitionedBloom":
+        m, k = bloom_params(capacity, fpp)
+        return cls(m, k, capacity=capacity, fpp=fpp)
+
+    def fresh(self) -> list[_Layer]:
+        return [_fresh_layer(0, self.cap0, self.fpp0)]
+
+    def decode(self, blob: bytes, n_items: int) -> list[_Layer]:
+        return deserialize_layers(blob)
+
+    encode = staticmethod(serialize_layers)
+    contains = staticmethod(probe_layers)
+
+    def insert(self, layers, h1, h2) -> tuple[list[_Layer], int]:
+        return insert_layers(layers, h1, h2, self.cap0, self.fpp0), len(h1)
+
+    def stats(self, layers) -> tuple[int, int, float]:
+        last = layers[-1]
+        return (len(layers), sum(l.cap for l in layers),
+                last.n / last.cap if last.cap else 0.0)
 
 
 def with_bloom_hashes(df: DataFrame, url_col: str,

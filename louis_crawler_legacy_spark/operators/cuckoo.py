@@ -1,12 +1,15 @@
 """Partitioned cuckoo-filter URL-seen set — the north rule's alternative to
 the Bloom layer (operators/bloom.py), selectable via
-``CrawlConfig(seen_filter="cuckoo")``.
+``CrawlConfig(seen_filter="cuckoo")``. It is a codec on the Bloom layer's
+per-partition blob driver (bloom.BlobFilter); this module holds the numpy
+kernels and the blob format.
 
 Why a cuckoo filter next to the Bloom filter:
 
 - **deletable**: fingerprints can be removed (``delete_blobs``), which a
-  Bloom bitmap cannot do — the hook for recrawl/TTL workloads where a URL's
-  "seen" mark expires and it becomes fetchable again,
+  Bloom bitmap cannot do. The crawl engine does not use it: its recrawl
+  expiry rewrites the whole seen table anyway and rebuilds the blobs in
+  that pass (see the CAVEAT below),
 - **bounded lookups**: a probe reads exactly two 4-slot buckets (plus a
   tiny overflow stash), independent of occupancy,
 - **lower fpp per bit at high load**: 16-bit fingerprints give
@@ -16,10 +19,11 @@ Same two-stage dedup contract as the Bloom layer: **a miss is definitively
 new** (zero false negatives — overflowing inserts go to an exact stash
 instead of being dropped, so the filter never forgets), only hits take the
 exact left-anti join. Same physical shape too: one blob row per URL-hash
-partition (``part_id, bits, n_items``), cogrouped applyInPandas so each
-task touches exactly one blob, all per-row work vectorized numpy — the
-kick loop iterates over *attempt rounds* (each round a full-array numpy
-pass with first-writer-wins conflict resolution), never over rows.
+partition (``part_id, bits, n_items``), grouped by part_id in
+bloom.BlobFilter so each task touches exactly one blob, all per-row work
+vectorized numpy — the kick loop iterates over *attempt rounds* (each
+round a full-array numpy pass with first-writer-wins conflict
+resolution), never over rows.
 
 Hashing reuses the JVM-side columns from bloom.with_bloom_hashes:
 h1 → bucket index, h2 → 16-bit fingerprint. The alternate bucket is the
@@ -50,14 +54,13 @@ the single-table contract: a key whose copy lives in a NEWER table can
 match a collider's copy (same 16-bit fp + bucket pair under the older
 table's smaller mask) in an OLDER table and consume it, leaving the
 collider a false NEGATIVE (probability ~per-table fpp per deleted key;
-planted repro in tests/test_cuckoo.py). Callers doing bulk expiry must
-therefore REBUILD multi-table partitions from the surviving exact rows
-instead of chain-deleting — plans/crawl.expire_urls does exactly that
-(single-table blobs keep the O(delta) targeted delete, whose errors stay
-in the safe direction). Each table's stash only ever holds
-kick-failures from below its cap — bounded by construction; chain length
-grows log2(n/cap0); fpp grows linearly in chain length (≈1.2e-4 per
-table), log-bounded overall.
+planted repro in tests/test_cuckoo.py). The crawl engine therefore never
+deletes: plans/crawl.expire_urls rebuilds every blob from the surviving
+exact seen rows, for both filter kinds, in the same pass that rewrites
+the seen table. ``delete_blobs`` stays a library operation with this
+edge. Each table's stash only ever holds kick-failures from below its
+cap — bounded by construction; chain length grows log2(n/cap0); fpp grows
+linearly in chain length (≈1.2e-4 per table), log-bounded overall.
 
 Chain layout: uint64 magic "CUKCHN02" | uint64 n_tables | n_tables ×
 (uint64 n_buckets, uint64 n_stash, uint64 n_items) | per-table payload
@@ -69,11 +72,9 @@ warehouses stay readable.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
 
-from louis_crawler_legacy_spark.operators.bloom import BLOOM_SCHEMA
+from louis_crawler_legacy_spark.operators.bloom import BlobFilter
 
 SLOTS = 4
 _FP_MASK = np.uint64(0xFFFF)
@@ -182,7 +183,7 @@ def insert_many(
     match is the same URL, not a collision. Re-inserting a key already
     present from an earlier merge adds a second copy; the crawl engine
     never does (each URL enters `seen` exactly once per warehouse, and
-    expire_urls deletes the copy before any re-add)."""
+    expire_urls rebuilds the blobs without it before any re-add)."""
     nb = table.shape[0]
     h1 = np.asarray(h1)
     h2 = np.asarray(h2)
@@ -444,8 +445,8 @@ def delete_chain(
     walk stops at the FIRST match, which may be a collider's copy in an
     older table while the requested key's own copy sits in a newer one —
     the collider then reads as deleted (false negative). See the module
-    docstring; bulk expiry should rebuild multi-table blobs from exact
-    rows (plans/crawl.expire_urls) rather than rely on this path."""
+    docstring; the engine's expiry rebuilds from exact rows instead
+    (plans/crawl.expire_urls)."""
     h1 = np.asarray(h1)
     h2 = np.asarray(h2)
     _, uniq = np.unique(np.stack([h1, h2], axis=1), axis=0, return_index=True)
@@ -462,24 +463,13 @@ def delete_chain(
     return states, n_deleted
 
 
-def chain_stats_row(part_id: int, blob: bytes,
-                    n_items: int) -> tuple[int, int, int, int, float]:
-    """(part_id, n_tables, n_items, capacity, newest-table fill) — feeds
-    bloom.filter_stats for the round saturation metrics."""
-    states = deserialize_chain(blob, n_items)
-    cap = sum(table_cap(t.shape[0]) for t, _, _ in states)
-    last_t, _, last_n = states[-1]
-    last_cap = table_cap(last_t.shape[0])
-    fill = last_n / last_cap if last_cap else 0.0
-    return (part_id, len(states), n_items, cap, round(fill, 4))
-
-
-class PartitionedCuckoo:
-    """Drop-in for bloom.PartitionedBloom: same merge_blobs/probe surface,
-    same (part_id, bits, n_items) blob rows, same cogroup physical plan —
-    crawl.py switches implementations without touching the round pipeline.
-    Each blob is a growth chain of tables (module docstring), so capacity
-    is a starting size, not a ceiling, and every stash stays bounded.
+class PartitionedCuckoo(BlobFilter):
+    """Cuckoo-chain codec on the shared blob driver (bloom.BlobFilter):
+    same merge_blobs/probe surface and (part_id, bits, n_items) blob rows
+    as the Bloom layer, so crawl.py switches kinds without touching the
+    round pipeline. Each blob is a growth chain of tables (module
+    docstring), so capacity is a starting size, not a ceiling, and every
+    stash stays bounded. ``n_items`` counts deduplicated keys.
     """
 
     def __init__(self, n_buckets: int):
@@ -489,89 +479,31 @@ class PartitionedCuckoo:
     def for_capacity(cls, expected_n: int, load: float = LOAD) -> "PartitionedCuckoo":
         return cls(cuckoo_buckets(expected_n, load))
 
-    def merge_blobs(self, filters: DataFrame, new_hashes: DataFrame) -> DataFrame:
-        nb = self.nb
+    def fresh(self) -> list[tuple[np.ndarray, np.ndarray, int]]:
+        return [empty_state(self.nb) + (0,)]
 
-        def merge(key, blob_pdf: pd.DataFrame, hashes_pdf: pd.DataFrame) -> pd.DataFrame:
-            part_id = int(key[0])
-            if len(blob_pdf):
-                n0 = int(blob_pdf["n_items"].iloc[0])
-                states = deserialize_chain(blob_pdf["bits"].iloc[0], n0)
-            else:
-                states = [empty_state(nb) + (0,)]
-                n0 = 0
-            h1 = hashes_pdf["h1"].to_numpy()
-            states = insert_chain(states, h1, hashes_pdf["h2"].to_numpy())
-            n_new = sum(n for _, _, n in states) - n0
-            return pd.DataFrame(
-                {
-                    "part_id": [part_id],
-                    "bits": [serialize_chain(states)],
-                    "n_items": [n0 + n_new],
-                }
-            )
+    decode = staticmethod(deserialize_chain)
+    encode = staticmethod(serialize_chain)
+    contains = staticmethod(probe_chain)
 
-        return (
-            filters.groupBy("part_id")
-            .cogroup(new_hashes.groupBy("part_id"))
-            .applyInPandas(merge, schema=BLOOM_SCHEMA)
-        )
+    def insert(self, states, h1, h2):
+        n0 = sum(n for _, _, n in states)
+        states = insert_chain(states, h1, h2)
+        return states, sum(n for _, _, n in states) - n0
+
+    def stats(self, states) -> tuple[int, int, float]:
+        last_t, _, last_n = states[-1]
+        last_cap = table_cap(last_t.shape[0])
+        return (len(states), sum(table_cap(t.shape[0]) for t, _, _ in states),
+                last_n / last_cap if last_cap else 0.0)
 
     def delete_blobs(self, filters: DataFrame, del_hashes: DataFrame) -> DataFrame:
-        """TTL/recrawl eviction: remove (part_id, h1, h2) keys so those URLs
-        probe as unseen again — the capability the Bloom layer lacks."""
+        """Remove (part_id, h1, h2) keys so those URLs probe as unseen
+        again — the capability the Bloom layer lacks. Subject to the
+        chained-delete edge in the module docstring."""
 
-        def drop(key, blob_pdf: pd.DataFrame, hashes_pdf: pd.DataFrame) -> pd.DataFrame:
-            part_id = int(key[0])
-            if not len(blob_pdf):
-                return pd.DataFrame(columns=["part_id", "bits", "n_items"])
-            n0 = int(blob_pdf["n_items"].iloc[0])
-            states = deserialize_chain(blob_pdf["bits"].iloc[0], n0)
-            states, n_del = delete_chain(
-                states,
-                hashes_pdf["h1"].to_numpy(), hashes_pdf["h2"].to_numpy(),
-            )
-            return pd.DataFrame(
-                {
-                    "part_id": [part_id],
-                    "bits": [serialize_chain(states)],
-                    "n_items": [max(n0 - n_del, 0)],
-                }
-            )
+        def delete(states, h1, h2):
+            states, n_del = delete_chain(states, h1, h2)
+            return states, -n_del
 
-        return (
-            filters.groupBy("part_id")
-            .cogroup(del_hashes.groupBy("part_id"))
-            .applyInPandas(drop, schema=BLOOM_SCHEMA)
-        )
-
-    def probe(self, candidates: DataFrame, filters: DataFrame,
-              h1_col: str = "h1", h2_col: str = "h2") -> DataFrame:
-        out_schema = T.StructType(
-            list(candidates.schema.fields)
-            + [T.StructField("maybe_seen", T.BooleanType())]
-        )
-        cols = [f.name for f in candidates.schema.fields]
-
-        def run(key, cand_pdf: pd.DataFrame, blob_pdf: pd.DataFrame) -> pd.DataFrame:
-            if len(cand_pdf) == 0:
-                return pd.DataFrame(columns=cols + ["maybe_seen"])
-            if len(blob_pdf) == 0:
-                cand_pdf["maybe_seen"] = False
-            else:
-                states = deserialize_chain(
-                    blob_pdf["bits"].iloc[0],
-                    int(blob_pdf["n_items"].iloc[0]),
-                )
-                cand_pdf["maybe_seen"] = probe_chain(
-                    states,
-                    cand_pdf[h1_col].to_numpy(),
-                    cand_pdf[h2_col].to_numpy(),
-                )
-            return cand_pdf
-
-        return (
-            candidates.groupBy("part_id")
-            .cogroup(filters.groupBy("part_id"))
-            .applyInPandas(run, schema=out_schema)
-        )
+        return self._update(filters, del_hashes, delete)

@@ -65,6 +65,16 @@ from louis_crawler_legacy_spark.sources.tables import Warehouse, local_df
 
 ORDER_COLS = ("depth", "discovery_round", "discovery_seq", "url")
 
+# corpus-mode fetch-output partition sizing: the join output coalesces to
+# max(cores, n_batch / _FETCH_ROWS_PER_PART) partitions — one per core for
+# scheduling efficiency (extraction is ~1 ms/page since r06), but never
+# more than ~_FETCH_ROWS_PER_PART wide-html rows per task, so a big batch
+# on a small executor (ladder's local-cluster[1,2] at batch 32k) cannot
+# pack GBs of page rows into one cache partition (measured:
+# BytesToBytesMap allocation failure at 8 GiB without the bound). 2048
+# rows ≈ 4 Arrow batches ≈ ~150 MB at bench page weight.
+_FETCH_ROWS_PER_PART = 2048
+
 FRONTIER_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType()),
@@ -188,11 +198,12 @@ class CrawlConfig:
     bloom_capacity: int = 1_000_000  # seen-filter capacity (both kinds)
     bloom_fpp: float = 0.01
     # approximate-membership layer for the seen set: "bloom" (bitmap,
-    # operators/bloom.py) or "cuckoo" (deletable fingerprint table,
-    # operators/cuckoo.py). Identical probe/merge contract and physical
-    # plan; crawl results are identical (both layers are exact-verified
-    # prefilters) — the choice is an ops tradeoff (bloom: smallest bits/key;
-    # cuckoo: deletable for recrawl TTLs, bounded 2-bucket lookups).
+    # operators/bloom.py) or "cuckoo" (fingerprint table,
+    # operators/cuckoo.py). Both are codecs on one cogroup probe/merge
+    # driver (bloom.BlobFilter); crawl results are identical (both layers
+    # are exact-verified prefilters) and expiry rebuilds either kind the
+    # same way — the choice is an ops tradeoff (bloom: smallest bits/key;
+    # cuckoo: lower fpp per bit at high load, bounded 2-bucket lookups).
     seen_filter: str = "bloom"
     base_timestamp: int = 1_700_000_000  # last_crawled = base + round (P5)
     # The seen-set guarantees a URL is fetched at most once per warehouse,
@@ -285,15 +296,6 @@ class CrawlConfig:
     # benchmark, off in the reference-equivalence oracle (the reference
     # chunks in a separate spider, hawn — see plans/pipelines.py)
     build_spans: bool = False
-    # corpus-mode fetch-output partition sizing: the join output coalesces
-    # to max(cores, n_batch / fetch_rows_per_part) partitions — one per
-    # core for scheduling efficiency (extraction is ~1 ms/page since r06),
-    # but never more than ~fetch_rows_per_part wide-html rows per task, so
-    # a big batch on a small executor (ladder's local-cluster[1,2] at
-    # batch 32k) cannot pack GBs of page rows into one cache partition
-    # (measured: BytesToBytesMap allocation failure at 8 GiB without the
-    # bound). 2048 rows ≈ 4 Arrow batches ≈ ~150 MB at bench page weight.
-    fetch_rows_per_part: int = 2048
 
 
 @dataclass
@@ -424,18 +426,6 @@ class CrawlEngine:
         # filter blobs) run here while the driver thread runs the candidate
         # path. run_round joins all five before it returns.
         self._pool = ThreadPoolExecutor(max_workers=5)
-
-    def _bg_run(self, fn, *args, _pool: str = "background", **kwargs):
-        """Run ``fn`` with the calling worker thread tagged into a FAIR
-        pool (session.py): output appends go to the low-share "background"
-        pool, so they yield task slots to the candidate path; state merges
-        run in "default" beside it, because the round waits for them. The
-        local property is per-thread sticky (pinned thread mode); setting
-        it per call is idempotent and cheap."""
-        self.spark.sparkContext.setLocalProperty(
-            "spark.scheduler.pool", _pool
-        )
-        return fn(*args, **kwargs)
 
     # -- state management --------------------------------------------------------
     def _load_state(self) -> None:
@@ -722,6 +712,24 @@ class CrawlEngine:
             _release(batch)
             return None
 
+        # every ≤batch-sized join side goes through bc(): in the small-round
+        # regime (broadcast_batch) the corpus, seen and frontier STATE never
+        # shuffle — each streams in place against a ≤batch-sized broadcast
+        # and only the matched keys broadcast back out, where a plain join
+        # would exchange BOTH sides every round. At 10^7-row production
+        # batches the probe sets outgrow the broadcast budget:
+        # broadcast_batch=False runs the same joins unhinted (PLANS.md
+        # multi-executor note).
+        def bc(df):
+            return F.broadcast(df) if cfg.broadcast_batch else df
+
+        def unseen(df):
+            """df ▷ seen as seen ⋉ bc(df urls), then df ▷ bc(those hits)."""
+            hits = self._seen_df.join(
+                bc(df.select("url")), "url", "left_semi"
+            ).select("url")
+            return df.join(bc(hits), "url", "left_anti")
+
         # S1/J7: fetch. Corpus mode = join against the corpus table
         # (middlewares.py:104-117 replay pattern): the batch is broadcast
         # INTO the corpus (inner join) so the wide html column never moves —
@@ -775,8 +783,7 @@ class CrawlEngine:
                 .drop("final_url")
             )
         else:
-            batch_side = F.broadcast(batch) if cfg.broadcast_batch else batch
-            hits = self.corpus.drop("host").join(batch_side, "url", "inner")
+            hits = self.corpus.drop("host").join(bc(batch), "url", "inner")
             # misses = batch ∖ hits.urls ≡ batch ∖ corpus.urls (hits.url is
             # exactly batch ∩ corpus by the inner join above). The r05 form
             # anti-joined against corpus.select(url), which re-built a
@@ -784,11 +791,8 @@ class CrawlEngine:
             # MB at bench scale; O(corpus) at production) — the hit set is
             # ≤ batch rows and its broadcast build scans the cached corpus
             # column-pruned once, so the per-round broadcast is O(batch).
-            hit_urls = hits.select("url")
-            if cfg.broadcast_batch:
-                hit_urls = F.broadcast(hit_urls)
             misses = (
-                batch.join(hit_urls, "url", "left_anti")
+                batch.join(bc(hits.select("url")), "url", "left_anti")
                 .withColumn("status", F.lit(None).cast("int"))
                 .withColumn("html", F.lit(None).cast("string"))
             )
@@ -803,11 +807,11 @@ class CrawlEngine:
             # per-stage scheduling overhead dominates. coalesce is NARROW
             # (no shuffle, html never moves; the coalescer groups parent
             # partitions by location) and scale-adaptive: one partition
-            # per core, with a fetch_rows_per_part floor so per-task html
-            # bytes stay bounded on small executors (see CrawlConfig).
+            # per core, with a _FETCH_ROWS_PER_PART floor so per-task html
+            # bytes stay bounded on small executors (see its comment).
             fetch_parts = max(
                 self.spark.sparkContext.defaultParallelism,
-                -(-n_batch // cfg.fetch_rows_per_part),
+                -(-n_batch // _FETCH_ROWS_PER_PART),
             )
             fetched_raw = (
                 hits.unionByName(misses)
@@ -845,21 +849,7 @@ class CrawlEngine:
                 .filter(F.col("_rn") == 1)
                 .drop("_rn")
             )
-            if cfg.broadcast_batch:
-                # same state-never-moves shape as the candidate dedup: the
-                # page urls are ≤ batch — semi the seen state against their
-                # broadcast, anti the (small) hit set back out
-                seen_hits = self._seen_df.join(
-                    F.broadcast(first_per_url.select("url")),
-                    "url", "left_semi",
-                ).select("url")
-                pages_src = first_per_url.join(
-                    F.broadcast(seen_hits), "url", "left_anti"
-                ).cache()
-            else:
-                pages_src = first_per_url.join(
-                    self._seen_df.select("url"), "url", "left_anti"
-                ).cache()
+            pages_src = unseen(first_per_url).cache()
         else:
             pages_src = extracted
         _mark("fetch+extract")
@@ -917,8 +907,7 @@ class CrawlEngine:
         futures = []
         if cfg.unique_fetch:
             futures.append(self._pool.submit(
-                self._bg_run, self.pages.append, page_rows,
-                {"round": round_no}))
+                self.pages.append, page_rows, {"round": round_no}))
         else:
             self.pages.upsert(page_rows, key="url", meta={"round": round_no})
 
@@ -942,8 +931,7 @@ class CrawlEngine:
             # src fetched once ⇒ (src,dst) can never repeat across rounds;
             # within-round dedup above suffices (J6 insert-if-absent holds)
             futures.append(self._pool.submit(
-                self._bg_run, self.links.append, edges,
-                {"round": round_no}))
+                self.links.append, edges, {"round": round_no}))
         else:
             new_edges = edges.join(
                 self.links.read(), ["source_url", "destination_url"], "left_anti"
@@ -962,8 +950,7 @@ class CrawlEngine:
                 )
             )
             futures.append(self._pool.submit(
-                self._bg_run, self.documents.append, spans_df,
-                {"round": round_no}))
+                self.documents.append, spans_df, {"round": round_no}))
         _mark("spans_write")
         # U1: seen ∪ batch (both outcomes) — BEFORE candidate filtering,
         # matching the reference's file-update order (:839-849)
@@ -1028,17 +1015,7 @@ class CrawlEngine:
                 )
                 .select("url", "_s.*")
             )
-            if cfg.broadcast_batch:
-                add_hits = self._seen_df.join(
-                    F.broadcast(seen_add.select("url")), "url", "left_semi"
-                ).select("url")
-                seen_add = seen_add.join(
-                    F.broadcast(add_hits), "url", "left_anti"
-                )
-            else:
-                seen_add = seen_add.join(
-                    self._seen_df.select("url"), "url", "left_anti"
-                )
+            seen_add = unseen(seen_add)
         # localCheckpoint: materialize AND truncate the logical plan —
         # without it the state lineage grows every round and Catalyst
         # re-analysis goes exponential (the classic iterative-job trap).
@@ -1062,17 +1039,13 @@ class CrawlEngine:
         # UnknownPartitioning in the LogicalRDD — verified on this Spark —
         # so the shuffle would buy nothing and cost O(seen) per round.)
         seen_fut = self._pool.submit(
-            self._bg_run,
             lambda: self._seen_df.unionByName(seen_add)
-            .coalesce(self._state_parts).localCheckpoint(),
-            _pool="default",
+            .coalesce(self._state_parts).localCheckpoint()
         )
         blooms_fut = self._pool.submit(
-            self._bg_run,
             lambda: self.pb.merge_blobs(
                 self._blooms_df, add_hashes
-            ).localCheckpoint(),
-            _pool="default",
+            ).localCheckpoint()
         )
 
         _mark("seen+bloom_submit")
@@ -1119,17 +1092,6 @@ class CrawlEngine:
         # Same rows as anti-joining maybe ▷ seen first: anti-joins commute,
         # seen_hits holds only maybe urls (a url probes alike at every
         # depth), and pending keys outside the candidates remove nothing.
-        # In the small-round regime (broadcast_batch, the knob that
-        # broadcasts the batch into the corpus) the seen and frontier STATE
-        # never shuffle: each streams in place against a ≤batch-sized
-        # broadcast and only the matched keys broadcast back out — a plain
-        # left-anti would exchange BOTH sides every round. At 10^7-row
-        # production batches the probe sets outgrow the broadcast budget:
-        # broadcast_batch=False runs the same joins unhinted (PLANS.md
-        # multi-executor note).
-        def bc(df):
-            return F.broadcast(df) if cfg.broadcast_batch else df
-
         cand_h = bloom_mod.with_bloom_hashes(
             cand, "cand_url", cfg.num_partitions
         )
@@ -1221,7 +1183,7 @@ class CrawlEngine:
         if cfg.detailed_metrics:
             # post-merge stats need the merged blobs — waits for the merge
             # here instead of at the round-end join
-            fs = bloom_mod.filter_stats(blooms_fut.result()).agg(
+            fs = self.pb.filter_stats(blooms_fut.result()).agg(
                 F.max("n_layers").alias("layers"), F.max("fill").alias("fill")
             ).first()
             n_filter_layers = int(fs["layers"] or 0)
@@ -1315,13 +1277,14 @@ class CrawlEngine:
         ON CONFLICT upsert — pair with ``unique_fetch=False`` so the
         refetched pages MERGE instead of duplicating).
 
-        Cuckoo filter: targeted fingerprint deletion (delete_blobs) — the
-        capability the layer was chosen for. Bloom bitmap: bits can't be
-        unset, so the blobs are REBUILT from the surviving seen rows (one
-        pass over seen; at 10^10 scale you'd run expiry in batches on the
-        cuckoo layer instead). Returns the number of URLs expired; a
-        following ``run(seeds=urls)`` refetches them (bootstrap's
-        seeds ∖ seen reconciliation no longer filters them)."""
+        One pass over seen marks the expired rows; the seen table is
+        rewritten from the survivors and the filter blobs are REBUILT from
+        them, for both filter kinds. The rewrite already costs O(seen), so
+        a targeted cuckoo delete would save nothing, and the rebuild is
+        exact by construction: no false negatives, no chained-delete
+        collider edge (operators/cuckoo.py). Returns the number of URLs
+        expired; a following ``run(seeds=urls)`` refetches them
+        (bootstrap's seeds ∖ seen reconciliation no longer filters them)."""
         if not urls:
             return 0
         cfg = self.config
@@ -1331,8 +1294,7 @@ class CrawlEngine:
         # → the next run would re-fetch and duplicate them)
         self.checkpoint(self._last_round)
         # deduplicated: a repeated request URL must not fan out the seen
-        # join (n_expired would overcount) nor request two cuckoo
-        # copy-deletions for one seen row
+        # join (n_expired would overcount)
         url_df = local_df(
             self.spark, [(u,) for u in dict.fromkeys(urls)], _strings("url")
         )
@@ -1342,59 +1304,12 @@ class CrawlEngine:
         ).localCheckpoint(eager=False)
         n_expired = int(marked.agg(F.count("_gone").alias("gone")).first()["gone"])
         keep = marked.filter(F.col("_gone").isNull()).drop("_gone")
-        if cfg.seen_filter == "cuckoo":
-            # delete hashes come from the URLs actually matched in seen —
-            # NOT the raw request list. The filter holds one copy per
-            # inserted key; deleting a never-inserted key breaks the cuckoo
-            # delete precondition (a fp+bucket collision with a still-seen
-            # URL would remove that URL's only copy → false negative →
-            # silent refetch + duplicate pages)
-            expired = marked.filter(F.col("_gone").isNotNull()).select("url")
-            hashes = bloom_mod.with_bloom_hashes(
-                expired, "url", cfg.num_partitions
-            ).select("part_id", "h1", "h2")
-            blooms_cur = self.blooms.read()
-            # chained (multi-table) blobs: delete_chain's oldest-first walk
-            # can consume a COLLIDER's copy in an older table while the
-            # requested key's copy sits in a newer one — a false NEGATIVE
-            # for the collider (operators/cuckoo.py module docstring;
-            # planted repro in tests/test_cuckoo.py). Those partitions are
-            # REBUILT from the surviving seen rows (the bloom path's move —
-            # exact by construction); single-table partitions keep the
-            # O(delta) targeted delete, whose residual errors stay in the
-            # safe direction. The stats collect moves ≤num_partitions ints.
-            stats = bloom_mod.filter_stats(blooms_cur).select(
-                "part_id", "n_layers"
-            )
-            multi = [
-                int(r.part_id)
-                for r in stats.filter(F.col("n_layers") > 1).collect()
-            ]
-            if multi:
-                keep_h = bloom_mod.with_bloom_hashes(
-                    keep.select("url"), "url", cfg.num_partitions
-                ).select("part_id", "h1", "h2")
-                rebuilt = self.pb.merge_blobs(
-                    local_df(self.spark, [], bloom_mod.BLOOM_SCHEMA),
-                    keep_h.filter(F.col("part_id").isin(multi)),
-                )
-                deleted = self.pb.delete_blobs(
-                    blooms_cur.filter(~F.col("part_id").isin(multi)),
-                    hashes.filter(~F.col("part_id").isin(multi)),
-                )
-                blooms_new = deleted.unionByName(rebuilt).localCheckpoint()
-            else:
-                blooms_new = self.pb.delete_blobs(
-                    blooms_cur, hashes
-                ).localCheckpoint()
-        else:
-            hashes = bloom_mod.with_bloom_hashes(
-                keep.select("url"), "url", cfg.num_partitions
-            )
-            empty = local_df(self.spark, [], bloom_mod.BLOOM_SCHEMA)
-            blooms_new = self.pb.merge_blobs(
-                empty, hashes.select("part_id", "h1", "h2")
-            ).localCheckpoint()
+        hashes = bloom_mod.with_bloom_hashes(
+            keep.select("url"), "url", cfg.num_partitions
+        ).select("part_id", "h1", "h2")
+        blooms_new = self.pb.merge_blobs(
+            local_df(self.spark, [], bloom_mod.BLOOM_SCHEMA), hashes
+        ).localCheckpoint()
         r = self.last_completed_round()
         self.seen.overwrite(keep, {"round": r, "op": "expire"})
         self.blooms.overwrite(

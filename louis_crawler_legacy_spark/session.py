@@ -63,16 +63,6 @@ def get_spark(
         # would otherwise each wait the default 3 s for their preferred
         # executor; remote reads of the small state blocks are cheaper
         .config("spark.locality.wait", "0s")
-        # FAIR scheduling, two pools: a crawl round runs its output appends
-        # (pages/links/documents) as concurrent jobs beside the candidate
-        # path. Under FIFO the appends, submitted first, would hold strict
-        # priority for task slots; the weighted "background" pool (1 vs
-        # default's 4) makes them yield instead. The round's state merges
-        # stay in "default": the round joins them before it returns, so
-        # they are on its critical path. (CrawlEngine tags its worker
-        # threads with spark.scheduler.pool.)
-        .config("spark.scheduler.mode", "FAIR")
-        .config("spark.scheduler.allocation.file", _fair_allocation_file())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -80,39 +70,6 @@ def get_spark(
     if master.startswith("local-cluster") or "://" in master:
         ship_package(spark)
     return spark
-
-
-_FAIR_XML: str | None = None
-
-
-def _fair_allocation_file() -> str:
-    """Write the two-pool FAIR allocation (default / background) once
-    per process (Spark only accepts a file path for pool
-    definitions)."""
-    global _FAIR_XML
-    if _FAIR_XML is None:
-        import atexit
-        import shutil
-        import tempfile
-
-        tmpdir = tempfile.mkdtemp(prefix="fairsched_")
-        atexit.register(shutil.rmtree, tmpdir, ignore_errors=True)
-        path = os.path.join(tmpdir, "fairscheduler.xml")
-        with open(path, "w") as f:
-            f.write(
-                '<?xml version="1.0"?>\n<allocations>\n'
-                '  <pool name="default">\n'
-                "    <schedulingMode>FIFO</schedulingMode>\n"
-                "    <weight>4</weight>\n    <minShare>0</minShare>\n"
-                "  </pool>\n"
-                '  <pool name="background">\n'
-                "    <schedulingMode>FIFO</schedulingMode>\n"
-                "    <weight>1</weight>\n    <minShare>0</minShare>\n"
-                "  </pool>\n"
-                "</allocations>\n"
-            )
-        _FAIR_XML = path
-    return _FAIR_XML
 
 
 _PYFILES_ZIP: str | None = None

@@ -58,16 +58,18 @@ class SnapshotTable:
         self.name = name
         self.path = os.path.join(warehouse, name)
         self.schema = schema
-        # serializes same-table snapshot commits: the crawl engine runs
-        # output appends as background jobs that DRAIN ACROSS ROUNDS, so
-        # round k's and round k+1's append to one table can execute
-        # concurrently — without the lock both would allocate the same
+        # serializes same-table snapshot commits, which may come from any
+        # thread: the crawl engine commits from its round pool and from the
+        # driver thread, and a table object may be shared by threads the
+        # caller runs. Two unserialized commits would allocate the same
         # version (manifest read → v+1 → os.replace collision / manifest
-        # lost-update; surfaced by the round-4 FAIR pool, which delays
-        # background jobs enough to overlap them). RLock because upsert's
-        # read-modify-write spans an inner overwrite. Writes to DIFFERENT
-        # tables still overlap freely. (On a real cluster this is the
-        # table format's job — Iceberg commits via optimistic retry.)
+        # lost-update). The engine itself joins every round's jobs before
+        # the round returns, so it never overlaps commits to one table;
+        # the lock keeps the table safe without relying on that. RLock
+        # because upsert's read-modify-write spans an inner overwrite.
+        # Writes to DIFFERENT tables still overlap freely. (On a real
+        # cluster this is the table format's job — Iceberg commits via
+        # optimistic retry.)
         self._write_lock = threading.RLock()
         os.makedirs(self.path, exist_ok=True)
 

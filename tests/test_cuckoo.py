@@ -262,8 +262,8 @@ def test_spark_probe_merge_delete(spark):
 @pytest.mark.parametrize("seen_filter", ["cuckoo", "bloom"])
 def test_expire_and_recrawl(spark, tmp_path, seen_filter):
     """TTL workflow: crawl, expire two fetched URLs, re-seed them →
-    exactly those two refetch, MERGE-upserting their page rows (cuckoo:
-    targeted fingerprint delete; bloom: blob rebuild from surviving seen)."""
+    exactly those two refetch, MERGE-upserting their page rows (both
+    kinds rebuild the blobs from the surviving seen rows)."""
     from louis_crawler_legacy_spark.plans.crawl import CrawlConfig, CrawlEngine
     from louis_crawler_legacy_spark.sources import corpus as corpus_mod
 
@@ -304,13 +304,14 @@ def test_expire_and_recrawl(spark, tmp_path, seen_filter):
         assert pages_after[u] == pages_before[u]
 
 
-def test_expire_requests_outside_seen_never_reach_the_filter(spark, tmp_path):
-    """expire_urls must derive the cuckoo delete set from the URLs actually
-    matched in `seen`, not the raw request list: deleting a never-inserted
-    key violates the filter's delete precondition (a fp+bucket collision
-    with a still-seen URL would remove that URL's only copy → false
-    negative → silent refetch). Duplicated request URLs must also collapse
-    to one copy-deletion (and not overcount n_expired)."""
+@pytest.mark.parametrize("seen_filter", ["bloom", "cuckoo"])
+def test_expire_requests_outside_seen_never_reach_the_filter(
+    spark, tmp_path, seen_filter
+):
+    """expire_urls counts only the URLs actually matched in `seen`, not the
+    raw request list: never-crawled URLs expire nothing and a duplicated
+    request URL counts once. The rebuilt filter keeps every surviving seen
+    URL (zero false negatives after expiry, for both kinds)."""
     from louis_crawler_legacy_spark.plans.crawl import CrawlConfig, CrawlEngine
     from louis_crawler_legacy_spark.sources import corpus as corpus_mod
 
@@ -320,7 +321,7 @@ def test_expire_requests_outside_seen_never_reach_the_filter(spark, tmp_path):
     seeds = corpus_mod.seed_urls(corpus, n=2)
     cfg = CrawlConfig(
         num_partitions=4, bloom_capacity=10_000, max_depth=1, batch_size=10,
-        unique_fetch=False, seen_filter="cuckoo",
+        unique_fetch=False, seen_filter=seen_filter,
     )
     eng = CrawlEngine(
         spark, corpus_mod.corpus_df(spark, corpus), str(tmp_path / "wh"), cfg
@@ -331,21 +332,11 @@ def test_expire_requests_outside_seen_never_reach_the_filter(spark, tmp_path):
     )
     target = scraped[0]
 
-    captured = {}
-    orig = eng.pb.delete_blobs
-
-    def spy(filters, del_hashes):
-        captured["n_delete_requests"] = del_hashes.count()
-        return orig(filters, del_hashes)
-
-    eng.pb.delete_blobs = spy
-    # two never-crawled URLs + the same seen URL twice → exactly ONE
-    # fingerprint-copy deletion may be issued
+    # two never-crawled URLs + the same seen URL twice → exactly one expiry
     n = eng.expire_urls(
         ["http://never.invalid/a", "http://never.invalid/b", target, target]
     )
     assert n == 1
-    assert captured["n_delete_requests"] == 1
     # every surviving seen URL still probes present (zero false negatives)
     left = eng.seen.read().select("url")
     probed = eng.pb.probe(
@@ -407,10 +398,10 @@ def test_delete_chain_cross_table_collider_edge_documented():
     older table's smaller mask) in an OLDER table, leaving a still-seen
     key with zero copies: a false NEGATIVE. This test PLANTS that
     collision and pins the edge (probability ~per-table fpp per deleted
-    key in the wild). The engine's expire path therefore REBUILDS
-    multi-table partitions from surviving seen rows instead of issuing
-    chain deletes (plans/crawl.expire_urls; test_cuckoo growth-expire
-    test below) — this unit edge is documented, not load-bearing."""
+    key in the wild). The engine never issues chain deletes: expire_urls
+    always rebuilds the blobs from the surviving seen rows
+    (plans/crawl.expire_urls; growth-expire test below), so this library
+    edge is documented, not load-bearing."""
     nb0 = cuckoo.cuckoo_buckets(100)  # 32 buckets
     cap0 = cuckoo.table_cap(nb0)
 
@@ -454,7 +445,7 @@ def test_delete_chain_cross_table_collider_edge_documented():
     # THE EDGE: K's delete consumed K's collider K' in the older table;
     # K' is now a false negative (and K, whose copy survives in table 2,
     # still probes seen). If this assertion ever flips, delete_chain
-    # became chain-safe and expire_urls' rebuild special-case can go.
+    # became chain-safe.
     assert not cuckoo.probe_chain(
         states, np.array([h1b]), np.array([h2b])
     )[0]
@@ -462,11 +453,12 @@ def test_delete_chain_cross_table_collider_edge_documented():
 
 
 def test_expire_rebuilds_multi_table_cuckoo_partitions(spark, tmp_path):
-    """Engine-level fix for the chained-delete edge above: expire_urls
-    REBUILDS multi-table cuckoo partitions from the surviving seen rows,
-    so after bulk expiry EVERY surviving url still probes seen (exact by
-    construction — zero false negatives regardless of planted colliders),
-    and the expired urls refetch on re-seed."""
+    """Why the chained-delete edge above never reaches the engine:
+    expire_urls always rebuilds the blobs from the surviving seen rows,
+    multi-table cuckoo partitions included, so after bulk expiry EVERY
+    surviving url still probes seen (exact by construction — zero false
+    negatives regardless of planted colliders), and the expired urls
+    refetch on re-seed."""
     from louis_crawler_legacy_spark.plans.crawl import CrawlConfig, CrawlEngine
     from louis_crawler_legacy_spark.sources import corpus as corpus_mod
 

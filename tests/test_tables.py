@@ -46,9 +46,9 @@ def test_upsert_by_key(spark, tmp_path):
 def test_concurrent_same_table_appends_allocate_distinct_versions(
     spark, tmp_path
 ):
-    """The crawl engine's output appends drain across round boundaries, so
-    two appends to ONE table can execute concurrently (the round-4 FAIR
-    background pool made this overlap routine). Version allocation must be
+    """A table may receive commits from several threads at once (the
+    crawl engine commits from its round pool and its driver thread, and
+    callers may share a table across threads). Version allocation must be
     atomic: without the per-table write lock, both writers read the same
     manifest, pick the same v, and collide on os.replace (or lose a
     manifest update)."""
