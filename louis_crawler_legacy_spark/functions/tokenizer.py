@@ -44,7 +44,7 @@ class StableHashEncoder:
     @classmethod
     def _ids_for_piece(cls, piece: str) -> list[int]:
         """Fold one piece into ids and memoize them — the single
-        definition behind encode, encode_with_breaks and encode_split.
+        definition behind encode and encode_with_breaks.
         Callers look the memo up inline first (the ~99% hit path) and call
         this on a miss: 8-char windows of the lowercased piece, each
         blake2b-hashed to a 64-bit int mod _VOCAB."""
@@ -82,8 +82,10 @@ class StableHashEncoder:
         ``flat, spans = encode_with_breaks(text, sep)`` satisfies
         ``flat == encode(text)`` and
         ``[flat[s:e] for s, e in spans] == [encode(p) for p in
-        text.split(sep)]`` (same sep-as-own-piece argument as encode_split;
-        both equalities pinned by test). This exists for the chunker's
+        text.split(sep)]`` (both pinned by test): ``sep`` (a single
+        non-alnum, non-space char) is always matched as its own piece by
+        _PIECE_RE, so the piece stream splits at the sep pieces exactly
+        where ``text.split(sep)`` splits. This exists for the chunker's
         >512-token blocks, which previously tokenized the same text twice —
         once whole for the size decision, once sentence-split for bucket
         packing; the combined pass halves the tokenizer work on that path.
@@ -107,35 +109,6 @@ class StableHashEncoder:
                 out.extend(ids)
         spans.append((start, len(out)))
         return out, spans
-
-    def encode_split(self, text: str, sep: str) -> list[list[int]]:
-        """Token lists for ``text.split(sep)`` in ONE regex pass.
-
-        Valid because ``sep`` (a single non-alnum, non-space char) is always
-        matched as its own piece by _PIECE_RE — an ``[A-Za-z0-9]+`` run can
-        never contain it and the other alternative matches one char — so
-        the full text's piece stream splits at the sep pieces exactly where
-        ``text.split(sep)`` splits, and each segment's pieces equal
-        ``_PIECE_RE.findall(segment)``. Result is identical to
-        ``[self.encode(s) for s in text.split(sep)]`` (pinned by test);
-        this exists because the chunker's sentence-split path called
-        encode() once per sentence (~650 regex invocations per large doc).
-        Encoder-specific: a BPE encoder has no such decomposition, so the
-        chunker falls back to per-sentence encode() when absent."""
-        assert len(sep) == 1 and not sep.isalnum() and not sep.isspace()
-        memo_get = self._memo.get
-        lists: list[list[int]] = [[]]
-        cur = lists[0]
-        for piece in _PIECE_RE.findall(text):
-            if piece == sep:
-                cur = []
-                lists.append(cur)
-                continue
-            ids = memo_get(piece)
-            if ids is None:
-                ids = self._ids_for_piece(piece)
-            cur.extend(ids)
-        return lists
 
 
 class TiktokenEncoder:

@@ -168,17 +168,13 @@ def _split_chunk_into_subchunks(
     # zero extra tokenizer passes when _compute_tokens already recorded the
     # sentence spans (encode_with_breaks): per-sentence token lists are
     # slices of the block's flat token list (bit-equal, pinned by test).
-    # Otherwise one encode_split pass (sep-aligned decomposition); other
-    # encoders (tiktoken) keep the per-sentence encode.
+    # Otherwise (encoders without the combined pass, e.g. tiktoken, and
+    # fixture blocks that arrive with their tokens) per-sentence encode.
     if sent_spans is not None:
         tokens = large_chunk["tokens"]
         token_lists = [tokens[s:e] for s, e in sent_spans]
     else:
-        splitter = getattr(enc, "encode_split", None)
-        if splitter is not None:
-            token_lists = splitter(large_chunk["text_content"], ".")
-        else:
-            token_lists = [enc.encode(s) for s in sentences]
+        token_lists = [enc.encode(s) for s in sentences]
     if len(token_lists) != len(sentences):
         raise ValueError(
             f"{len(token_lists)} sentence token lists for "

@@ -35,13 +35,20 @@ the two-pass range-partitioned pattern (operators/ordering.py) — no
 unpartitioned window anywhere in the round plan. Every round is a barrier:
 its output appends and state merges run concurrently with the candidate
 path and are joined before the round returns.
+
+Stages: ``run_round`` runs select, fetch (robots, fetch+extract,
+throttle), outputs (pages, links, spans), state merge (seen, filter),
+dedup and frontier, then checkpoint. Every Spark job carries the job
+description ``r{round}:{name}`` of its stage or sub-stage (``r0:bootstrap``
+and ``expire`` outside rounds), so Spark's status store and event log fold
+a round's time by stage (``_stage``).
 """
 
 from __future__ import annotations
 
-import os
 import time
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -166,6 +173,9 @@ METRICS_SCHEMA = T.StructType(
         # INTENTIONAL skip, reported separately so n_errored stays a pure
         # failure count (n_batch = n_scraped + n_errored + n_robots_blocked)
         T.StructField("n_robots_blocked", T.LongType()),
+        # distinct (url, depth) children that reach the seen check, i.e.
+        # after the robots filter — the base n_bloom_hits is a share of
+        # (both -1 without detailed_metrics)
         T.StructField("n_candidates", T.LongType()),
         T.StructField("n_new_frontier", T.LongType()),
         T.StructField("n_bloom_hits", T.LongType()),
@@ -275,15 +285,6 @@ class CrawlConfig:
     # recrawl path for those.) The RFC's own cacheability guidance is
     # 24 h (§2.4) — rounds are the engine's clock.
     robots_ttl_rounds: int | None = None
-    # driver-side robots host-cache bound (fetch_robots mode): the
-    # host → fetched_round map that lets a round with no new/stale hosts
-    # skip the robots job is an LRU capped at this many entries — at the
-    # engine's 10^10-URL design point distinct hosts reach 10^7-10^8 and
-    # an unbounded dict is multi-GB of driver heap (r4 verdict,
-    # scale-robustness flag). Hosts evicted (or never cached) resolve
-    # through ONE O(batch-hosts) broadcast lookup against the warehouse
-    # robots table — never refetched from the network.
-    robots_host_cache_size: int = 100_000
     # broadcast the batch into the corpus scan (right while batches fit the
     # broadcast budget — the html column never shuffles). At 10^7-row
     # production batches the broadcast is GB-scale: set False to let
@@ -296,6 +297,15 @@ class CrawlConfig:
     # benchmark, off in the reference-equivalence oracle (the reference
     # chunks in a separate spider, hawn — see plans/pipelines.py)
     build_spans: bool = False
+
+    def __post_init__(self):
+        for name, allowed in (("seen_filter", ("bloom", "cuckoo")),
+                              ("fetcher", ("corpus", "http"))):
+            if getattr(self, name) not in allowed:
+                raise ValueError(
+                    f"CrawlConfig.{name} must be one of {allowed}, "
+                    f"got {getattr(self, name)!r}"
+                )
 
 
 @dataclass
@@ -323,6 +333,16 @@ def _host(col):
 
 def _strings(*names: str) -> T.StructType:
     return T.StructType([T.StructField(n, T.StringType()) for n in names])
+
+
+def _seen_rows(df: DataFrame, url, host, status: str,
+               round_no: int) -> DataFrame:
+    """``df``'s ``url`` and ``host`` columns as SEEN_SCHEMA rows."""
+    return df.select(
+        url.alias("url"), host.alias("host"),
+        F.xxhash64(url).alias("url_hash"),
+        F.lit(round_no).alias("round_added"), F.lit(status).alias("status"),
+    )
 
 
 def _release(df: DataFrame) -> None:
@@ -399,16 +419,6 @@ class CrawlEngine:
         self._state_parts = max(
             self.config.num_partitions, spark.sparkContext.defaultParallelism
         )
-        # host → fetched_round LRU for robots.txt rules already in the
-        # warehouse robots table (fetch_robots mode) — lets a round with
-        # no new/stale hosts skip the robots job entirely with ZERO Spark
-        # actions, and drives the robots_ttl_rounds refresh. Bounded at
-        # config.robots_host_cache_size (O(1) driver memory regardless of
-        # crawl breadth — the unbounded r4 dict was flagged as a
-        # scale-killer); cold/evicted hosts fall back to a per-round
-        # O(batch-hosts) warehouse lookup in _apply_robots. Invalidated
-        # on rollback.
-        self._robots_hosts: "OrderedDict[str, int] | None" = None
         self.robots_df = None
         if self.config.robots:
             from louis_crawler_legacy_spark.operators.robots import rules_df
@@ -473,19 +483,20 @@ class CrawlEngine:
         checkpoint, which is what makes that sound)."""
         if not self._dirty:
             return
-        self.frontier.overwrite(self._frontier_df, {"round": round_no})
-        self.seen.overwrite(self._seen_df, {"round": round_no})
-        self.blooms.overwrite(
-            self._blooms_df,
-            {"round": round_no, "filter": self.config.seen_filter},
-        )
-        if self._pending_metrics:
-            self.metrics.append(
-                local_df(self.spark, self._pending_metrics, METRICS_SCHEMA),
-                {"round": round_no},
+        with self._stage(round_no, "checkpoint"):
+            self.frontier.overwrite(self._frontier_df, {"round": round_no})
+            self.seen.overwrite(self._seen_df, {"round": round_no})
+            self.blooms.overwrite(
+                self._blooms_df,
+                {"round": round_no, "filter": self.config.seen_filter},
             )
-        self._pending_metrics = []
-        self._dirty = False
+            if self._pending_metrics:
+                self.metrics.append(
+                    local_df(self.spark, self._pending_metrics, METRICS_SCHEMA),
+                    {"round": round_no},
+                )
+            self._pending_metrics = []
+            self._dirty = False
 
     # -- bootstrap ------------------------------------------------------------
     def bootstrap(self, seeds: list[str]) -> None:
@@ -510,8 +521,9 @@ class CrawlEngine:
             F.lit(0).alias("discovery_round"),
             F.col("seed_idx").cast("long").alias("discovery_seq"),
         )
-        self.frontier.overwrite(rows, {"round": 0, "op": "bootstrap"})
-        self._swap_state(self.frontier.read().cache(), None, None)
+        with self._stage(0, "bootstrap"):
+            self.frontier.overwrite(rows, {"round": 0, "op": "bootstrap"})
+            self._swap_state(self.frontier.read().cache(), None, None)
 
     # -- one round --------------------------------------------------------------
     def select_batch(self, frontier_df: DataFrame) -> tuple[DataFrame, int]:
@@ -540,11 +552,11 @@ class CrawlEngine:
 
     def _apply_robots(self, batch: DataFrame, round_no: int):
         """fetch_robots path: make sure robots rules exist for every batch
-        host — fetch `/robots.txt` for the not-yet-known ones through the
-        same mapInPandas fetcher (one request per host, ever), parse
-        (operators/robots.py), append to the warehouse robots table —
-        then split the batch into (rules_df, allowed, blocked). An
-        unfetchable robots.txt means allow-all (standard behavior)."""
+        host — fetch `/robots.txt` for the unknown and stale ones through
+        the same mapInPandas fetcher, parse (operators/robots.py), write
+        them to the warehouse robots table — then split the batch into
+        (rules_df, allowed, blocked). An unfetchable robots.txt means
+        allow-all (standard behavior)."""
         import pandas as pd
 
         from louis_crawler_legacy_spark.operators.politeness import (
@@ -557,50 +569,29 @@ class CrawlEngine:
             http_fetch,
         )
 
-        # driver-side known-host LRU (host → fetched_round, capped at
-        # config.robots_host_cache_size): a round whose batch hosts are
-        # all cache-hits costs ONE tiny job over the already-materialized
-        # batch. Hosts NOT in the cache (never crawled, evicted, or fresh
-        # after construction/rollback) resolve via one broadcast lookup
-        # against the warehouse robots table restricted to the batch's
-        # unknown hosts — O(batch), not O(distinct-hosts-ever), so resume
-        # still skips already-fetched hosts without the old full-table
-        # seed. Only (host, scheme) pairs reach the driver, never URLs.
-        from collections import OrderedDict
-
+        # ONE lookup job per round: the batch's (host, scheme) pairs
+        # left-joined to each host's newest fetched_round in the warehouse
+        # robots table. A host is stale when it has no row yet, or when a
+        # TTL is set and its rules are ttl rounds old. The table is the
+        # only record of known hosts (the round broadcasts all of it below
+        # anyway), so resume and a fresh engine never refetch; only
+        # (host, scheme, fetched_round) triples reach the driver, never URLs.
         ttl = self.config.robots_ttl_rounds
-        cap = self.config.robots_host_cache_size
-        if self._robots_hosts is None:
-            self._robots_hosts = OrderedDict()
-
-        pairs = batch.groupBy("host").agg(
-            F.min(F.regexp_extract("url", r"^(https?://)", 1)).alias("scheme")
-        ).collect()
-        unknown = [p.host for p in pairs if p.host not in self._robots_hosts]
-        if unknown:
-            host_df = local_df(
-                self.spark, [(h,) for h in unknown], _strings("host")
-            )
-            for r in (
-                self.robots_table.read()
-                .join(F.broadcast(host_df), "host")
-                .groupBy("host")
-                .agg(F.max("fetched_round").alias("fr"))
-                .collect()
-            ):
-                self._robots_hosts[r.host] = int(r.fr)
-
-        def stale(h: str) -> bool:
-            fr = self._robots_hosts.get(h)
-            if fr is None:
-                return True
-            self._robots_hosts.move_to_end(h)  # LRU touch
-            return ttl is not None and fr <= round_no - ttl
-
+        known = self.robots_table.read().groupBy("host").agg(
+            F.max("fetched_round").alias("fetched_round")
+        )
+        pairs = (
+            batch.groupBy("host")
+            .agg(F.min(F.regexp_extract("url", r"^(https?://)", 1))
+                 .alias("scheme"))
+            .join(known, "host", "left")
+            .collect()
+        )
         new_pairs = [
             (p.scheme + p.host + "/robots.txt", p.host)
             for p in pairs
-            if stale(p.host)
+            if p.fetched_round is None
+            or (ttl is not None and p.fetched_round <= round_no - ttl)
         ]
         if new_pairs:
             robots_req = local_df(
@@ -667,14 +658,6 @@ class CrawlEngine:
                 self.robots_table.append(
                     rules, {"round": round_no, "op": "robots"}
                 )
-            for _, h in new_pairs:
-                self._robots_hosts[h] = round_no
-                self._robots_hosts.move_to_end(h)
-        # LRU bound: evict least-recently-used hosts past the cap — their
-        # rules stay in the warehouse table (the broadcast join below and
-        # the cold-host lookup above), so eviction never refetches
-        while len(self._robots_hosts) > cap:
-            self._robots_hosts.popitem(last=False)
         rules_all = self.robots_table.read()
         rb = F.broadcast(rules_all.select("host", "rules"))
         joined = batch.join(rb, "host", "left")
@@ -685,51 +668,130 @@ class CrawlEngine:
         blocked = joined.filter(blocked_expr).drop("rules")
         return rules_all, allowed, blocked
 
+    @contextmanager
+    def _stage(self, round_no: int | None, name: str):
+        """Set the Spark job description ``r{round_no}:{name}`` (just
+        ``name`` outside a round) for the jobs started inside, restoring
+        the caller's after. It is thread-local and pool threads are
+        reused: see ``_labelled``."""
+        sc = self.spark.sparkContext
+        prev = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(
+            name if round_no is None else f"r{round_no}:{name}"
+        )
+        try:
+            yield
+        finally:
+            sc.setLocalProperty("spark.job.description", prev)
+
+    def _labelled(self, round_no: int, name: str, fn, *args):
+        """``fn(*args)`` in its stage — the round pool's entry point."""
+        with self._stage(round_no, name):
+            return fn(*args)
+
+    # every ≤batch-sized join side goes through _bc(): in the small-round
+    # regime (broadcast_batch) the corpus, seen and frontier STATE never
+    # shuffle — each streams in place against a ≤batch-sized broadcast
+    # and only the matched keys broadcast back out, where a plain join
+    # would exchange BOTH sides every round. At 10^7-row production
+    # batches the probe sets outgrow the broadcast budget:
+    # broadcast_batch=False runs the same joins unhinted (PLANS.md
+    # multi-executor note).
+    def _bc(self, df: DataFrame) -> DataFrame:
+        return F.broadcast(df) if self.config.broadcast_batch else df
+
+    def _unseen(self, df: DataFrame) -> DataFrame:
+        """df ▷ seen as seen ⋉ bc(df urls), then df ▷ bc(those hits)."""
+        hits = self._seen_df.join(
+            self._bc(df.select("url")), "url", "left_semi"
+        ).select("url")
+        return df.join(self._bc(hits), "url", "left_anti")
+
     def run_round(self, round_no: int) -> RoundStats | None:
         cfg = self.config
         t0 = time.time()
-        _prof = os.environ.get("CRAWL_PROFILE")
-        _last = [t0]
-
-        def _mark(label):
-            if _prof:
-                now = time.time()
-                print(f"    [prof r{round_no}] {label}: {now - _last[0]:.2f}s", flush=True)
-                _last[0] = now
-
-        self._load_state()
-        frontier_df = self._frontier_df
-        batch, n_batch = self.select_batch(frontier_df)
-        if cfg.collect_batch_urls:
-            batch_rows = batch.select("url", "batch_seq").orderBy("batch_seq").collect()
-            batch_urls = [r.url for r in batch_rows]
-        else:
-            # n_batch came from ranked_take's partition-counts pass — with
-            # collection off the driver never sees a URL or an extra action
-            batch_urls = []
-        _mark("select_batch")
+        with self._stage(round_no, "select"):
+            self._load_state()
+            batch, n_batch = self.select_batch(self._frontier_df)
+            if cfg.collect_batch_urls:
+                rows = batch.select("url", "batch_seq").orderBy("batch_seq")
+                batch_urls = [r.url for r in rows.collect()]
+            else:
+                # n_batch came from ranked_take's partition-counts pass —
+                # with collection off the driver never sees a URL or an
+                # extra action
+                batch_urls = []
         if n_batch == 0:
             _release(batch)
             return None
 
-        # every ≤batch-sized join side goes through bc(): in the small-round
-        # regime (broadcast_batch) the corpus, seen and frontier STATE never
-        # shuffle — each streams in place against a ≤batch-sized broadcast
-        # and only the matched keys broadcast back out, where a plain join
-        # would exchange BOTH sides every round. At 10^7-row production
-        # batches the probe sets outgrow the broadcast budget:
-        # broadcast_batch=False runs the same joins unhinted (PLANS.md
-        # multi-executor note).
-        def bc(df):
-            return F.broadcast(df) if cfg.broadcast_batch else df
+        with self._stage(round_no, "fetch"):
+            (fetched, extracted, pages_src, errored, robots_live,
+             robots_blocked, n_scraped, n_robots_blocked) = self._fetch(
+                round_no, batch, n_batch)
+        futures = self._write_outputs(round_no, pages_src, extracted)
+        seen_fut, blooms_fut = self._merge_state(
+            round_no, extracted, errored, robots_blocked)
+        with self._stage(round_no, "dedup"):
+            probed, new_cand, kept, n_candidates, n_bloom_hits = self._dedup(
+                batch, pages_src, extracted, robots_live)
+        with self._stage(round_no, "frontier"):
+            frontier_new, frontier_size, n_new = self._advance_frontier(
+                round_no, kept, new_cand)
 
-        def unseen(df):
-            """df ▷ seen as seen ⋉ bc(df urls), then df ▷ bc(those hits)."""
-            hits = self._seen_df.join(
-                bc(df.select("url")), "url", "left_semi"
-            ).select("url")
-            return df.join(bc(hits), "url", "left_anti")
+        # round barrier: join every job this round submitted, surfacing the
+        # first failure. After the join nothing reads the replaced state or
+        # the round's caches, so they release inline — their blocks are
+        # lineage-truncated (a dropped block is unrecoverable), which is
+        # why no job may outlive its round.
+        for fut in futures:
+            fut.result()
+        self._swap_state(frontier_new, seen_fut.result(), blooms_fut.result())
+        for df in (batch, fetched, extracted, pages_src, probed):
+            _release(df)
+        self._dirty = True
+        self._last_round = round_no
 
+        # filter-saturation visibility: one tiny job over the ≤P installed
+        # blob rows — only their headers are read, no bits leave the tasks
+        n_filter_layers, filter_fill = -1, -1.0
+        if cfg.detailed_metrics:
+            with self._stage(round_no, "filter"):
+                fs = self.pb.filter_stats(self._blooms_df).agg(
+                    F.max("n_layers").alias("layers"),
+                    F.max("fill").alias("fill"),
+                ).first()
+            n_filter_layers = int(fs["layers"] or 0)
+            filter_fill = float(fs["fill"] or 0.0)
+
+        wall = time.time() - t0
+        n_errored = n_batch - n_scraped - n_robots_blocked
+        stats = RoundStats(
+            round=round_no,
+            n_batch=n_batch,
+            n_scraped=n_scraped,
+            n_errored=n_errored,
+            n_robots_blocked=n_robots_blocked,
+            n_candidates=n_candidates,
+            n_new_frontier=n_new,
+            n_bloom_hits=n_bloom_hits,
+            frontier_size_after=frontier_size,
+            wall_sec=wall,
+            batch_urls=batch_urls,
+            n_filter_layers=n_filter_layers,
+            filter_fill=filter_fill,
+        )
+        self._pending_metrics.append(
+            tuple(getattr(stats, c) for c in METRICS_SCHEMA.fieldNames())
+        )
+        if cfg.checkpoint_every and round_no % cfg.checkpoint_every == 0:
+            self.checkpoint(round_no)
+        return stats
+
+    # -- round stages ------------------------------------------------------------
+    def _fetch(self, round_no: int, batch: DataFrame, n_batch: int):
+        """Fetch stage: robots, fetch and extract, throttle upsert."""
+        cfg = self.config
         # S1/J7: fetch. Corpus mode = join against the corpus table
         # (middlewares.py:104-117 replay pattern): the batch is broadcast
         # INTO the corpus (inner join) so the wide html column never moves —
@@ -739,13 +801,18 @@ class CrawlEngine:
         # output schema. Either way: miss/status ≥ 400 → errored (F7).
         # live robots.txt: rules for all batch hosts (fetching the new
         # ones), disallowed urls split off before the page fetch
-        robots_live = None
-        robots_blocked = None
+        robots_live = robots_blocked = None
+        n_robots_blocked = 0
         fetch_batch = batch
         if cfg.fetch_robots and cfg.fetcher == "http":
-            robots_live, fetch_batch, robots_blocked = self._apply_robots(
-                batch, round_no
-            )
+            with self._stage(round_no, "robots"):
+                robots_live, fetch_batch, robots_blocked = self._apply_robots(
+                    batch, round_no
+                )
+                # robots-disallowed batch urls were intentionally skipped,
+                # not failed — counted out of the error metric (one tiny
+                # job over the broadcast-join filter)
+                n_robots_blocked = robots_blocked.count()
         if cfg.fetcher == "http":
             from louis_crawler_legacy_spark.sources.fetcher import http_fetch
 
@@ -783,16 +850,18 @@ class CrawlEngine:
                 .drop("final_url")
             )
         else:
-            hits = self.corpus.drop("host").join(bc(batch), "url", "inner")
-            # misses = batch ∖ hits.urls ≡ batch ∖ corpus.urls (hits.url is
-            # exactly batch ∩ corpus by the inner join above). The r05 form
-            # anti-joined against corpus.select(url), which re-built a
+            hits = self.corpus.drop("host").join(
+                self._bc(batch), "url", "inner"
+            )
+            # misses = batch ∖ hits.urls ≡ batch ∖ corpus.urls (hits.url
+            # is exactly batch ∩ corpus by the inner join above). The r05
+            # form anti-joined against corpus.select(url), which re-built a
             # corpus-sized URL broadcast EVERY round (600k rows ≈ tens of
             # MB at bench scale; O(corpus) at production) — the hit set is
             # ≤ batch rows and its broadcast build scans the cached corpus
             # column-pruned once, so the per-round broadcast is O(batch).
             misses = (
-                batch.join(bc(hits.select("url")), "url", "left_anti")
+                batch.join(self._bc(hits.select("url")), "url", "left_anti")
                 .withColumn("status", F.lit(None).cast("int"))
                 .withColumn("html", F.lit(None).cast("string"))
             )
@@ -849,44 +918,46 @@ class CrawlEngine:
                 .filter(F.col("_rn") == 1)
                 .drop("_rn")
             )
-            pages_src = unseen(first_per_url).cache()
+            pages_src = self._unseen(first_per_url).cache()
         else:
             pages_src = extracted
-        _mark("fetch+extract")
-        # robots-disallowed batch urls were intentionally skipped, not
-        # failed — count them out of the error metric (fetch_robots only;
-        # the count is one tiny job over the broadcast-join filter)
-        n_robots_blocked = (
-            robots_blocked.count() if robots_blocked is not None else 0
-        )
-        n_errored = n_batch - n_scraped - n_robots_blocked
 
         if cfg.fetcher == "http" and cfg.adaptive_throttle:
             # persist each host's learned AutoThrottle interval for the
             # next round's seed join: last write per host wins (max_by on
             # the per-task fetch_seq — each host lives in ONE task under
-            # the host repartition above). Synchronous and tiny (one job
-            # over the already-materialized fetched cache, ≤hosts rows):
-            # round k+1's seed join MUST see round k's delays, and the
-            # per-table commit lock makes no ordering promise for a
+            # the host repartition above). Synchronous and tiny
+            # (one job over the already-materialized fetched cache, ≤hosts
+            # rows): round k+1's seed join MUST see round k's delays, and
+            # the per-table commit lock makes no ordering promise for a
             # background upsert racing the next round's read.
-            learned = (
-                fetched.filter(F.col("throttle_delay").isNotNull())
-                .groupBy("host")
-                .agg(
-                    F.max_by("throttle_delay", "fetch_seq").alias(
-                        "throttle_delay"
+            with self._stage(round_no, "throttle"):
+                learned = (
+                    fetched.filter(F.col("throttle_delay").isNotNull())
+                    .groupBy("host")
+                    .agg(
+                        F.max_by("throttle_delay", "fetch_seq").alias(
+                            "throttle_delay"
+                        )
                     )
+                    .withColumn("updated_round", F.lit(round_no))
                 )
-                .withColumn("updated_round", F.lit(round_no))
-            )
-            learned = learned.localCheckpoint()
-            self.host_state.upsert(
-                learned, key="host",
-                meta={"round": round_no, "op": "throttle"},
-            )
-            _release(learned)
+                learned = learned.localCheckpoint()
+                self.host_state.upsert(
+                    learned, key="host",
+                    meta={"round": round_no, "op": "throttle"},
+                )
+                _release(learned)
+        return (fetched, extracted, pages_src, errored, robots_live,
+                robots_blocked, n_scraped, n_robots_blocked)
 
+    def _write_outputs(self, round_no: int, pages_src: DataFrame,
+                       extracted: DataFrame) -> list:
+        """Outputs stage. The three writes (pages/links/spans) are
+        independent of the candidate-dedup path and of each other — they
+        run as concurrent Spark jobs on the round pool, joined at the round
+        barrier; returns their futures."""
+        cfg = self.config
         # S7: pages upsert (MERGE by url)
         page_rows = pages_src.select(
             F.xxhash64("url").alias("id"),
@@ -899,19 +970,17 @@ class CrawlEngine:
             "children",
             "depth",
         )
-        # the three output writes (pages/links/spans) are independent of the
-        # candidate-dedup path and of each other — run them as concurrent
-        # Spark jobs beside the round's critical path, joined at round end.
-        # The pool has a slot for every output plus the two state merges
-        # below — nothing queues behind span chunking.
         futures = []
         if cfg.unique_fetch:
             futures.append(self._pool.submit(
+                self._labelled, round_no, "pages",
                 self.pages.append, page_rows, {"round": round_no}))
         else:
-            self.pages.upsert(page_rows, key="url", meta={"round": round_no})
+            with self._stage(round_no, "pages"):
+                self.pages.upsert(
+                    page_rows, key="url", meta={"round": round_no}
+                )
 
-        _mark("pages_write")
         # S10/J6: link edges insert-if-absent
         edges = pages_src.select(
             F.col("url").alias("source_url"),
@@ -921,7 +990,9 @@ class CrawlEngine:
             # record the requested→final redirect as a link edge so the
             # graph keeps the alias relationship
             edges = edges.unionByName(
-                extracted.filter(F.col("url") != F.col("requested_url")).select(
+                extracted.filter(
+                    F.col("url") != F.col("requested_url")
+                ).select(
                     F.col("requested_url").alias("source_url"),
                     F.col("url").alias("destination_url"),
                 )
@@ -931,14 +1002,16 @@ class CrawlEngine:
             # src fetched once ⇒ (src,dst) can never repeat across rounds;
             # within-round dedup above suffices (J6 insert-if-absent holds)
             futures.append(self._pool.submit(
+                self._labelled, round_no, "links",
                 self.links.append, edges, {"round": round_no}))
         else:
-            new_edges = edges.join(
-                self.links.read(), ["source_url", "destination_url"], "left_anti"
-            )
-            self.links.append(new_edges, {"round": round_no})
+            with self._stage(round_no, "links"):
+                new_edges = edges.join(
+                    self.links.read(), ["source_url", "destination_url"],
+                    "left_anti",
+                )
+                self.links.append(new_edges, {"round": round_no})
 
-        _mark("links_write")
         if cfg.build_spans:
             # spans from the round's already-extracted content/children —
             # the raw page was parsed+cleaned ONCE in extract_pages; never
@@ -950,34 +1023,27 @@ class CrawlEngine:
                 )
             )
             futures.append(self._pool.submit(
+                self._labelled, round_no, "spans",
                 self.documents.append, spans_df, {"round": round_no}))
-        _mark("spans_write")
+        return futures
+
+    def _merge_state(self, round_no: int, extracted: DataFrame,
+                     errored: DataFrame, robots_blocked: DataFrame | None):
+        """State-merge stage: seen ∪ batch and the filter-blob merge on the
+        round pool; returns their futures."""
+        cfg = self.config
+        url, host = F.col("url"), F.col("host")
         # U1: seen ∪ batch (both outcomes) — BEFORE candidate filtering,
         # matching the reference's file-update order (:839-849)
-        seen_add = (
-            extracted.select(
-                "url", _host(F.col("url")).alias("host"),
-                F.xxhash64("url").alias("url_hash"),
-                F.lit(round_no).alias("round_added"), F.lit("scraped").alias("status"),
-            )
-            .unionByName(
-                errored.select(
-                    "url", "host", F.xxhash64("url").alias("url_hash"),
-                    F.lit(round_no).alias("round_added"),
-                    F.lit("errored").alias("status"),
-                )
-            )
-        )
+        seen_add = _seen_rows(
+            extracted, url, _host(url), "scraped", round_no
+        ).unionByName(_seen_rows(errored, url, host, "errored", round_no))
         if robots_blocked is not None:
             # robots-disallowed batch urls were never fetched; they still
             # leave the frontier and must never be re-selected
-            seen_add = seen_add.unionByName(
-                robots_blocked.select(
-                    "url", "host", F.xxhash64("url").alias("url_hash"),
-                    F.lit(round_no).alias("round_added"),
-                    F.lit("robots_blocked").alias("status"),
-                )
-            )
+            seen_add = seen_add.unionByName(_seen_rows(
+                robots_blocked, url, host, "robots_blocked", round_no
+            ))
         if cfg.fetcher == "http":
             # redirects: mark the REQUESTED url seen too (a rediscovery of
             # either side must not refetch), and guard against duplicate
@@ -985,14 +1051,10 @@ class CrawlEngine:
             # or a final url an earlier round already recorded. Exactly one
             # seen row (and one filter insert — the cuckoo multiset
             # contract) per url, ever.
-            seen_add = seen_add.unionByName(
-                extracted.filter(F.col("url") != F.col("requested_url")).select(
-                    F.col("requested_url").alias("url"), "host",
-                    F.xxhash64("requested_url").alias("url_hash"),
-                    F.lit(round_no).alias("round_added"),
-                    F.lit("scraped").alias("status"),
-                )
-            )
+            seen_add = seen_add.unionByName(_seen_rows(
+                extracted.filter(url != F.col("requested_url")),
+                F.col("requested_url"), host, "scraped", round_no,
+            ))
             # one row per url, chosen DETERMINISTICALLY when a url appears
             # with conflicting statuses in one round (e.g. url A errors as
             # a direct request while another request redirects onto A and
@@ -1015,14 +1077,14 @@ class CrawlEngine:
                 )
                 .select("url", "_s.*")
             )
-            seen_add = unseen(seen_add)
+            seen_add = self._unseen(seen_add)
         # localCheckpoint: materialize AND truncate the logical plan —
         # without it the state lineage grows every round and Catalyst
         # re-analysis goes exponential (the classic iterative-job trap).
         # Durability comes from checkpoint() snapshots, not these blocks.
         # Both merges run beside the candidate path and never gate it: the
         # candidate dedup probes the through-round-(r-1) state and
-        # excludes its own batch below — identical semantics
+        # excludes its own batch (_dedup) — identical semantics
         # (seen_r = seen_{r-1} ∪ batch_r). The round joins them at its end.
         add_hashes = bloom_mod.with_bloom_hashes(
             seen_add.select("url"), "url", cfg.num_partitions
@@ -1039,16 +1101,23 @@ class CrawlEngine:
         # UnknownPartitioning in the LogicalRDD — verified on this Spark —
         # so the shuffle would buy nothing and cost O(seen) per round.)
         seen_fut = self._pool.submit(
+            self._labelled, round_no, "seen",
             lambda: self._seen_df.unionByName(seen_add)
-            .coalesce(self._state_parts).localCheckpoint()
+            .coalesce(self._state_parts).localCheckpoint(),
         )
         blooms_fut = self._pool.submit(
+            self._labelled, round_no, "filter",
             lambda: self.pb.merge_blobs(
                 self._blooms_df, add_hashes
-            ).localCheckpoint()
+            ).localCheckpoint(),
         )
+        return seen_fut, blooms_fut
 
-        _mark("seen+bloom_submit")
+    def _dedup(self, batch: DataFrame, pages_src: DataFrame,
+               extracted: DataFrame, robots_live: DataFrame | None):
+        """Dedup stage: returns (probed [cached], new_cand, frontier ∖
+        batch, n_candidates, n_bloom_hits)."""
+        cfg = self.config
         # candidates: children at depth+1 ≤ max_depth (O2), discovery order =
         # (src batch_seq, link position), first-occurrence dedup by url
         cand = pages_src.filter(F.col("depth") + 1 <= cfg.max_depth).select(
@@ -1067,9 +1136,6 @@ class CrawlEngine:
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        n_candidates = cand.count() if cfg.detailed_metrics else -1
-
-        _mark("cand_dedup_window")
         # robots (engine feature; off for reference equivalence)
         cand = cand.withColumn("host", _host(F.col("cand_url")))
         cand = robots_filter(cand, self.robots_df, url_col="cand_url")
@@ -1096,13 +1162,20 @@ class CrawlEngine:
             cand, "cand_url", cfg.num_partitions
         )
         probed = self.pb.probe(cand_h, self._blooms_df).cache()
+        n_candidates = n_bloom_hits = -1
+        if cfg.detailed_metrics:
+            # ONE aggregate over the cached probe output the broadcasts
+            # below read anyway, so both counts share one base. Hits are
+            # w.r.t. the through-r-1 filter (a candidate linking back to a
+            # page fetched this round is removed by the batch anti-join)
+            c = probed.agg(
+                F.count("*").alias("n"),
+                F.count_if(F.col("maybe_seen")).alias("hits"),
+            ).first()
+            n_candidates, n_bloom_hits = int(c["n"]), int(c["hits"])
         maybe = probed.filter(F.col("maybe_seen"))
-        # NOTE: counted w.r.t. the through-r-1 filter (a candidate linking
-        # back to a page fetched this round counts as definitively-new here
-        # and is removed by the batch anti-join below)
-        n_bloom_hits = maybe.count() if cfg.detailed_metrics else -1
         seen_hits = self._seen_df.join(
-            bc(maybe.select(F.col("cand_url").alias("url"))),
+            self._bc(maybe.select(F.col("cand_url").alias("url"))),
             "url", "left_semi",
         ).select("url")
         # filter misses are definitively-new only w.r.t. rounds ≤ r-1 —
@@ -1119,11 +1192,11 @@ class CrawlEngine:
         # not already pending at the same (url, depth) (reference
         # `(url, depth) not in pending`, :610-616) — vs post-removal
         # frontier
-        frontier_after_removal = frontier_df.join(
-            bc(batch.select("url")), "url", "left_anti"
+        frontier_after_removal = self._frontier_df.join(
+            self._bc(batch.select("url")), "url", "left_anti"
         )
         pending = frontier_after_removal.join(
-            bc(probed.select(
+            self._bc(probed.select(
                 F.col("cand_url").alias("url"),
                 F.col("next_depth").alias("depth"),
             )),
@@ -1133,11 +1206,17 @@ class CrawlEngine:
             F.col("depth").alias("next_depth"),
         )
         new_cand = probed.join(
-            bc(exclude.select(F.col("url").alias("cand_url"))),
+            self._bc(exclude.select(F.col("url").alias("cand_url"))),
             "cand_url", "left_anti",
-        ).join(bc(pending), ["cand_url", "next_depth"], "left_anti")
-        _mark("bloom_probe+anti")
+        ).join(self._bc(pending), ["cand_url", "next_depth"], "left_anti")
+        return (probed, new_cand, frontier_after_removal, n_candidates,
+                n_bloom_hits)
 
+    def _advance_frontier(self, round_no: int,
+                          frontier_after_removal: DataFrame,
+                          new_cand: DataFrame):
+        """Frontier stage: frontier′ = (frontier ∖ batch) ∪ new rows,
+        localCheckpointed. Returns (frontier′, its size, n_new)."""
         # discovery order key: encode (batch_seq, pos) into ONE long —
         # (batch_seq << 32) | pos is monotone and unique over the round's
         # candidates (one parent per batch_seq, distinct pos per link), so
@@ -1175,61 +1254,7 @@ class CrawlEngine:
             F.count("*").alias("sz"),
             F.count(F.when(F.col("discovery_round") == round_no, 1)).alias("nn"),
         ).first()
-        frontier_size, n_new = int(sizes["sz"]), int(sizes["nn"])
-
-        # filter-saturation visibility (VERDICT r02 "what's wrong" #2):
-        # one tiny job over the ≤P blob rows — only their headers are read,
-        # no bits leave the tasks
-        if cfg.detailed_metrics:
-            # post-merge stats need the merged blobs — waits for the merge
-            # here instead of at the round-end join
-            fs = self.pb.filter_stats(blooms_fut.result()).agg(
-                F.max("n_layers").alias("layers"), F.max("fill").alias("fill")
-            ).first()
-            n_filter_layers = int(fs["layers"] or 0)
-            filter_fill = float(fs["fill"] or 0.0)
-        else:
-            n_filter_layers, filter_fill = -1, -1.0
-
-        _mark("frontier_ckpt+counts")
-        # round barrier: join every job this round submitted, surfacing the
-        # first failure. After the join nothing reads the replaced state or
-        # the round's caches, so they release inline — their blocks are
-        # lineage-truncated (a dropped block is unrecoverable), which is
-        # why no job may outlive its round.
-        for fut in futures:
-            fut.result()
-        self._swap_state(frontier_new, seen_fut.result(), blooms_fut.result())
-        for df in (batch, fetched, extracted, pages_src, probed):
-            _release(df)
-        self._dirty = True
-        self._last_round = round_no
-        _mark("round_join")
-
-        wall = time.time() - t0
-        stats = RoundStats(
-            round=round_no,
-            n_batch=n_batch,
-            n_scraped=n_scraped,
-            n_errored=n_errored,
-            n_robots_blocked=n_robots_blocked,
-            n_candidates=n_candidates,
-            n_new_frontier=n_new,
-            n_bloom_hits=n_bloom_hits,
-            frontier_size_after=frontier_size,
-            wall_sec=wall,
-            batch_urls=batch_urls,
-            n_filter_layers=n_filter_layers,
-            filter_fill=filter_fill,
-        )
-        self._pending_metrics.append(
-            (round_no, n_batch, n_scraped, n_errored, n_robots_blocked,
-             n_candidates, n_new, n_bloom_hits, frontier_size, wall,
-             n_filter_layers, filter_fill)
-        )
-        if cfg.checkpoint_every and round_no % cfg.checkpoint_every == 0:
-            self.checkpoint(round_no)
-        return stats
+        return frontier_new, int(sizes["sz"]), int(sizes["nn"])
 
     def run(self, seeds: list[str] | None = None, max_rounds: int = 10_000,
             start_round: int = 1) -> list[RoundStats]:
@@ -1293,32 +1318,33 @@ class CrawlEngine:
         # seen since the last checkpoint (their output rows already landed
         # → the next run would re-fetch and duplicate them)
         self.checkpoint(self._last_round)
-        # deduplicated: a repeated request URL must not fan out the seen
-        # join (n_expired would overcount)
-        url_df = local_df(
-            self.spark, [(u,) for u in dict.fromkeys(urls)], _strings("url")
-        )
-        # ONE pass over seen: mark expired rows, materialize, fused count
-        marked = self.seen.read().join(
-            F.broadcast(url_df.withColumn("_gone", F.lit(True))), "url", "left"
-        ).localCheckpoint(eager=False)
-        n_expired = int(marked.agg(F.count("_gone").alias("gone")).first()["gone"])
-        keep = marked.filter(F.col("_gone").isNull()).drop("_gone")
-        hashes = bloom_mod.with_bloom_hashes(
-            keep.select("url"), "url", cfg.num_partitions
-        ).select("part_id", "h1", "h2")
-        blooms_new = self.pb.merge_blobs(
-            local_df(self.spark, [], bloom_mod.BLOOM_SCHEMA), hashes
-        ).localCheckpoint()
-        r = self.last_completed_round()
-        self.seen.overwrite(keep, {"round": r, "op": "expire"})
-        self.blooms.overwrite(
-            blooms_new, {"round": r, "op": "expire", "filter": cfg.seen_filter}
-        )
-        _release(marked)
-        _release(blooms_new)
-        self._swap_state(None, None, None)  # reload from tables next round
-        return n_expired
+        with self._stage(None, "expire"):
+            # deduplicated: a repeated request URL must not fan out the seen
+            # join (n_expired would overcount)
+            url_df = local_df(
+                self.spark, [(u,) for u in dict.fromkeys(urls)], _strings("url")
+            )
+            # ONE pass over seen: mark expired rows, materialize, fused count
+            marked = self.seen.read().join(
+                F.broadcast(url_df.withColumn("_gone", F.lit(True))), "url", "left"
+            ).localCheckpoint(eager=False)
+            n_expired = int(marked.agg(F.count("_gone").alias("gone")).first()["gone"])
+            keep = marked.filter(F.col("_gone").isNull()).drop("_gone")
+            hashes = bloom_mod.with_bloom_hashes(
+                keep.select("url"), "url", cfg.num_partitions
+            ).select("part_id", "h1", "h2")
+            blooms_new = self.pb.merge_blobs(
+                local_df(self.spark, [], bloom_mod.BLOOM_SCHEMA), hashes
+            ).localCheckpoint()
+            r = self.last_completed_round()
+            self.seen.overwrite(keep, {"round": r, "op": "expire"})
+            self.blooms.overwrite(
+                blooms_new, {"round": r, "op": "expire", "filter": cfg.seen_filter}
+            )
+            _release(marked)
+            _release(blooms_new)
+            self._swap_state(None, None, None)  # reload from tables next round
+            return n_expired
 
     def rollback_to_round(self, round_no: int) -> None:
         """Time-travel every state AND output table back to the end of
@@ -1332,6 +1358,5 @@ class CrawlEngine:
                     target = max(target, h["v"])
             table.rollback_to(target)
         self._swap_state(None, None, None)
-        self._robots_hosts = None  # robots_table rolled back → re-seed
         self._pending_metrics = []
         self._dirty = False

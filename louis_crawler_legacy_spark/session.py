@@ -18,6 +18,15 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 ARROW_BATCH_SIZE = 512
 
 
+def _default_driver_memory() -> str:
+    """``spark.driver.memory`` when SPARK_DRIVER_MEM is unset: half the
+    machine's RAM, clamped to 2-24 GiB. A fixed 24g let one long-lived
+    driver JVM (a full test suite) grow its heap past a 16 GB machine's
+    RAM, and the kernel then killed it mid-run."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(24, max(2, total // (2 << 30)))}g"
+
+
 def get_spark(
     app_name: str = "louis-crawler-legacy-spark",
     cpus: int | str | None = None,
@@ -54,7 +63,10 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_SIZE)
         )
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.executor.memory", executor_memory)

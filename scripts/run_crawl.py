@@ -53,9 +53,6 @@ def main() -> None:
     p.add_argument("--throttle-target-concurrency", type=float, default=1.0,
                    help="AUTOTHROTTLE_TARGET_CONCURRENCY: intervals "
                         "converge toward latency / this")
-    p.add_argument("--robots-host-cache-size", type=int, default=100_000,
-                   help="driver-side robots host-LRU bound (evicted hosts "
-                        "fall back to a warehouse lookup, never a refetch)")
     p.add_argument("--seed-from-sitemaps", action="store_true",
                    help="expand each --seeds line that is a sitemap URL "
                         "(contains 'sitemap', .xml) into its page URLs "
@@ -97,7 +94,6 @@ def main() -> None:
         host_min_interval=args.host_min_interval,
         adaptive_throttle=args.adaptive_throttle,
         throttle_target_concurrency=args.throttle_target_concurrency,
-        robots_host_cache_size=args.robots_host_cache_size,
     )
     if args.fetcher == "corpus" and not args.corpus:
         sys.exit("--corpus required unless --fetcher http")

@@ -159,7 +159,8 @@ def test_preannotated_cache_path():
 
 class EncodeOnly:
     """An encoder with only ``encode`` (like TiktokenEncoder): no combined
-    pass overwrites a block's sent_spans attr, and no encode_split."""
+    pass overwrites a block's sent_spans attr, so the split path encodes
+    each sentence."""
 
     def encode(self, text):
         return ENC.encode(text)

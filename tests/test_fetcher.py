@@ -616,14 +616,13 @@ def test_sitemap_seeds_live_index_recursion(spark, server):
             PAGES.pop(path, None)
 
 
-def test_robots_host_cache_lru_bounded_with_warehouse_fallback(
+def test_robots_known_hosts_resolve_from_warehouse_without_refetch(
     spark, tmp_path
 ):
-    """The driver-side robots host cache is an LRU capped at
-    robots_host_cache_size — O(1) driver memory regardless of crawl
-    breadth (the r4 unbounded dict was flagged as a scale-killer). An
-    EVICTED host resolves through the warehouse robots table: its rules
-    still apply and /robots.txt is never refetched."""
+    """The warehouse robots table is the only record of known hosts: a
+    fresh engine over the same warehouse resolves a host fetched in an
+    earlier round from the table — its rules still apply and /robots.txt
+    is never refetched."""
     import threading as _threading
     from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
@@ -664,18 +663,18 @@ def test_robots_host_cache_lru_bounded_with_warehouse_fallback(
         cfg = CrawlConfig(
             max_depth=0, batch_size=8, num_partitions=2, bloom_capacity=1_000,
             fetcher="http", fetch_timeout=5.0, fetch_robots=True,
-            robots_host_cache_size=2,
         )
         eng = CrawlEngine(spark, corpus=None,
                           warehouse_dir=str(tmp_path / "wh"), config=cfg)
-        # round 1: all four hosts → one robots fetch each, cache capped
+        # round 1: all four hosts → one robots fetch each
         eng.run(seeds=[f"{b}/a" for b in bases], max_rounds=1)
         robots_reqs = [h for h, p in log if p == "/robots.txt"]
         assert sorted(robots_reqs) == sorted(b.split("//")[1] for b in bases)
-        assert len(eng._robots_hosts) <= 2  # LRU bound held
-        # round 2: revisit host 0 (evicted) — warehouse fallback supplies
-        # its fetched_round AND its rules: no robots refetch, and a
-        # /private/ url is still blocked
+        # round 2 on a fresh engine: the warehouse supplies host 0's
+        # fetched_round AND its rules — no robots refetch, and a /private/
+        # url is still blocked
+        eng = CrawlEngine(spark, corpus=None,
+                          warehouse_dir=str(tmp_path / "wh"), config=cfg)
         eng.run(
             seeds=[f"{bases[0]}/b", f"{bases[0]}/private/x"],
             max_rounds=1, start_round=2,
@@ -684,7 +683,6 @@ def test_robots_host_cache_lru_bounded_with_warehouse_fallback(
         seen = {r.url: r.status for r in eng.seen.read().collect()}
         assert seen[f"{bases[0]}/b"] == "scraped"
         assert seen[f"{bases[0]}/private/x"] == "robots_blocked"
-        assert len(eng._robots_hosts) <= 2
     finally:
         for srv in servers:
             srv.shutdown()
@@ -780,9 +778,9 @@ def test_http_soak_flat_wall_bounded_driver_state(spark, tmp_path):
     """12-round live-server soak with robots TTL + adaptive throttle on —
     the http-mode twin of the 48-round corpus soak (guards the http-only
     driver state against the next O(rounds) leak): per-round wall stays
-    flat, the robots host LRU stays bounded, no Spark job outlives its
-    round, the persisted-RDD count stops growing from round 3 on, and
-    host_state keeps exactly one row per host across all rounds."""
+    flat, no Spark job outlives its round, the persisted-RDD count stops
+    growing from round 3 on, and host_state keeps exactly one row per host
+    across all rounds."""
     import statistics
     import threading as _threading
     from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -828,7 +826,7 @@ def test_http_soak_flat_wall_bounded_driver_state(spark, tmp_path):
                           warehouse_dir=str(tmp_path / "wh"), config=cfg)
         eng.bootstrap([f"{base}/site/0"])
         sc = spark.sparkContext
-        walls, robots_cache, active, persisted = [], [], [], []
+        walls, active, persisted = [], [], []
         r = 1
         while r <= 12:
             s = eng.run_round(r)
@@ -837,11 +835,9 @@ def test_http_soak_flat_wall_bounded_driver_state(spark, tmp_path):
             active.append(list(sc.statusTracker().getActiveJobsIds()))
             persisted.append(sc._jsc.getPersistentRDDs().size())
             walls.append(s.wall_sec)
-            robots_cache.append(len(eng._robots_hosts or {}))
             r += 1
         eng.checkpoint(r - 1)
         assert len(walls) == 12, f"crawl ended early after {len(walls)} rounds"
-        assert max(robots_cache) <= 1, robots_cache  # one host, ever
         assert not any(active), f"jobs outlived their round: {active}"
         assert max(persisted[2:]) <= persisted[2], (
             f"persisted RDDs growing: {persisted}"

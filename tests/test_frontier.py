@@ -5,8 +5,11 @@ budget — plus checkpoint/resume identity."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
+from louis_crawler_legacy_spark.operators.politeness import robots_blocked_py
 from louis_crawler_legacy_spark.plans.crawl import CrawlConfig, CrawlEngine
 from louis_crawler_legacy_spark.simulator import simulate_crawl
 from louis_crawler_legacy_spark.sources import corpus as corpus_mod
@@ -107,6 +110,20 @@ def test_robots_filtering(spark, tmp_path):
         u.startswith("http://hub0.ca/page/1") or u.startswith("http://hub0.ca/fr/")
         for u in fetched
     )
+    # n_candidates counts the distinct (url, depth) children that reach the
+    # seen check — after the robots filter, the base n_bloom_hits shares
+    base = eng.config.base_timestamp
+    pages = eng.pages.read().collect()
+    for s in stats:
+        want = {
+            (c, p.depth + 1)
+            for p in pages
+            if p.last_crawled == base + s.round and p.depth + 1 <= 2
+            for c in p.children
+            if not robots_blocked_py(c, robots)
+        }
+        assert s.n_candidates == len(want), s.round
+        assert 0 <= s.n_bloom_hits <= s.n_candidates
 
 
 def test_robots_rfc_rules_engine_matches_simulator(spark, tmp_path):
@@ -138,6 +155,49 @@ def test_robots_rfc_rules_engine_matches_simulator(spark, tmp_path):
         for u in fetched
     )
     assert "http://site1.ca/fr/page/0" not in fetched
+
+
+@pytest.mark.parametrize(
+    "field,value", [("seen_filter", "cukoo"), ("fetcher", "https")]
+)
+def test_config_rejects_unknown_choice(field, value):
+    with pytest.raises(ValueError, match=f"CrawlConfig.{field} must be one of"):
+        CrawlConfig(**{field: value})
+
+
+STAGES = ("bootstrap", "select", "robots", "fetch", "throttle", "pages",
+          "links", "spans", "seen", "filter", "dedup", "frontier",
+          "checkpoint")
+
+
+def test_every_engine_job_carries_its_stage_label(spark, tmp_path):
+    """Each Spark job the engine starts — on the driver thread or on the
+    round pool — is described ``r{round}:{stage}`` (``expire`` for
+    expiry), read back from Spark's own status store."""
+    cfg = CrawlConfig(num_partitions=4, bloom_capacity=10_000, max_depth=2,
+                      batch_size=10, build_spans=True, checkpoint_every=1)
+    eng = CrawlEngine(
+        spark, corpus_mod.corpus_df(spark, CORPUS), str(tmp_path / "wh"), cfg
+    )
+    sc = spark.sparkContext
+
+    def jobs():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        out, it = {}, sc._jsc.sc().statusStore().jobsList(None).iterator()
+        while it.hasNext():
+            j = it.next()
+            d = j.description()
+            out[j.jobId()] = d.get() if d.isDefined() else None
+        return out
+
+    before = max(jobs(), default=-1)
+    stats = eng.run(seeds=SEEDS, max_rounds=2)
+    assert len(stats) == 2
+    assert eng.expire_urls(stats[0].batch_urls[:2]) == 2
+    labels = {d for i, d in jobs().items() if i > before}
+    pattern = re.compile(rf"r\d+:({'|'.join(STAGES)})|expire")
+    assert all(d is not None and pattern.fullmatch(d) for d in labels), labels
+    assert {"r2:spans", "r2:dedup", "expire"} <= labels
 
 
 def test_checkpoint_resume_identity(spark, tmp_path):

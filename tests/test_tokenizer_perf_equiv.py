@@ -1,6 +1,7 @@
 """Round-6 optimization equivalence pins: the tokenizer memoization,
-the one-pass sentence split (encode_split), and the split/join
-whitespace collapse must be BIT-IDENTICAL to the folds they replaced.
+the one-pass flat-plus-sentence-spans encode (encode_with_breaks), and
+the split/join whitespace collapse must be BIT-IDENTICAL to the folds
+they replaced.
 """
 
 from __future__ import annotations
@@ -73,13 +74,6 @@ def test_memo_overflow_path_is_value_identical():
         StableHashEncoder._memo.clear()
 
 
-def test_encode_split_equals_per_sentence_encode():
-    enc = StableHashEncoder()
-    for t in _texts():
-        expected = [enc.encode(s) for s in t.split(".")]
-        assert enc.encode_split(t, ".") == expected
-
-
 def test_encode_with_breaks_equals_encode_and_split():
     """The combined pass must reproduce BOTH folds exactly: the flat list
     is encode(text), and the span slices are the per-sentence lists."""
@@ -113,13 +107,14 @@ def test_encode_with_breaks_overflow_path_is_value_identical():
 def test_chunker_split_path_spans_equal_fallback_chunks():
     """chunk_html output for a >512-token multi-sentence doc must be
     IDENTICAL whether the split path slices cached sent_spans (the r06
-    combined pass) or re-tokenizes via encode_split (the fallback)."""
+    combined pass) or re-tokenizes each sentence with encode (the
+    fallback for encoders without the combined pass)."""
     import random
 
     from louis_crawler_legacy_spark.operators import chunking
 
     class NoBreaksEncoder(StableHashEncoder):
-        encode_with_breaks = None  # force the encode_split fallback
+        encode_with_breaks = None  # force the per-sentence encode fallback
 
     rng = random.Random(7)
     body = " ".join(
