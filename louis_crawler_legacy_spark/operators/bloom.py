@@ -42,8 +42,8 @@ Blob layout (little-endian): uint64 magic "SBLOOM01" | uint64 n_layers |
 n_layers × (uint64 m_bits, uint64 k, uint64 cap, uint64 n) | concatenated
 bitmaps (m_bits/8 bytes each).
 
-``BlobFilter`` is the cogroup merge/probe/stats driver; ``PartitionedBloom``
-is this format's codec on it, and operators/cuckoo.py supplies the other.
+``BlobFilter`` is the cogroup merge/probe driver; ``PartitionedBloom`` is
+this format's codec on it, and operators/cuckoo.py supplies the other.
 """
 
 from __future__ import annotations
@@ -62,15 +62,10 @@ BLOOM_SCHEMA = T.StructType(
         T.StructField("part_id", T.IntegerType()),
         T.StructField("bits", T.BinaryType()),
         T.StructField("n_items", T.LongType()),
-    ]
-)
-
-FILTER_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("part_id", T.IntegerType()),
+        # saturation of the blob as its merge wrote it: layer/table count
+        # and the newest layer's fill fraction (null in blob tables written
+        # before these columns existed, until the next merge)
         T.StructField("n_layers", T.IntegerType()),
-        T.StructField("n_items", T.LongType()),
-        T.StructField("capacity", T.LongType()),
         T.StructField("fill", T.DoubleType()),
     ]
 )
@@ -203,8 +198,8 @@ def insert_layers(layers: list[_Layer], h1: np.ndarray, h2: np.ndarray,
 
 
 class BlobFilter:
-    """The cogroup driver both seen-filter kinds share: merge, probe and
-    per-partition stats over (part_id, bits, n_items) blob rows.
+    """The cogroup driver both seen-filter kinds share: merge and probe
+    over (part_id, bits, n_items, n_layers, fill) blob rows.
 
     All per-row work happens inside cogrouped applyInPandas tasks; the
     driver only moves (part_id, blob) rows, never URLs, and each task
@@ -212,13 +207,14 @@ class BlobFilter:
     ``fresh()``, ``decode(blob, n_items)``, ``encode(state)``,
     ``insert(state, h1, h2) -> (state, n_added)``,
     ``contains(state, h1, h2) -> bool array`` and
-    ``stats(state) -> (n_layers, capacity, newest-layer fill)``.
+    ``stats(state) -> (n_layers, newest-layer fill)``.
     """
 
     def _update(self, blobs: DataFrame, hashes: DataFrame, op) -> DataFrame:
         """blobs(part_id, bits, n_items) ⊕ hashes(part_id, h1, h2) through
         ``op(state, h1, h2) -> (state, n_delta)``. Cogrouped per partition;
-        a partition without a blob starts from ``fresh()``."""
+        a partition without a blob starts from ``fresh()``. Each output row
+        carries the new state's ``stats()``."""
 
         def run(key, blob_pdf: pd.DataFrame, hashes_pdf: pd.DataFrame) -> pd.DataFrame:
             if len(blob_pdf):
@@ -229,11 +225,14 @@ class BlobFilter:
             state, delta = op(
                 state, hashes_pdf["h1"].to_numpy(), hashes_pdf["h2"].to_numpy()
             )
+            n_layers, fill = self.stats(state)
             return pd.DataFrame(
                 {
                     "part_id": [int(key[0])],
                     "bits": [self.encode(state)],
                     "n_items": [max(n0 + delta, 0)],
+                    "n_layers": [n_layers],
+                    "fill": [fill],
                 }
             )
 
@@ -282,22 +281,6 @@ class BlobFilter:
             .applyInPandas(run, schema=out_schema)
         )
 
-    def filter_stats(self, blobs: DataFrame) -> DataFrame:
-        """Per-partition saturation metadata (no bits leave the task): layer
-        count, items, total layer capacity, fill of the NEWEST layer (the
-        one that triggers growth)."""
-
-        def run(batches):
-            for pdf in batches:
-                rows = []
-                for part_id, bits, n in zip(pdf["part_id"], pdf["bits"], pdf["n_items"]):
-                    n_layers, cap, fill = self.stats(self.decode(bits, int(n)))
-                    rows.append((int(part_id), n_layers, int(n), cap, round(fill, 4)))
-                if rows:
-                    yield pd.DataFrame(rows, columns=FILTER_STATS_SCHEMA.names)
-
-        return blobs.mapInPandas(run, schema=FILTER_STATS_SCHEMA)
-
 
 class PartitionedBloom(BlobFilter):
     """Scalable-Bloom codec (module docstring): capacity is a starting
@@ -329,10 +312,9 @@ class PartitionedBloom(BlobFilter):
     def insert(self, layers, h1, h2) -> tuple[list[_Layer], int]:
         return insert_layers(layers, h1, h2, self.cap0, self.fpp0), len(h1)
 
-    def stats(self, layers) -> tuple[int, int, float]:
+    def stats(self, layers) -> tuple[int, float]:
         last = layers[-1]
-        return (len(layers), sum(l.cap for l in layers),
-                last.n / last.cap if last.cap else 0.0)
+        return len(layers), last.n / last.cap if last.cap else 0.0
 
 
 def with_bloom_hashes(df: DataFrame, url_col: str,

@@ -491,11 +491,10 @@ class PartitionedCuckoo(BlobFilter):
         states = insert_chain(states, h1, h2)
         return states, sum(n for _, _, n in states) - n0
 
-    def stats(self, states) -> tuple[int, int, float]:
+    def stats(self, states) -> tuple[int, float]:
         last_t, _, last_n = states[-1]
         last_cap = table_cap(last_t.shape[0])
-        return (len(states), sum(table_cap(t.shape[0]) for t, _, _ in states),
-                last_n / last_cap if last_cap else 0.0)
+        return len(states), last_n / last_cap if last_cap else 0.0
 
     def delete_blobs(self, filters: DataFrame, del_hashes: DataFrame) -> DataFrame:
         """Remove (part_id, h1, h2) keys so those URLs probe as unseen

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from louis_crawler_legacy_spark.session import release
+
 
 # Below this, orderBy().limit() (TakeOrderedAndProject: per-partition heaps
 # merged into ONE bounded partition) beats the two-pass pattern — the merge
@@ -90,21 +92,15 @@ def ranked_take(
     order_cols: tuple[str, ...],
     n: int | None = None,
     seq_col: str = "seq",
-    num_partitions: int | None = None,
-    materialize: bool = True,
 ) -> tuple[DataFrame, int]:
     """Return (df + dense 1-based ``seq_col`` ordered by ``order_cols``,
     total row count), keeping only the first ``n`` rows when given.
 
-    With materialize=True the returned DataFrame is localCheckpointed
-    (materialized, lineage-truncated) — for multi-consumer iterative
-    callers. With materialize=False the output stays lazy over the pinned
-    (checkpointed) ranged intermediate — deterministic on recompute, one
-    less materialization for single-consumer callers. The count comes from
-    the pass-2 partition-counts job either way — no extra action.
+    The returned DataFrame is localCheckpointed (materialized,
+    lineage-truncated); the count comes from the pass-2 partition-counts
+    job — no extra action.
     """
-    spark = df.sparkSession
-    p = num_partitions or spark.sparkContext.defaultParallelism
+    p = df.sparkSession.sparkContext.defaultParallelism
     cols = list(order_cols)
 
     if n is not None and n <= FAST_TAKE_MAX:
@@ -158,10 +154,8 @@ def ranked_take(
             if len(out):
                 yield out
 
-    result = ranged.mapInPandas(add_seq, schema=out_schema)
-    if materialize:
-        result = result.localCheckpoint()
-        ranged.unpersist()
+    result = ranged.mapInPandas(add_seq, schema=out_schema).localCheckpoint()
+    release(ranged)
     if n is not None:
         total = min(total, n)
     return result, total

@@ -41,7 +41,10 @@ throttle), outputs (pages, links, spans), state merge (seen, filter),
 dedup and frontier, then checkpoint. Every Spark job carries the job
 description ``r{round}:{name}`` of its stage or sub-stage (``r0:bootstrap``
 and ``expire`` outside rounds), so Spark's status store and event log fold
-a round's time by stage (``_stage``).
+a round's time by stage (``_stage``). Dedup builds a lazy plan and starts
+no job: the frontier stage's one aggregate runs it. Every round metric
+comes from a job the round runs anyway — the frontier aggregate counts
+the candidates and filter hits, the filter merge reports saturation.
 """
 
 from __future__ import annotations
@@ -68,6 +71,7 @@ from louis_crawler_legacy_spark.operators.spans import (
     SPANS_TYPE,
     spans_from_extracted,
 )
+from louis_crawler_legacy_spark.session import release
 from louis_crawler_legacy_spark.sources.tables import Warehouse, local_df
 
 ORDER_COLS = ("depth", "discovery_round", "discovery_seq", "url")
@@ -175,7 +179,6 @@ METRICS_SCHEMA = T.StructType(
         T.StructField("n_robots_blocked", T.LongType()),
         # distinct (url, depth) children that reach the seen check, i.e.
         # after the robots filter — the base n_bloom_hits is a share of
-        # (both -1 without detailed_metrics)
         T.StructField("n_candidates", T.LongType()),
         T.StructField("n_new_frontier", T.LongType()),
         T.StructField("n_bloom_hits", T.LongType()),
@@ -222,8 +225,8 @@ class CrawlConfig:
     # our warehouse persists `seen`, so even resume never refetches).
     # Set False to get MERGE-style upserts (recrawl workloads).
     unique_fetch: bool = True
-    # per-round candidate/bloom-hit counts cost extra Spark actions; tests
-    # want them, tight benchmark loops don't
+    # no effect: every round records all its metrics from jobs it runs
+    # anyway. Kept so that callers which still pass it construct.
     detailed_metrics: bool = True
     # checkpoint cadence: 1 = snapshot state tables every round (max
     # resumability), k>1 = every k rounds, 0 = only at the end of run().
@@ -319,10 +322,10 @@ class RoundStats:
     n_new_frontier: int
     n_bloom_hits: int
     frontier_size_after: int
+    n_filter_layers: int
+    filter_fill: float
     wall_sec: float = 0.0
     batch_urls: list[str] = field(default_factory=list)
-    n_filter_layers: int = -1
-    filter_fill: float = -1.0
 
 
 def _host(col):
@@ -343,19 +346,6 @@ def _seen_rows(df: DataFrame, url, host, status: str,
         F.xxhash64(url).alias("url_hash"),
         F.lit(round_no).alias("round_added"), F.lit(status).alias("status"),
     )
-
-
-def _release(df: DataFrame) -> None:
-    """Drop a DataFrame's cached or localCheckpointed blocks.
-    ``unpersist()`` only covers ``cache()``: a localCheckpoint's blocks
-    belong to the RDD under its ``LogicalRDD`` leaf and stay until that
-    RDD is unpersisted. The blocks are lineage-truncated, so the caller
-    must know that nothing reads ``df`` any more."""
-    df.unpersist()
-    plan = df._jdf.queryExecution().logical()
-    if (plan.getClass().getSimpleName() == "LogicalRDD"
-            and plan.rdd().isLocallyCheckpointed()):
-        plan.rdd().unpersist(False)
 
 
 class CrawlEngine:
@@ -470,7 +460,7 @@ class CrawlEngine:
                           ("_seen_df", seen_df), ("_blooms_df", blooms_df)):
             old = getattr(self, attr)
             if old is not None and old is not new:
-                _release(old)
+                release(old)
             setattr(self, attr, new)
 
     def checkpoint(self, round_no: int) -> None:
@@ -653,7 +643,7 @@ class CrawlEngine:
                 self.robots_table.upsert(
                     rules, key="host", meta={"round": round_no, "op": "robots"}
                 )
-                _release(rules)
+                release(rules)
             else:
                 self.robots_table.append(
                     rules, {"round": round_no, "op": "robots"}
@@ -722,7 +712,7 @@ class CrawlEngine:
                 # extra action
                 batch_urls = []
         if n_batch == 0:
-            _release(batch)
+            release(batch)
             return None
 
         with self._stage(round_no, "fetch"):
@@ -732,12 +722,11 @@ class CrawlEngine:
         futures = self._write_outputs(round_no, pages_src, extracted)
         seen_fut, blooms_fut = self._merge_state(
             round_no, extracted, errored, robots_blocked)
-        with self._stage(round_no, "dedup"):
-            probed, new_cand, kept, n_candidates, n_bloom_hits = self._dedup(
-                batch, pages_src, extracted, robots_live)
+        probed, new_cand, kept = self._dedup(
+            batch, pages_src, extracted, robots_live)
         with self._stage(round_no, "frontier"):
-            frontier_new, frontier_size, n_new = self._advance_frontier(
-                round_no, kept, new_cand)
+            frontier_new, counts = self._advance_frontier(
+                round_no, kept, new_cand, probed)
 
         # round barrier: join every job this round submitted, surfacing the
         # first failure. After the join nothing reads the replaced state or
@@ -746,37 +735,24 @@ class CrawlEngine:
         # why no job may outlive its round.
         for fut in futures:
             fut.result()
-        self._swap_state(frontier_new, seen_fut.result(), blooms_fut.result())
+        blooms_new, n_filter_layers, filter_fill = blooms_fut.result()
+        self._swap_state(frontier_new, seen_fut.result(), blooms_new)
         for df in (batch, fetched, extracted, pages_src, probed):
-            _release(df)
+            release(df)
         self._dirty = True
         self._last_round = round_no
 
-        # filter-saturation visibility: one tiny job over the ≤P installed
-        # blob rows — only their headers are read, no bits leave the tasks
-        n_filter_layers, filter_fill = -1, -1.0
-        if cfg.detailed_metrics:
-            with self._stage(round_no, "filter"):
-                fs = self.pb.filter_stats(self._blooms_df).agg(
-                    F.max("n_layers").alias("layers"),
-                    F.max("fill").alias("fill"),
-                ).first()
-            n_filter_layers = int(fs["layers"] or 0)
-            filter_fill = float(fs["fill"] or 0.0)
-
-        wall = time.time() - t0
-        n_errored = n_batch - n_scraped - n_robots_blocked
         stats = RoundStats(
             round=round_no,
             n_batch=n_batch,
             n_scraped=n_scraped,
-            n_errored=n_errored,
+            n_errored=n_batch - n_scraped - n_robots_blocked,
             n_robots_blocked=n_robots_blocked,
-            n_candidates=n_candidates,
-            n_new_frontier=n_new,
-            n_bloom_hits=n_bloom_hits,
-            frontier_size_after=frontier_size,
-            wall_sec=wall,
+            n_candidates=counts["n_candidates"],
+            n_new_frontier=counts["n_new"],
+            n_bloom_hits=counts["n_bloom_hits"],
+            frontier_size_after=counts["size"],
+            wall_sec=time.time() - t0,
             batch_urls=batch_urls,
             n_filter_layers=n_filter_layers,
             filter_fill=filter_fill,
@@ -947,7 +923,7 @@ class CrawlEngine:
                     learned, key="host",
                     meta={"round": round_no, "op": "throttle"},
                 )
-                _release(learned)
+                release(learned)
         return (fetched, extracted, pages_src, errored, robots_live,
                 robots_blocked, n_scraped, n_robots_blocked)
 
@@ -986,9 +962,13 @@ class CrawlEngine:
             F.col("url").alias("source_url"),
             F.explode("children").alias("destination_url"),
         )
+        # a round's edges are unique without a dedup shuffle:
+        # children_from_hrefs dedups each page's children and a round's
+        # page urls are distinct
         if cfg.fetcher == "http":
             # record the requested→final redirect as a link edge so the
-            # graph keeps the alias relationship
+            # graph keeps the alias relationship — the one way an edge
+            # can repeat within a round
             edges = edges.unionByName(
                 extracted.filter(
                     F.col("url") != F.col("requested_url")
@@ -996,11 +976,10 @@ class CrawlEngine:
                     F.col("requested_url").alias("source_url"),
                     F.col("url").alias("destination_url"),
                 )
-            )
-        edges = edges.dropDuplicates(["source_url", "destination_url"])
+            ).dropDuplicates(["source_url", "destination_url"])
         if cfg.unique_fetch:
-            # src fetched once ⇒ (src,dst) can never repeat across rounds;
-            # within-round dedup above suffices (J6 insert-if-absent holds)
+            # src fetched once ⇒ (src,dst) can never repeat across rounds
+            # (J6 insert-if-absent holds)
             futures.append(self._pool.submit(
                 self._labelled, round_no, "links",
                 self.links.append, edges, {"round": round_no}))
@@ -1022,9 +1001,20 @@ class CrawlEngine:
                     F.col("url").alias("doc_id"), "content", "children"
                 )
             )
-            futures.append(self._pool.submit(
-                self._labelled, round_no, "spans",
-                self.documents.append, spans_df, {"round": round_no}))
+            if cfg.unique_fetch:
+                futures.append(self._pool.submit(
+                    self._labelled, round_no, "spans",
+                    self.documents.append, spans_df, {"round": round_no}))
+            else:
+                # MERGE by doc_id, as pages by url. Materialize first:
+                # upsert reads its input twice, and the span UDF must not
+                # run twice
+                with self._stage(round_no, "spans"):
+                    spans_df = spans_df.localCheckpoint()
+                    self.documents.upsert(
+                        spans_df, key="doc_id", meta={"round": round_no}
+                    )
+                    release(spans_df)
         return futures
 
     def _merge_state(self, round_no: int, extracted: DataFrame,
@@ -1105,18 +1095,27 @@ class CrawlEngine:
             lambda: self._seen_df.unionByName(seen_add)
             .coalesce(self._state_parts).localCheckpoint(),
         )
-        blooms_fut = self._pool.submit(
-            self._labelled, round_no, "filter",
-            lambda: self.pb.merge_blobs(
+
+        def merge_filter():
+            # lazy checkpoint: collecting the ≤P blob rows' saturation
+            # columns is the one full-partition job that materializes it.
+            # The checkpoint itself is installed — a projection over it
+            # would hide its LogicalRDD from release() and leak its blocks.
+            blobs = self.pb.merge_blobs(
                 self._blooms_df, add_hashes
-            ).localCheckpoint(),
-        )
+            ).localCheckpoint(eager=False)
+            rows = blobs.select("n_layers", "fill").collect()
+            return (blobs, max((r.n_layers for r in rows), default=0),
+                    max((r.fill for r in rows), default=0.0))
+
+        blooms_fut = self._pool.submit(
+            self._labelled, round_no, "filter", merge_filter)
         return seen_fut, blooms_fut
 
     def _dedup(self, batch: DataFrame, pages_src: DataFrame,
                extracted: DataFrame, robots_live: DataFrame | None):
         """Dedup stage: returns (probed [cached], new_cand, frontier ∖
-        batch, n_candidates, n_bloom_hits)."""
+        batch), all lazy — the frontier stage's aggregate runs them."""
         cfg = self.config
         # candidates: children at depth+1 ≤ max_depth (O2), discovery order =
         # (src batch_seq, link position), first-occurrence dedup by url
@@ -1162,17 +1161,6 @@ class CrawlEngine:
             cand, "cand_url", cfg.num_partitions
         )
         probed = self.pb.probe(cand_h, self._blooms_df).cache()
-        n_candidates = n_bloom_hits = -1
-        if cfg.detailed_metrics:
-            # ONE aggregate over the cached probe output the broadcasts
-            # below read anyway, so both counts share one base. Hits are
-            # w.r.t. the through-r-1 filter (a candidate linking back to a
-            # page fetched this round is removed by the batch anti-join)
-            c = probed.agg(
-                F.count("*").alias("n"),
-                F.count_if(F.col("maybe_seen")).alias("hits"),
-            ).first()
-            n_candidates, n_bloom_hits = int(c["n"]), int(c["hits"])
         maybe = probed.filter(F.col("maybe_seen"))
         seen_hits = self._seen_df.join(
             self._bc(maybe.select(F.col("cand_url").alias("url"))),
@@ -1209,14 +1197,14 @@ class CrawlEngine:
             self._bc(exclude.select(F.col("url").alias("cand_url"))),
             "cand_url", "left_anti",
         ).join(self._bc(pending), ["cand_url", "next_depth"], "left_anti")
-        return (probed, new_cand, frontier_after_removal, n_candidates,
-                n_bloom_hits)
+        return probed, new_cand, frontier_after_removal
 
     def _advance_frontier(self, round_no: int,
                           frontier_after_removal: DataFrame,
-                          new_cand: DataFrame):
+                          new_cand: DataFrame, probed: DataFrame):
         """Frontier stage: frontier′ = (frontier ∖ batch) ∪ new rows,
-        localCheckpointed. Returns (frontier′, its size, n_new)."""
+        localCheckpointed. Returns (frontier′, counts): its size, n_new,
+        and the round's n_candidates and n_bloom_hits."""
         # discovery order key: encode (batch_seq, pos) into ONE long —
         # (batch_seq << 32) | pos is monotone and unique over the round's
         # candidates (one parent per batch_seq, distinct pos per link), so
@@ -1247,14 +1235,25 @@ class CrawlEngine:
             .coalesce(self._state_parts)
             .localCheckpoint(eager=False)
         )
-        # ONE fused job on the just-materialized state: n_new (the
-        # north-rule 'deduped' volume) + frontier size — r01 paid a full
-        # probe/anti-join lineage recompute for n_new plus a second count
-        sizes = frontier_new.agg(
-            F.count("*").alias("sz"),
-            F.count(F.when(F.col("discovery_round") == round_no, 1)).alias("nn"),
-        ).first()
-        return frontier_new, int(sizes["sz"]), int(sizes["nn"])
+        # ONE fused job counts the round: frontier′ rows tagged _f (size,
+        # and n_new — the north-rule 'deduped' volume) beside the cached
+        # probe output (candidates, and filter hits w.r.t. the through-r-1
+        # filter; a candidate linking back to a page fetched this round is
+        # removed by the batch anti-join). An empty probe counts zeros.
+        f, hit = F.col("_f"), F.col("_hit")
+        tagged = frontier_new.select(
+            F.lit(True).alias("_f"),
+            (F.col("discovery_round") == round_no).alias("_hit"),
+        ).unionByName(probed.select(
+            F.lit(False).alias("_f"), F.col("maybe_seen").alias("_hit")
+        ))
+        counts = tagged.agg(
+            F.count_if(f).alias("size"),
+            F.count_if(f & hit).alias("n_new"),
+            F.count_if(~f).alias("n_candidates"),
+            F.count_if(~f & hit).alias("n_bloom_hits"),
+        ).first().asDict()
+        return frontier_new, counts
 
     def run(self, seeds: list[str] | None = None, max_rounds: int = 10_000,
             start_round: int = 1) -> list[RoundStats]:
@@ -1341,8 +1340,8 @@ class CrawlEngine:
             self.blooms.overwrite(
                 blooms_new, {"round": r, "op": "expire", "filter": cfg.seen_filter}
             )
-            _release(marked)
-            _release(blooms_new)
+            release(marked)
+            release(blooms_new)
             self._swap_state(None, None, None)  # reload from tables next round
             return n_expired
 

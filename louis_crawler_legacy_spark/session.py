@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 # Arrow batch size for pandas UDFs: large enough to amortize Python call
@@ -82,6 +82,19 @@ def get_spark(
     if master.startswith("local-cluster") or "://" in master:
         ship_package(spark)
     return spark
+
+
+def release(df: DataFrame) -> None:
+    """Drop a DataFrame's cached or localCheckpointed blocks.
+    ``unpersist()`` only covers ``cache()``: a localCheckpoint's blocks
+    belong to the RDD under its ``LogicalRDD`` leaf and stay until that
+    RDD is unpersisted. The blocks are lineage-truncated, so the caller
+    must know that nothing reads ``df`` any more."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().logical()
+    if (plan.getClass().getSimpleName() == "LogicalRDD"
+            and plan.rdd().isLocallyCheckpointed()):
+        plan.rdd().unpersist(False)
 
 
 _PYFILES_ZIP: str | None = None

@@ -86,7 +86,6 @@ def main() -> None:
         checkpoint_every=args.checkpoint_every,
         build_spans=args.build_spans,
         collect_batch_urls=False,
-        detailed_metrics=False,
         fetcher=args.fetcher,
         fetch_timeout=args.fetch_timeout,
         fetch_robots=args.fetch_robots,

@@ -74,12 +74,27 @@ PAGES = {
 REDIRECTS = {"/moved": "/canonical", "/moved2": "/canonical"}
 
 
+class _Server(ThreadingHTTPServer):
+    """Stamps each connection when it is accepted, before a handler thread
+    starts and parses the request: the fetcher paces requests by send
+    time, and arrival is the server-side time closest to it."""
+
+    def __init__(self, *args):
+        super().__init__(*args)
+        self.accepted: dict[tuple, float] = {}  # client address → ts
+
+    def process_request(self, request, client_address):
+        self.accepted[client_address] = time.monotonic()
+        super().process_request(request, client_address)
+
+
 class _Handler(BaseHTTPRequestHandler):
     server_version = "test"
-    request_log: list[tuple[float, str]] = []  # (monotonic ts, path)
+    request_log: list[tuple[float, str]] = []  # (monotonic arrival, path)
 
     def do_GET(self):
-        type(self).request_log.append((time.monotonic(), self.path))
+        arrived = self.server.accepted.pop(self.client_address)
+        type(self).request_log.append((arrived, self.path))
         if self.path.startswith("/slow/"):
             time.sleep(0.3)
             data = (
@@ -112,7 +127,7 @@ class _Handler(BaseHTTPRequestHandler):
 
 @pytest.fixture(scope="module")
 def server():
-    srv = ThreadingHTTPServer(("127.0.0.1", 0), _Handler)
+    srv = _Server(("127.0.0.1", 0), _Handler)
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
     yield f"http://127.0.0.1:{srv.server_address[1]}"
@@ -165,7 +180,7 @@ def test_per_host_pacing_spacing_and_results(spark, server):
     assert len(out) == 6 and all(r.status == 200 for r in out)
     # reconstruct per-host spacing from the rows' fetch order server-side:
     # each host's requests must be >= 0.29s apart (tolerance for clock)
-    log = list(_Handler.request_log)
+    log = sorted(_Handler.request_log)  # handler threads append out of order
     assert len(log) == 6
     # round-robin order means hosts alternate → total wall ~2 intervals,
     # not 4 (interleaving proof): first and last request < 3*interval apart

@@ -166,8 +166,7 @@ def test_config_rejects_unknown_choice(field, value):
 
 
 STAGES = ("bootstrap", "select", "robots", "fetch", "throttle", "pages",
-          "links", "spans", "seen", "filter", "dedup", "frontier",
-          "checkpoint")
+          "links", "spans", "seen", "filter", "frontier", "checkpoint")
 
 
 def test_every_engine_job_carries_its_stage_label(spark, tmp_path):
@@ -197,7 +196,27 @@ def test_every_engine_job_carries_its_stage_label(spark, tmp_path):
     labels = {d for i, d in jobs().items() if i > before}
     pattern = re.compile(rf"r\d+:({'|'.join(STAGES)})|expire")
     assert all(d is not None and pattern.fullmatch(d) for d in labels), labels
-    assert {"r2:spans", "r2:dedup", "expire"} <= labels
+    assert {"r2:spans", "r2:frontier", "expire"} <= labels
+
+
+def test_every_metric_recorded_whatever_detailed_metrics(spark, tmp_path):
+    """Each round records all its metrics from jobs it runs anyway: the
+    metrics table is the same with detailed_metrics off and on (apart
+    from wall time), and no metric is a -1 placeholder."""
+    rows = {}
+    for detailed in (False, True):
+        cfg = CrawlConfig(num_partitions=4, bloom_capacity=10_000,
+                          max_depth=2, batch_size=10,
+                          detailed_metrics=detailed)
+        eng = CrawlEngine(spark, corpus_mod.corpus_df(spark, CORPUS),
+                          str(tmp_path / f"wh{detailed}"), cfg)
+        assert eng.run(seeds=SEEDS)
+        rows[detailed] = sorted(
+            eng.metrics.read().drop("wall_sec").collect(), key=lambda r: r.round
+        )
+    assert rows[False] == rows[True]
+    assert all(v >= 0 for r in rows[True] for v in r), rows[True]
+    assert all(r.n_filter_layers >= 1 for r in rows[True])
 
 
 def test_checkpoint_resume_identity(spark, tmp_path):
@@ -286,7 +305,7 @@ def test_recrawl_upsert_semantics(spark, tmp_path):
     kwargs = dict(max_depth=1, batch_size=10)
     cfg1 = CrawlConfig(num_partitions=4, bloom_capacity=10_000,
                        unique_fetch=False, base_timestamp=1_700_000_000,
-                       **kwargs)
+                       build_spans=True, **kwargs)
     cdf = corpus_mod.corpus_df(spark, CORPUS)
     eng = CrawlEngine(spark, cdf, str(tmp_path / "wh"), cfg1)
     eng.run(seeds=SEEDS)
@@ -307,6 +326,8 @@ def test_recrawl_upsert_semantics(spark, tmp_path):
     links2 = {(r.source_url, r.destination_url)
               for r in eng2.links.read().collect()}
     assert links2 == links1  # ON CONFLICT DO NOTHING
+    doc_ids = [r.doc_id for r in eng2.documents.read().collect()]
+    assert sorted(doc_ids) == sorted(pages2)  # documents MERGE by doc_id
 
 
 def test_per_host_crawl_delay_budgets(spark, tmp_path):

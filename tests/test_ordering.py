@@ -67,6 +67,24 @@ def test_n_larger_than_input_and_empty(spark, force_two_pass, monkeypatch):
     assert n2 == 0 and got2.count() == 0
 
 
+def test_two_pass_releases_its_pinned_intermediate(spark, monkeypatch):
+    """The two-pass path pins its range-partitioned intermediate with a
+    localCheckpoint; once the result is materialized those blocks must be
+    freed, so repeated calls leave the persisted-RDD count flat."""
+    from louis_crawler_legacy_spark.operators import ordering
+    from louis_crawler_legacy_spark.session import release
+
+    monkeypatch.setattr(ordering, "FAST_TAKE_MAX", 0)
+    df = spark.createDataFrame(_rows(500, 4), ["depth", "rnd", "url"])
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    for _ in range(2):
+        got, n = ranked_take(df, ("depth", "rnd", "url"), n=64, seq_col="seq")
+        assert n == 64 and got.count() == 64
+        release(got)
+    assert persisted().size() == before
+
+
 def test_large_round_small_shuffle_partitions(spark):
     """50k-candidate-scale numbering with few shuffle partitions — the
     production shape where the old unpartitioned window was one task."""

@@ -442,3 +442,23 @@ def test_round_dedup_nests_two_broadcast_levels(spark, tmp_path, monkeypatch):
         ]
         assert scans, f"no {schema.fieldNames()} state scan in the plan"
         assert all("Exchange" not in anc for anc in scans)
+
+
+def test_corpus_links_append_plans_no_exchange(spark, tmp_path):
+    """Corpus-mode link edges are unique by construction (each page's
+    children are deduplicated and a round's page urls are distinct), so
+    the links append runs no dedup shuffle: its plan has no Exchange."""
+    eng, seeds = _crawl_engine(spark, str(tmp_path / "wh"))
+    plans = []
+    append = eng.links.append
+
+    def spy(df, meta=None):
+        plans.append(_physical(df))
+        return append(df, meta)
+
+    eng.links.append = spy
+    eng.bootstrap(seeds)
+    assert eng.run_round(1) is not None
+    (plan,) = plans
+    names = [n.nodeName() for n, _ in _nodes(plan)]
+    assert not [n for n in names if "Exchange" in n], names
