@@ -24,7 +24,9 @@ UDF and the numpy Bloom probe):
   seen′ = seen ∪ batch;  blooms′ = blooms ⊕ batch;  metrics += round row
 
 (⋉ semi-join, ▷ anti-join, bc = broadcast: the state streams in place and
-no broadcast nests more than two levels deep.)
+no broadcast nests more than two levels deep. Each bc is a per-round
+decision from the round's own counts — the side's row bound against
+Spark's autoBroadcastJoinThreshold — and a side over it joins unhinted.)
 
 Scale notes: frontier/seen are hash-partitioned by canonical host (north
 rule axis A) while the Bloom layer partitions by URL hash (a hot host must
@@ -78,13 +80,25 @@ ORDER_COLS = ("depth", "discovery_round", "discovery_seq", "url")
 
 # corpus-mode fetch-output partition sizing: the join output coalesces to
 # max(cores, n_batch / _FETCH_ROWS_PER_PART) partitions — one per core for
-# scheduling efficiency (extraction is ~1 ms/page since r06), but never
-# more than ~_FETCH_ROWS_PER_PART wide-html rows per task, so a big batch
+# scheduling efficiency (extraction measures 2.2 ms per 46 KB page,
+# perfbench page.extract_ms on 4 CPUs), but never more than
+# ~_FETCH_ROWS_PER_PART wide-html rows per task, so a big batch
 # on a small executor (ladder's local-cluster[1,2] at batch 32k) cannot
 # pack GBs of page rows into one cache partition (measured:
 # BytesToBytesMap allocation failure at 8 GiB without the bound). 2048
 # rows ≈ 4 Arrow batches ≈ ~150 MB at bench page weight.
 _FETCH_ROWS_PER_PART = 2048
+
+# bytes per row of a round's broadcast join side, for _bc's size check
+# against spark.sql.autoBroadcastJoinThreshold: the largest dataSize /
+# numOutputRows over the BroadcastExchanges of a bench.py FRONTIER_CFG
+# crawl (20k pages, batch 8,192, six rounds; local[4]), counting the
+# exchanges of ≥ 1,000 rows. Whole batch rows (the fetch join) measured
+# 208-224 B/row, url-only sides 138-175. Measured at
+# spark.buffer.pageSize=64k: at the default page size every one of these
+# relations reports one whole memory page (32 MiB at a 5 GiB driver), for
+# 2,048 rows as for 8,192, which says nothing per row.
+_BC_ROW_BYTES = 224
 
 FRONTIER_SCHEMA = T.StructType(
     [
@@ -100,7 +114,6 @@ SEEN_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType()),
         T.StructField("host", T.StringType()),
-        T.StructField("url_hash", T.LongType()),
         T.StructField("round_added", T.IntegerType()),
         T.StructField("status", T.StringType()),  # scraped | errored
     ]
@@ -288,12 +301,6 @@ class CrawlConfig:
     # recrawl path for those.) The RFC's own cacheability guidance is
     # 24 h (§2.4) — rounds are the engine's clock.
     robots_ttl_rounds: int | None = None
-    # broadcast the batch into the corpus scan (right while batches fit the
-    # broadcast budget — the html column never shuffles). At 10^7-row
-    # production batches the broadcast is GB-scale: set False to let
-    # AQE/Catalyst pick the join (shuffle-hash on url is the safe fallback;
-    # the corpus side is already hash-partitioned by url)
-    broadcast_batch: bool = True
     # build the interleaved span payload (documents table, input_hint schema)
     # for every fetched page inside the round — chunking + link spans. This
     # is the engine's actual product at training-data scale; enabled in the
@@ -309,6 +316,21 @@ class CrawlConfig:
                     f"CrawlConfig.{name} must be one of {allowed}, "
                     f"got {getattr(self, name)!r}"
                 )
+        if self.fetcher == "corpus":
+            # the corpus replay has no network: these would silently crawl
+            # without robots compliance or pacing
+            for name, on in (
+                ("fetch_robots", self.fetch_robots),
+                ("robots_ttl_rounds", self.robots_ttl_rounds is not None),
+                ("adaptive_throttle", self.adaptive_throttle),
+                ("host_min_interval", self.host_min_interval > 0),
+                ("renderer", self.renderer is not None),
+            ):
+                if on:
+                    raise ValueError(
+                        f"CrawlConfig.{name} needs fetcher='http', "
+                        f"got fetcher='corpus'"
+                    )
 
 
 @dataclass
@@ -343,7 +365,6 @@ def _seen_rows(df: DataFrame, url, host, status: str,
     """``df``'s ``url`` and ``host`` columns as SEEN_SCHEMA rows."""
     return df.select(
         url.alias("url"), host.alias("host"),
-        F.xxhash64(url).alias("url_hash"),
         F.lit(round_no).alias("round_added"), F.lit(status).alias("status"),
     )
 
@@ -679,23 +700,26 @@ class CrawlEngine:
         with self._stage(round_no, name):
             return fn(*args)
 
-    # every ≤batch-sized join side goes through _bc(): in the small-round
-    # regime (broadcast_batch) the corpus, seen and frontier STATE never
-    # shuffle — each streams in place against a ≤batch-sized broadcast
-    # and only the matched keys broadcast back out, where a plain join
-    # would exchange BOTH sides every round. At 10^7-row production
-    # batches the probe sets outgrow the broadcast budget:
-    # broadcast_batch=False runs the same joins unhinted (PLANS.md
-    # multi-executor note).
-    def _bc(self, df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if self.config.broadcast_batch else df
+    def _bc(self, df: DataFrame, rows: int) -> DataFrame:
+        """``df`` hinted for broadcast iff its bound of ``rows`` rows at
+        ``_BC_ROW_BYTES`` fits Spark's own autoBroadcastJoinThreshold
+        (≤ 0: never, Spark's meaning). Hinted, the corpus, seen and
+        frontier state stream in place against the round-sized side and
+        only the matched keys broadcast back, where a plain join would
+        exchange both sides every round. A round too large for the budget
+        runs the same join unhinted and Spark picks the strategy."""
+        limit = self.spark._jsparkSession.sessionState().conf() \
+            .autoBroadcastJoinThreshold()
+        hint = limit > 0 and rows * _BC_ROW_BYTES <= limit
+        return F.broadcast(df) if hint else df
 
-    def _unseen(self, df: DataFrame) -> DataFrame:
-        """df ▷ seen as seen ⋉ bc(df urls), then df ▷ bc(those hits)."""
+    def _unseen(self, df: DataFrame, rows: int) -> DataFrame:
+        """df ▷ seen as seen ⋉ bc(df urls), then df ▷ bc(those hits);
+        ``rows`` bounds df's row count."""
         hits = self._seen_df.join(
-            self._bc(df.select("url")), "url", "left_semi"
+            self._bc(df.select("url"), rows), "url", "left_semi"
         ).select("url")
-        return df.join(self._bc(hits), "url", "left_anti")
+        return df.join(self._bc(hits, rows), "url", "left_anti")
 
     def run_round(self, round_no: int) -> RoundStats | None:
         cfg = self.config
@@ -717,13 +741,16 @@ class CrawlEngine:
 
         with self._stage(round_no, "fetch"):
             (fetched, extracted, pages_src, errored, robots_live,
-             robots_blocked, n_scraped, n_robots_blocked) = self._fetch(
-                round_no, batch, n_batch)
+             robots_blocked, n_scraped, n_children,
+             n_robots_blocked) = self._fetch(round_no, batch, n_batch)
         futures = self._write_outputs(round_no, pages_src, extracted)
         seen_fut, blooms_fut = self._merge_state(
-            round_no, extracted, errored, robots_blocked)
+            round_no, extracted, errored, robots_blocked, n_batch)
+        # the candidate-side join sets hold at most the round's children
+        # plus its batch (http's exclude set adds its final urls)
         probed, new_cand, kept = self._dedup(
-            batch, pages_src, extracted, robots_live)
+            batch, pages_src, extracted, robots_live, n_batch,
+            n_children + n_batch)
         with self._stage(round_no, "frontier"):
             frontier_new, counts = self._advance_frontier(
                 round_no, kept, new_cand, probed)
@@ -780,7 +807,7 @@ class CrawlEngine:
         robots_live = robots_blocked = None
         n_robots_blocked = 0
         fetch_batch = batch
-        if cfg.fetch_robots and cfg.fetcher == "http":
+        if cfg.fetch_robots:
             with self._stage(round_no, "robots"):
                 robots_live, fetch_batch, robots_blocked = self._apply_robots(
                     batch, round_no
@@ -827,7 +854,7 @@ class CrawlEngine:
             )
         else:
             hits = self.corpus.drop("host").join(
-                self._bc(batch), "url", "inner"
+                self._bc(batch, n_batch), "url", "inner"
             )
             # misses = batch ∖ hits.urls ≡ batch ∖ corpus.urls (hits.url
             # is exactly batch ∩ corpus by the inner join above). The r05
@@ -837,7 +864,8 @@ class CrawlEngine:
             # ≤ batch rows and its broadcast build scans the cached corpus
             # column-pruned once, so the per-round broadcast is O(batch).
             misses = (
-                batch.join(self._bc(hits.select("url")), "url", "left_anti")
+                batch.join(self._bc(hits.select("url"), n_batch), "url",
+                           "left_anti")
                 .withColumn("status", F.lit(None).cast("int"))
                 .withColumn("html", F.lit(None).cast("string"))
             )
@@ -846,9 +874,10 @@ class CrawlEngine:
             # r05 extraction at ~35 ms/page) plus the misses side, so a
             # ≤batch-size round ran EVERY downstream stage (extract count,
             # candidate window map side, seen_add, the three output
-            # appends) as 130-260 mostly-empty tasks. Extraction is now
-            # ~1 ms/page (memoized tokenizer + split/join collapse), so
-            # per-task skew no longer needs 4x over-partitioning and the
+            # appends) as 130-260 mostly-empty tasks. Extraction now
+            # measures 2.2 ms per 46 KB page (perfbench page.extract_ms;
+            # memoized tokenizer + split/join collapse), so per-task
+            # skew no longer needs 4x over-partitioning and the
             # per-stage scheduling overhead dominates. coalesce is NARROW
             # (no shuffle, html never moves; the coalescer groups parent
             # partitions by location) and scale-adaptive: one partition
@@ -874,7 +903,12 @@ class CrawlEngine:
             passthrough=["url", "requested_url", "host", "depth",
                          "discovery_round", "discovery_seq", "batch_seq"],
         ).cache()
-        n_scraped = extracted.count()
+        # one job: the page count, and the children count that bounds the
+        # round's candidate-side join sets (_bc)
+        n_scraped, n_children = extracted.agg(
+            F.count(F.lit(1)),
+            F.coalesce(F.sum(F.size("children")), F.lit(0)),
+        ).first()
         # errored rows are recorded under the REQUESTED url — that's the
         # frontier entry that must never be retried
         errored = fetched.filter(~F.col("success")).select(
@@ -894,7 +928,7 @@ class CrawlEngine:
                 .filter(F.col("_rn") == 1)
                 .drop("_rn")
             )
-            pages_src = self._unseen(first_per_url).cache()
+            pages_src = self._unseen(first_per_url, n_batch).cache()
         else:
             pages_src = extracted
 
@@ -925,7 +959,7 @@ class CrawlEngine:
                 )
                 release(learned)
         return (fetched, extracted, pages_src, errored, robots_live,
-                robots_blocked, n_scraped, n_robots_blocked)
+                robots_blocked, n_scraped, n_children, n_robots_blocked)
 
     def _write_outputs(self, round_no: int, pages_src: DataFrame,
                        extracted: DataFrame) -> list:
@@ -1018,7 +1052,8 @@ class CrawlEngine:
         return futures
 
     def _merge_state(self, round_no: int, extracted: DataFrame,
-                     errored: DataFrame, robots_blocked: DataFrame | None):
+                     errored: DataFrame, robots_blocked: DataFrame | None,
+                     n_batch: int):
         """State-merge stage: seen ∪ batch and the filter-blob merge on the
         round pool; returns their futures."""
         cfg = self.config
@@ -1061,13 +1096,14 @@ class CrawlEngine:
                 seen_add.groupBy("url")
                 .agg(
                     F.min_by(
-                        F.struct("host", "url_hash", "round_added", "status"),
+                        F.struct("host", "round_added", "status"),
                         _prio,
                     ).alias("_s")
                 )
                 .select("url", "_s.*")
             )
-            seen_add = self._unseen(seen_add)
+            # ≤ one requested and one final url per batch url
+            seen_add = self._unseen(seen_add, 2 * n_batch)
         # localCheckpoint: materialize AND truncate the logical plan —
         # without it the state lineage grows every round and Catalyst
         # re-analysis goes exponential (the classic iterative-job trap).
@@ -1113,9 +1149,12 @@ class CrawlEngine:
         return seen_fut, blooms_fut
 
     def _dedup(self, batch: DataFrame, pages_src: DataFrame,
-               extracted: DataFrame, robots_live: DataFrame | None):
+               extracted: DataFrame, robots_live: DataFrame | None,
+               n_batch: int, n_cand: int):
         """Dedup stage: returns (probed [cached], new_cand, frontier ∖
-        batch), all lazy — the frontier stage's aggregate runs them."""
+        batch), all lazy — the frontier stage's aggregate runs them.
+        ``n_batch`` and ``n_cand`` bound the batch-side and candidate-side
+        join sets for ``_bc``."""
         cfg = self.config
         # candidates: children at depth+1 ≤ max_depth (O2), discovery order =
         # (src batch_seq, link position), first-occurrence dedup by url
@@ -1163,7 +1202,7 @@ class CrawlEngine:
         probed = self.pb.probe(cand_h, self._blooms_df).cache()
         maybe = probed.filter(F.col("maybe_seen"))
         seen_hits = self._seen_df.join(
-            self._bc(maybe.select(F.col("cand_url").alias("url"))),
+            self._bc(maybe.select(F.col("cand_url").alias("url")), n_cand),
             "url", "left_semi",
         ).select("url")
         # filter misses are definitively-new only w.r.t. rounds ≤ r-1 —
@@ -1181,22 +1220,23 @@ class CrawlEngine:
         # `(url, depth) not in pending`, :610-616) — vs post-removal
         # frontier
         frontier_after_removal = self._frontier_df.join(
-            self._bc(batch.select("url")), "url", "left_anti"
+            self._bc(batch.select("url"), n_batch), "url", "left_anti"
         )
         pending = frontier_after_removal.join(
             self._bc(probed.select(
                 F.col("cand_url").alias("url"),
                 F.col("next_depth").alias("depth"),
-            )),
+            ), n_cand),
             ["url", "depth"], "left_semi",
         ).select(
             F.col("url").alias("cand_url"),
             F.col("depth").alias("next_depth"),
         )
         new_cand = probed.join(
-            self._bc(exclude.select(F.col("url").alias("cand_url"))),
+            self._bc(exclude.select(F.col("url").alias("cand_url")), n_cand),
             "cand_url", "left_anti",
-        ).join(self._bc(pending), ["cand_url", "next_depth"], "left_anti")
+        ).join(self._bc(pending, n_cand), ["cand_url", "next_depth"],
+               "left_anti")
         return probed, new_cand, frontier_after_removal
 
     def _advance_frontier(self, round_no: int,

@@ -165,6 +165,21 @@ def test_config_rejects_unknown_choice(field, value):
         CrawlConfig(**{field: value})
 
 
+@pytest.mark.parametrize(
+    "field,value",
+    [("fetch_robots", True), ("robots_ttl_rounds", 3),
+     ("adaptive_throttle", True), ("host_min_interval", 0.5),
+     ("renderer", lambda url, html: html)],
+)
+def test_config_rejects_http_option_with_corpus_fetcher(field, value):
+    """The corpus replay has no network: an http-only option with it is an
+    error naming the option, not a crawl that silently ignores it."""
+    with pytest.raises(ValueError, match=f"CrawlConfig.{field} needs "
+                                         f"fetcher='http'"):
+        CrawlConfig(**{field: value})
+    CrawlConfig(fetcher="http", **{field: value})
+
+
 STAGES = ("bootstrap", "select", "robots", "fetch", "throttle", "pages",
           "links", "spans", "seen", "filter", "frontier", "checkpoint")
 
@@ -410,23 +425,104 @@ def test_select_batch_multi_depth_url(spark, tmp_path):
     ]
 
 
-def test_broadcast_batch_knob_equivalent(spark, tmp_path):
-    """broadcast_batch=False (the 10^7-row-batch fallback: AQE picks the
-    join) must produce identical crawl results."""
-    kwargs = dict(max_depth=1, batch_size=10)
+def test_broadcast_decision_equivalent(spark, tmp_path, monkeypatch):
+    """The engine hints a round join's small side for broadcast iff its
+    row bound fits Spark's own autoBroadcastJoinThreshold. Crawl results
+    are the same at the default threshold, at -1 (Spark's "never": no
+    hint and no broadcast in the round plan) and at a threshold between
+    the round-2 batch-side and candidate-side bounds (the batch sides are
+    hinted, the candidate sides are left to Spark)."""
+    from test_plans import _nodes, _physical
+
+    from louis_crawler_legacy_spark.plans import crawl as crawl_mod
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    default = spark.conf.get(key)
     cdf = corpus_mod.corpus_df(spark, CORPUS)
-    a = CrawlEngine(spark, cdf, str(tmp_path / "wa"),
-                    CrawlConfig(num_partitions=4, bloom_capacity=10_000,
-                                **kwargs))
-    b = CrawlEngine(spark, cdf, str(tmp_path / "wb"),
-                    CrawlConfig(num_partitions=4, bloom_capacity=10_000,
-                                broadcast_batch=False, **kwargs))
-    sa = a.run(seeds=SEEDS)
-    sb = b.run(seeds=SEEDS)
-    assert [s.batch_urls for s in sa] == [s.batch_urls for s in sb]
-    assert sorted(r.url for r in a.pages.read().collect()) == sorted(
-        r.url for r in b.pages.read().collect()
-    )
+    df_class = type(cdf)
+    local_checkpoint = df_class.localCheckpoint
+
+    def crawl(name, threshold):
+        """Crawl at ``threshold``; returns (stats, (url, children) of
+        every page, the round-2 frontier′ DataFrame's query execution)."""
+        eng = CrawlEngine(spark, cdf, str(tmp_path / name),
+                          CrawlConfig(num_partitions=4, bloom_capacity=10_000,
+                                      max_depth=1, batch_size=10))
+        plans = []
+
+        def spy(self, *args, **kwargs):
+            if (eng._last_round == 1 and set(self.columns)
+                    == set(crawl_mod.FRONTIER_SCHEMA.fieldNames())):
+                plans.append((self._jdf.queryExecution().optimizedPlan(),
+                              _physical(self)))
+            return local_checkpoint(self, *args, **kwargs)
+
+        spark.conf.set(key, str(threshold))
+        monkeypatch.setattr(df_class, "localCheckpoint", spy)
+        try:
+            stats = eng.run(seeds=SEEDS)
+        finally:
+            monkeypatch.undo()
+            spark.conf.set(key, default)
+        (plan,) = plans
+        pages = sorted((r.url, list(r.children))
+                       for r in eng.pages.read().collect())
+        return stats, pages, plan
+
+    def kind(n):
+        """A plan leaf: the batch (its localCheckpoint), the cached
+        candidate probe, or other."""
+        out = n.output().toString()
+        if n.nodeName() in ("LogicalRDD", "Scan ExistingRDD") \
+                and "batch_seq" in out:
+            return "batch"
+        if n.nodeName() in ("InMemoryRelation", "InMemoryTableScan") \
+                and "maybe_seen" in out:
+            return "probed"
+        return "other"
+
+    def leaves(node):
+        return {kind(m) for m, _ in _nodes(node) if m.children().isEmpty()}
+
+    def hinted(plan):
+        """Leaf kinds of every join side the engine hinted for broadcast
+        (all of its hints are on the right side)."""
+        logical, _ = plan
+        return [
+            leaves(n.right()) for n, _ in _nodes(logical)
+            if n.nodeName() == "Join"
+            and n.hint().rightHint().isDefined()
+            and "broadcast" in n.hint().rightHint().get().toString()
+        ]
+
+    def broadcasts(plan):
+        _, physical = plan
+        return [n for n, _ in _nodes(physical)
+                if n.nodeName() == "BroadcastExchange"]
+
+    sa, pages_a, plan_a = crawl("default", default)
+    assert {"batch"} in hinted(plan_a)
+    assert any("probed" in side for side in hinted(plan_a))
+
+    sb, pages_b, plan_b = crawl("never", -1)
+    assert hinted(plan_b) == [] and broadcasts(plan_b) == []
+
+    # round 2's bounds: n_batch rows batch-side, n_children + n_batch
+    # candidate-side; pick a threshold strictly between them
+    batch2 = set(sa[1].batch_urls)
+    n_children = sum(len(c) for u, c in pages_a if u in batch2)
+    row = crawl_mod._BC_ROW_BYTES
+    middle = (2 * len(batch2) + n_children) * row // 2
+    assert len(batch2) * row <= middle < (len(batch2) + n_children) * row
+    sc, pages_c, plan_c = crawl("middle", middle)
+    assert hinted(plan_c) and all(
+        side == {"batch"} for side in hinted(plan_c)
+    ), hinted(plan_c)
+    assert broadcasts(plan_c)
+
+    for stats, pages in ((sb, pages_b), (sc, pages_c)):
+        assert [s.batch_urls for s in stats] == [s.batch_urls for s in sa]
+        assert pages == pages_a
 
 
 def test_long_run_soak_flat_wall_and_partitions(spark, tmp_path):

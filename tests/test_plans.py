@@ -411,9 +411,7 @@ def test_round_dedup_nests_two_broadcast_levels(spark, tmp_path, monkeypatch):
         SEEN_SCHEMA,
     )
 
-    eng, seeds = _crawl_engine(
-        spark, str(tmp_path / "wh"), broadcast_batch=True
-    )
+    eng, seeds = _crawl_engine(spark, str(tmp_path / "wh"))
     eng.bootstrap(seeds)
     eng.run_round(1)
     plans = []

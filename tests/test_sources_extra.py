@@ -7,9 +7,13 @@ import json
 import os
 import subprocess
 import sys
+from pathlib import Path
 
 from louis_crawler_legacy_spark.operators import robots as robots_mod
 from louis_crawler_legacy_spark.sources import metadata
+
+# this checkout: the CLI tests run its scripts against its own package
+REPO = Path(__file__).resolve().parents[1]
 
 
 def test_metadata_scan_drops_corrupt(spark, tmp_path):
@@ -105,9 +109,9 @@ def test_spark_submit_cli(tmp_path):
     seeds_file = tmp_path / "seeds.txt"
     seeds_file.write_text("\n".join(cm.seed_urls(corpus, n=1)))
 
-    env = dict(os.environ, PYTHONPATH="/root/repo")
+    env = dict(os.environ, PYTHONPATH=str(REPO))
     out = subprocess.run(
-        [sys.executable, "/root/repo/scripts/run_crawl.py",
+        [sys.executable, str(REPO / "scripts" / "run_crawl.py"),
          "--corpus", corpus_path, "--warehouse", str(tmp_path / "wh"),
          "--seeds", str(seeds_file), "--max-depth", "1",
          "--batch-size", "8", "--partitions", "2"],
@@ -119,7 +123,7 @@ def test_spark_submit_cli(tmp_path):
 
     # resume path: no new rounds on a finished crawl, exits cleanly
     out2 = subprocess.run(
-        [sys.executable, "/root/repo/scripts/run_crawl.py",
+        [sys.executable, str(REPO / "scripts" / "run_crawl.py"),
          "--corpus", corpus_path, "--warehouse", str(tmp_path / "wh"),
          "--resume", "--batch-size", "8", "--partitions", "2"],
         capture_output=True, text=True, env=env, timeout=300,
@@ -147,11 +151,12 @@ def test_log_stats_cli(tmp_path):
         "2024-01-01 10:00:07,000 [TASK:dddd4444] Successfully processed http://x.ca/d\n"
         "2024-01-01 10:00:07,500 [TASK:dddd4444] Error processing http://x.ca/d: late-fail\n"
     )
-    env = dict(os.environ, PYTHONPATH="/root/repo")
+    env = dict(os.environ, PYTHONPATH=str(REPO))
 
     def cli(*args):
         out = subprocess.run(
-            [sys.executable, "/root/repo/scripts/log_stats.py", str(log), *args],
+            [sys.executable, str(REPO / "scripts" / "log_stats.py"),
+             str(log), *args],
             capture_output=True, text=True, env=env, timeout=300,
         )
         assert out.returncode == 0, out.stderr[-2000:]
@@ -194,11 +199,11 @@ def test_storage_stats_cli(tmp_path):
     eng.run(seeds=cm.seed_urls(corpus, n=1))
     n_pages = eng.pages.read().count()
 
-    env = dict(os.environ, PYTHONPATH="/root/repo")
+    env = dict(os.environ, PYTHONPATH=str(REPO))
 
     def cli(*args):
         out = subprocess.run(
-            [sys.executable, "/root/repo/scripts/storage_stats.py",
+            [sys.executable, str(REPO / "scripts" / "storage_stats.py"),
              "--warehouse", wh, *args],
             capture_output=True, text=True, env=env, timeout=300,
         )

@@ -86,6 +86,23 @@ def test_mismatched_write_raises(spark, tmp_path):
     assert t.is_empty()  # nothing was committed
 
 
+def test_read_ignores_columns_outside_declared_schema(spark, tmp_path):
+    """Reads select the declared schema by name, so a snapshot written
+    with an extra column (an older, wider layout of the table) still
+    reads through the narrower declaration."""
+    wide = T.StructType(
+        [SCHEMA["url"], T.StructField("url_hash", T.LongType()),
+         SCHEMA["depth"]]
+    )
+    root = str(tmp_path / "whw")
+    Warehouse(spark, root).table("seen", wide).append(
+        spark.createDataFrame([("a", 7, 0), ("b", 8, 1)], wide)
+    )
+    df = Warehouse(spark, root).table("seen", SCHEMA).read()
+    assert df.schema == SCHEMA
+    assert sorted(tuple(r) for r in df.collect()) == [("a", 0), ("b", 1)]
+
+
 def test_empty_read_is_local_relation(spark, tmp_path):
     """An empty table reads as a local relation, so joins and unions
     against it fold away at plan time instead of scanning a Python RDD."""
