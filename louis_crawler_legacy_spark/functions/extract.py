@@ -94,11 +94,8 @@ def extract_pages(
                 for u, h in zip(pdf[url_col], pdf[html_col])
             ]
             out = pdf[passthrough].copy()
-            for name, _ in (
-                ("title", None), ("lang", None), ("content", None),
-                ("last_updated", None), ("children", None),
-            ):
-                out[name] = [e[name] for e in extracted]
+            for f in EXTRACT_FIELDS:
+                out[f.name] = [e[f.name] for e in extracted]
             yield out
 
     return df.mapInPandas(gen, schema=schema)

@@ -30,8 +30,6 @@ HEAD_ONLY = {"title", "meta", "link", "style", "base"}
 
 HEADERS_RE = re.compile(r"^h[1-6]$")
 
-_WS_RE = re.compile(r"\s+")
-
 
 def collapse_ws(s: str) -> str:
     """Reference whitespace normalization: re.sub(r'\\s+', ' ', s).strip()

@@ -119,11 +119,6 @@ def url_id(url: Column) -> Column:
     return F.xxhash64(url)
 
 
-def url_hash2(url: Column) -> Column:
-    """Second independent 64-bit hash for Bloom double-hashing."""
-    return F.xxhash64(url, F.lit("bloom-h2"))
-
-
 def host_partition(url_or_host: Column, num_partitions: int, is_host: bool = False) -> Column:
     """Partition id = pmod(xxhash64(canonical host), P) — the north rule's
     explicit hash-partitioning on canonicalized host (axes A)."""

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from louis_crawler_legacy_spark.functions.urls import salted_host
 from louis_crawler_legacy_spark.sources.tables import local_df
 
 
@@ -57,11 +58,7 @@ def politeness_cap(
         df = df.withColumn("_host_budget", F.lit(None).cast("int"))
     eff = F.coalesce(F.col("_host_budget"), F.lit(default_budget))
     if salt_buckets and salt_buckets > 1:
-        salted = F.concat(
-            F.col(host_col),
-            F.lit("#"),
-            F.pmod(F.xxhash64(F.col(url_col)), F.lit(salt_buckets)).cast("string"),
-        )
+        salted = salted_host(F.col(host_col), F.col(url_col), salt_buckets)
         pre = Window.partitionBy(salted).orderBy(*order)
         df = (
             df.withColumn("_pre_rank", F.row_number().over(pre))

@@ -24,11 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from louis_crawler_legacy_spark.functions.htmlx import (
-    children_from_hrefs,
-    clean_soup,
-    parse_html,
-)
+from louis_crawler_legacy_spark.functions.extract import extract_page_fields
 from louis_crawler_legacy_spark.functions.tokenizer import default_encoder
 from louis_crawler_legacy_spark.operators.chunking import chunk_html
 
@@ -44,6 +40,25 @@ SPAN_STRUCT = T.StructType(
 SPANS_TYPE = T.ArrayType(SPAN_STRUCT)
 
 
+def page_spans(content: str | None, children, enc) -> list[tuple]:
+    """One page's span tuples (kind, text, media_ref, offset): a text span
+    per chunk of the cleaned ``content``, then a media or link span per
+    child url, in order."""
+    spans: list[tuple] = []
+    if content:
+        for ch in chunk_html(content, enc):
+            spans.append(("text", ch["text_content"], None, len(spans)))
+    for child in (children if children is not None else []):
+        kind = "media" if child.endswith(".pdf") else "link"
+        spans.append((kind, None, child, len(spans)))
+    return spans
+
+
+def _spans_from_html(html: str, base_url: str, enc) -> list[tuple]:
+    f = extract_page_fields(html, base_url, None)
+    return page_spans(f["content"], f["children"], enc)
+
+
 def build_spans_py(html: str, base_url: str, enc=None) -> list[dict]:
     """Pure-Python span builder (the oracle twin for the Spark operator).
 
@@ -53,29 +68,14 @@ def build_spans_py(html: str, base_url: str, enc=None) -> list[dict]:
     are collected from the post-clean tree (clean mutates scrapy's cached
     selector before a::attr(href) runs — goldie.py:14 vs :23). So: text
     spans = chunk_html(cleaned content), link/media spans = post-clean
-    children."""
+    children — the content and children the crawl's extract_page_fields
+    produces."""
     if enc is None:
         enc = default_encoder()
-    soup = parse_html(html)
-    content = clean_soup(soup, parallel_variant=True)  # mutates the tree
-    hrefs = [a.attrs["href"] for a in soup.root.find_all("a") if a.attrs.get("href")]
-    spans: list[dict] = []
-    if content:
-        for ch in chunk_html(content, enc):
-            spans.append(
-                {
-                    "kind": "text",
-                    "text": ch["text_content"],
-                    "media_ref": None,
-                    "offset": len(spans),
-                }
-            )
-    for child in children_from_hrefs(hrefs, base_url):
-        kind = "media" if child.endswith(".pdf") else "link"
-        spans.append(
-            {"kind": kind, "text": None, "media_ref": child, "offset": len(spans)}
-        )
-    return spans
+    return [
+        dict(zip(SPAN_STRUCT.fieldNames(), s))
+        for s in _spans_from_html(html, base_url, enc)
+    ]
 
 
 def spans_from_extracted(
@@ -87,30 +87,25 @@ def spans_from_extracted(
     """documents(doc_id, spans) from ALREADY-extracted fields — the
     crawl-path spans builder.
 
-    The fetch round has already parsed + cleaned each page exactly once
+    The fetch round has already parsed + cleaned each page once
     (functions/extract.py), so text spans chunk the stored cleaned content
     (precisely what hawn does to crawl_items.html_content) and link/media
     spans come from the stored children. Identical output to
     docs_to_spans(raw html) — pinned by tests — without a second
-    parse+clean of the 75 KB raw page per row."""
+    parse+clean of the 75 KB raw page per row (chunk_html still parses
+    the cleaned content)."""
     id_field = next(f for f in df.schema.fields if f.name == id_col)
     schema = T.StructType([id_field, T.StructField("spans", SPANS_TYPE)])
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         enc = default_encoder()
         for pdf in batches:
-            out = []
-            for doc_id, content, children in zip(
-                pdf[id_col], pdf[content_col], pdf[children_col]
-            ):
-                spans: list[tuple] = []
-                if content:
-                    for ch in chunk_html(content, enc):
-                        spans.append(("text", ch["text_content"], None, len(spans)))
-                for child in (children if children is not None else []):
-                    kind = "media" if child.endswith(".pdf") else "link"
-                    spans.append((kind, None, child, len(spans)))
-                out.append((doc_id, spans))
+            out = [
+                (doc_id, page_spans(content, children, enc))
+                for doc_id, content, children in zip(
+                    pdf[id_col], pdf[content_col], pdf[children_col]
+                )
+            ]
             yield pd.DataFrame(out, columns=[id_col, "spans"])
 
     return df.select(id_col, content_col, children_col).mapInPandas(
@@ -132,21 +127,13 @@ def docs_to_spans(
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         enc = default_encoder()
         for pdf in batches:
-            out = []
-            for doc_id, html, url in zip(pdf[id_col], pdf[html_col], pdf[url_col]):
-                if html is None:
-                    out.append((doc_id, []))
-                    continue
-                spans = build_spans_py(html, url, enc)
-                out.append(
-                    (
-                        doc_id,
-                        [
-                            (s["kind"], s["text"], s["media_ref"], s["offset"])
-                            for s in spans
-                        ],
-                    )
+            out = [
+                (doc_id,
+                 [] if html is None else _spans_from_html(html, url, enc))
+                for doc_id, html, url in zip(
+                    pdf[id_col], pdf[html_col], pdf[url_col]
                 )
+            ]
             yield pd.DataFrame(out, columns=[id_col, "spans"])
 
     return df.select(id_col, html_col, url_col).mapInPandas(gen, schema=schema)

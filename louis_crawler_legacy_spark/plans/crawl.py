@@ -17,7 +17,7 @@ UDF and the numpy Bloom probe):
   frontier ──dedup-by-url──▶ politeness cap ──order+limit──▶ batch
      batch ──LEFT JOIN corpus──▶ fetched (miss/≥400 → errored)
    fetched ──extract (mapInPandas)──▶ pages′ + children
-    pages′ ──upsert──▶ pages;  edges ──anti-join──▶ links
+    pages′ ──append (upsert after an expiry)──▶ pages;  edges ──▶ links
   children ──robots──▶ candidates ──filter probe──▶ probed (maybe_seen flag)
   seen_hits = seen ⋉ bc(maybe urls);  pending = frontier∖batch ⋉ bc(probed)
     probed ▷ bc(seen_hits ∪ batch) ▷ bc(pending) ──▶ new ──▶ frontier′
@@ -35,7 +35,7 @@ salted pre-ranking for hot hosts (axis B); the exact seen probe broadcasts
 only the filter-hit subset; batch selection and discovery numbering use
 the two-pass range-partitioned pattern (operators/ordering.py) — no
 unpartitioned window anywhere in the round plan. Every round is a barrier:
-its output appends and state merges run concurrently with the candidate
+its output writes and state merges run concurrently with the candidate
 path and are joined before the round returns.
 
 Stages: ``run_round`` runs select, fetch (robots, fetch+extract,
@@ -232,12 +232,6 @@ class CrawlConfig:
     # cuckoo: lower fpp per bit at high load, bounded 2-bucket lookups).
     seen_filter: str = "bloom"
     base_timestamp: int = 1_700_000_000  # last_crawled = base + round (P5)
-    # The seen-set guarantees a URL is fetched at most once per warehouse,
-    # so pages/links writes are pure appends (the reference's ON CONFLICT
-    # upsert, db.py:494-528, only matters for re-runs against a shared DB —
-    # our warehouse persists `seen`, so even resume never refetches).
-    # Set False to get MERGE-style upserts (recrawl workloads).
-    unique_fetch: bool = True
     # no effect: every round records all its metrics from jobs it runs
     # anyway. Kept so that callers which still pass it construct.
     detailed_metrics: bool = True
@@ -245,7 +239,7 @@ class CrawlConfig:
     # resumability), k>1 = every k rounds, 0 = only at the end of run().
     # Frontier/seen/bloom state lives in cached DataFrames between
     # checkpoints — the Iceberg-commit-per-round pattern decoupled from the
-    # round loop. pages/links appends (the crawl OUTPUT) always flush per
+    # round loop. pages/links writes (the crawl OUTPUT) always flush per
     # round; a crash loses at most the rounds since the last checkpoint.
     checkpoint_every: int = 1
     # collect the batch's URLs to the driver (tests/oracles want the exact
@@ -440,9 +434,10 @@ class CrawlEngine:
         self._seen_df: DataFrame | None = None
         self._blooms_df: DataFrame | None = None
         self._pending_metrics: list[tuple] = []
+        self._upsert = False  # outputs MERGE instead of append (_load_state)
         self._dirty = False
         self._last_round = 0  # highest round run in-memory (≥ checkpointed)
-        # the round's concurrent jobs: the three output appends
+        # the round's concurrent jobs: the three output writes
         # (pages/links/documents) and the two state merges (seen union,
         # filter blobs) run here while the driver thread runs the candidate
         # path. run_round joins all five before it returns.
@@ -454,6 +449,13 @@ class CrawlEngine:
             self._frontier_df = self.frontier.read().cache()
         if self._seen_df is None:
             self._seen_df = self.seen.read().cache()
+            # the seen set fetches a URL at most once, so the outputs are
+            # appends — until an expiry (recorded in seen's history, which
+            # rollback truncates with the outputs) makes a URL that
+            # already has output rows fetchable again
+            self._upsert = any(
+                h["meta"].get("op") == "expire" for h in self.seen.history()
+            )
         if self._blooms_df is None:
             # a warehouse checkpointed with one filter kind must not be
             # reopened with the other: the blobs share a table but not a
@@ -488,7 +490,7 @@ class CrawlEngine:
         """Snapshot the in-memory state (X5). At real scale seen would get
         delta-appends; the local store rewrites (copy-on-write).
 
-        Rounds join their output appends before they return, so a
+        Rounds join their output writes before they return, so a
         committed round-N checkpoint implies every output row for rounds
         ≤ N landed (crash-resume rolls outputs back to the last
         checkpoint, which is what makes that sound)."""
@@ -966,9 +968,15 @@ class CrawlEngine:
         """Outputs stage. The three writes (pages/links/spans) are
         independent of the candidate-dedup path and of each other — they
         run as concurrent Spark jobs on the round pool, joined at the round
-        barrier; returns their futures."""
+        barrier; returns their futures.
+
+        Each write appends, unless an expiry has made refetches possible
+        (``_upsert``): then pages MERGE by url and documents by doc_id (the
+        reference's ON CONFLICT upsert, db.py:494-528) and links insert
+        only the absent edges."""
         cfg = self.config
-        # S7: pages upsert (MERGE by url)
+        meta = {"round": round_no}
+        upsert = self._upsert
         page_rows = pages_src.select(
             F.xxhash64("url").alias("id"),
             "url",
@@ -980,16 +988,12 @@ class CrawlEngine:
             "children",
             "depth",
         )
-        futures = []
-        if cfg.unique_fetch:
-            futures.append(self._pool.submit(
-                self._labelled, round_no, "pages",
-                self.pages.append, page_rows, {"round": round_no}))
-        else:
-            with self._stage(round_no, "pages"):
-                self.pages.upsert(
-                    page_rows, key="url", meta={"round": round_no}
-                )
+
+        def write_pages():
+            if upsert:
+                self.pages.upsert(page_rows, key="url", meta=meta)
+            else:
+                self.pages.append(page_rows, meta)
 
         # S10/J6: link edges insert-if-absent
         edges = pages_src.select(
@@ -1011,45 +1015,40 @@ class CrawlEngine:
                     F.col("url").alias("destination_url"),
                 )
             ).dropDuplicates(["source_url", "destination_url"])
-        if cfg.unique_fetch:
-            # src fetched once ⇒ (src,dst) can never repeat across rounds
-            # (J6 insert-if-absent holds)
-            futures.append(self._pool.submit(
-                self._labelled, round_no, "links",
-                self.links.append, edges, {"round": round_no}))
-        else:
-            with self._stage(round_no, "links"):
+
+        def write_links():
+            new_edges = edges
+            if upsert:
                 new_edges = edges.join(
                     self.links.read(), ["source_url", "destination_url"],
                     "left_anti",
                 )
-                self.links.append(new_edges, {"round": round_no})
+            self.links.append(new_edges, meta)
 
+        writes = [("pages", write_pages), ("links", write_links)]
         if cfg.build_spans:
-            # spans from the round's already-extracted content/children —
-            # the raw page was parsed+cleaned ONCE in extract_pages; never
-            # parse it a second time (spans_from_extracted ≡ docs_to_spans
-            # on raw html, pinned by tests/test_spans.py)
+            # spans from the round's already-extracted content/children
+            # (spans_from_extracted ≡ docs_to_spans on raw html, pinned by
+            # tests/test_spans.py): the raw page is not parsed again
             spans_df = spans_from_extracted(
                 pages_src.select(
                     F.col("url").alias("doc_id"), "content", "children"
                 )
             )
-            if cfg.unique_fetch:
-                futures.append(self._pool.submit(
-                    self._labelled, round_no, "spans",
-                    self.documents.append, spans_df, {"round": round_no}))
-            else:
-                # MERGE by doc_id, as pages by url. Materialize first:
-                # upsert reads its input twice, and the span UDF must not
-                # run twice
-                with self._stage(round_no, "spans"):
-                    spans_df = spans_df.localCheckpoint()
-                    self.documents.upsert(
-                        spans_df, key="doc_id", meta={"round": round_no}
-                    )
-                    release(spans_df)
-        return futures
+
+            def write_spans():
+                if upsert:
+                    # materialize first: upsert reads its input twice, and
+                    # the span UDF must not run twice
+                    rows = spans_df.localCheckpoint()
+                    self.documents.upsert(rows, key="doc_id", meta=meta)
+                    release(rows)
+                else:
+                    self.documents.append(spans_df, meta)
+
+            writes.append(("spans", write_spans))
+        return [self._pool.submit(self._labelled, round_no, name, fn)
+                for name, fn in writes]
 
     def _merge_state(self, round_no: int, extracted: DataFrame,
                      errored: DataFrame, robots_blocked: DataFrame | None,
@@ -1326,8 +1325,8 @@ class CrawlEngine:
         """Continue from the latest consistent snapshots (per-round lineage
         is in each table's manifest history).
 
-        Output tables (pages/links/documents) are appended per round BEFORE
-        the state checkpoint, so a crash between an output append and its
+        Output tables (pages/links/documents) are written per round BEFORE
+        the state checkpoint, so a crash between an output write and its
         checkpoint would otherwise duplicate those rows when the rounds
         re-run — roll everything back to the last completed round first."""
         r = self.last_completed_round()
@@ -1337,9 +1336,11 @@ class CrawlEngine:
     def expire_urls(self, urls: list[str]) -> int:
         """TTL/recrawl eviction: drop ``urls`` from the seen table and the
         filter layer so they fetch again when re-seeded or rediscovered
-        (the reference's recrawl-against-a-shared-DB workload, db.py
-        ON CONFLICT upsert — pair with ``unique_fetch=False`` so the
-        refetched pages MERGE instead of duplicating).
+        (the reference's recrawl-against-a-shared-DB workload). The seen
+        snapshot it writes is tagged ``op: "expire"``; from then on every
+        engine on this warehouse MERGEs its output rows (the reference's
+        ON CONFLICT upsert, db.py:494-528) instead of appending them, so a
+        refetched page replaces its rows rather than duplicating them.
 
         One pass over seen marks the expired rows; the seen table is
         rewritten from the survivors and the filter blobs are REBUILT from

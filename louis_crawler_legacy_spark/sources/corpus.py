@@ -252,17 +252,3 @@ def corpus_df_distributed(
         status.alias("status"),
         html.alias("html"),
     )
-
-
-def seed_urls_from_corpus(corpus: DataFrame, n: int) -> list[str]:
-    """First n urls by page order — driver pulls only n strings."""
-    from pyspark.sql import functions as F
-
-    rows = (
-        corpus.select("url")
-        .withColumn("_id", F.split(F.col("url"), "/").getItem(4).cast("long"))
-        .orderBy("_id")
-        .limit(n)
-        .collect()
-    )
-    return [r.url for r in rows]

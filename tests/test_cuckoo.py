@@ -262,8 +262,9 @@ def test_spark_probe_merge_delete(spark):
 @pytest.mark.parametrize("seen_filter", ["cuckoo", "bloom"])
 def test_expire_and_recrawl(spark, tmp_path, seen_filter):
     """TTL workflow: crawl, expire two fetched URLs, re-seed them →
-    exactly those two refetch, MERGE-upserting their page rows (both
-    kinds rebuild the blobs from the surviving seen rows)."""
+    exactly those two refetch, MERGE-upserting their page and document
+    rows and adding no link edge twice, with no write mode to choose
+    (both kinds rebuild the blobs from the surviving seen rows)."""
     from louis_crawler_legacy_spark.plans.crawl import CrawlConfig, CrawlEngine
     from louis_crawler_legacy_spark.sources import corpus as corpus_mod
 
@@ -273,12 +274,13 @@ def test_expire_and_recrawl(spark, tmp_path, seen_filter):
     seeds = corpus_mod.seed_urls(corpus, n=2)
     cfg = CrawlConfig(
         num_partitions=4, bloom_capacity=10_000, max_depth=1, batch_size=10,
-        unique_fetch=False, seen_filter=seen_filter,
+        seen_filter=seen_filter, build_spans=True,
     )
     eng = CrawlEngine(
         spark, corpus_mod.corpus_df(spark, corpus), str(tmp_path / "wh"), cfg
     )
     eng.run(seeds=seeds)
+    links_before = {tuple(r) for r in eng.links.read().collect()}
     pages_before = {r.url: r.last_crawled for r in eng.pages.read().collect()}
     scraped = sorted(
         r.url for r in eng.seen.read().collect() if r.status == "scraped"
@@ -302,6 +304,14 @@ def test_expire_and_recrawl(spark, tmp_path, seen_filter):
         assert pages_after[u] == cfg.base_timestamp + 10
     for u in set(pages_before) - set(expired):
         assert pages_after[u] == pages_before[u]
+    # one output row per key: the dicts above cannot see a duplicate
+    page_urls = [r.url for r in eng.pages.read().collect()]
+    assert sorted(page_urls) == sorted(pages_before)
+    doc_ids = [r.doc_id for r in eng.documents.read().collect()]
+    assert sorted(doc_ids) == sorted(pages_before)
+    links = [tuple(r) for r in eng.links.read().collect()]
+    assert len(links) == len(set(links))
+    assert set(links) == links_before
 
 
 @pytest.mark.parametrize("seen_filter", ["bloom", "cuckoo"])
@@ -321,7 +331,7 @@ def test_expire_requests_outside_seen_never_reach_the_filter(
     seeds = corpus_mod.seed_urls(corpus, n=2)
     cfg = CrawlConfig(
         num_partitions=4, bloom_capacity=10_000, max_depth=1, batch_size=10,
-        unique_fetch=False, seen_filter=seen_filter,
+        seen_filter=seen_filter,
     )
     eng = CrawlEngine(
         spark, corpus_mod.corpus_df(spark, corpus), str(tmp_path / "wh"), cfg
@@ -468,7 +478,7 @@ def test_expire_rebuilds_multi_table_cuckoo_partitions(spark, tmp_path):
     seeds = corpus_mod.seed_urls(corpus, n=2)
     cfg = CrawlConfig(
         num_partitions=4, bloom_capacity=2, max_depth=3, batch_size=7,
-        unique_fetch=False, seen_filter="cuckoo",
+        seen_filter="cuckoo",
     )
     eng = CrawlEngine(
         spark, corpus_mod.corpus_df(spark, corpus), str(tmp_path / "wh"), cfg

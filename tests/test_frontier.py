@@ -311,16 +311,17 @@ def test_crash_resume_no_duplicate_outputs(spark, tmp_path):
 
 
 def test_recrawl_upsert_semantics(spark, tmp_path):
-    """unique_fetch=False → S7 MERGE-style upsert (reference db.py:494-528
+    """After an expiry, S7 MERGE-style upsert (reference db.py:494-528
     INSERT … ON CONFLICT (url) DO UPDATE) and J6 insert-if-absent links: a
-    full recrawl over an existing warehouse keeps one row per url with the
-    REFRESHED last_crawled, and the link-edge set is unchanged."""
+    full recrawl, by a fresh engine, of an existing warehouse whose every
+    seen url was expired keeps one row per url with the REFRESHED
+    last_crawled, and the link-edge set is unchanged."""
     from dataclasses import replace
 
     kwargs = dict(max_depth=1, batch_size=10)
     cfg1 = CrawlConfig(num_partitions=4, bloom_capacity=10_000,
-                       unique_fetch=False, base_timestamp=1_700_000_000,
-                       build_spans=True, **kwargs)
+                       base_timestamp=1_700_000_000, build_spans=True,
+                       **kwargs)
     cdf = corpus_mod.corpus_df(spark, CORPUS)
     eng = CrawlEngine(spark, cdf, str(tmp_path / "wh"), cfg1)
     eng.run(seeds=SEEDS)
@@ -329,11 +330,11 @@ def test_recrawl_upsert_semantics(spark, tmp_path):
               for r in eng.links.read().collect()}
     assert pages1 and links1
 
-    # recrawl: wipe crawl STATE (frontier/seen/blooms), keep the outputs
+    # recrawl: expire every seen url, keep the outputs
+    seen_urls = [r.url for r in eng.seen.read().collect()]
+    assert eng.expire_urls(seen_urls) == len(seen_urls)
     cfg2 = replace(cfg1, base_timestamp=1_800_000_000)
     eng2 = CrawlEngine(spark, cdf, str(tmp_path / "wh"), cfg2)
-    for t in (eng2.frontier, eng2.seen, eng2.blooms):
-        t.rollback_to(0)
     eng2.run(seeds=SEEDS)
     pages2 = {r.url: r.last_crawled for r in eng2.pages.read().collect()}
     assert set(pages2) == set(pages1)  # MERGE: still one row per url
@@ -343,6 +344,30 @@ def test_recrawl_upsert_semantics(spark, tmp_path):
     assert links2 == links1  # ON CONFLICT DO NOTHING
     doc_ids = [r.doc_id for r in eng2.documents.read().collect()]
     assert sorted(doc_ids) == sorted(pages2)  # documents MERGE by doc_id
+
+
+def test_crawl_without_expiry_appends_its_outputs(spark, tmp_path,
+                                                 monkeypatch):
+    """A warehouse that never saw an expiry fetches each url at most once,
+    so every round appends its outputs: no upsert (an O(table) rewrite)
+    ever runs on pages, links or documents."""
+    from louis_crawler_legacy_spark.sources.tables import SnapshotTable
+
+    calls = []
+    for op in ("append", "upsert"):
+        real = getattr(SnapshotTable, op)
+
+        def spy(self, *args, _op=op, _real=real, **kwargs):
+            calls.append((_op, self.name))
+            return _real(self, *args, **kwargs)
+
+        monkeypatch.setattr(SnapshotTable, op, spy)
+    eng, stats = run_engine(spark, tmp_path, max_depth=1, batch_size=10,
+                            build_spans=True)
+    outputs = ("pages", "links", "documents")
+    assert not [c for c in calls if c[0] == "upsert" and c[1] in outputs]
+    for name in outputs:
+        assert calls.count(("append", name)) == len(stats), name
 
 
 def test_per_host_crawl_delay_budgets(spark, tmp_path):
