@@ -28,22 +28,25 @@ the numpy probe only ever sees int64 columns.
 **Unbounded growth (round-3 scale fix)**: a fixed bitmap saturates on a
 sustained crawl (n_items past capacity → fpp → 1 → the two-stage dedup
 silently degrades to a full exact anti-join). Each partition's blob is
-therefore a SCALABLE Bloom filter (Almeida et al., "Scalable Bloom
-Filters", IPL 2007): a chain of layers where layer i is sized by
-bloom_params(cap0·2^i, fpp0·2^-i); inserts always go to the newest layer,
-a full layer appends the next one, a probe ORs all layers. Total fpp is
-bounded by Σ fpp0·2^-i < 2·fpp0 FOREVER, layer count grows log2(n/cap0),
-and — critically for 10^10 URLs — growth never needs a rebuild pass over
-the seen table: the blob grows in place inside the same cogrouped merge
-task. Blobs are self-describing (header carries every layer's geometry),
-so probe tasks need no driver-shared (m, k).
+therefore a SCALABLE filter (Almeida et al., "Scalable Bloom Filters",
+IPL 2007): a chain of layers; inserts always go to the newest layer, a
+full layer appends the next one, a probe ORs all layers. Growth never
+needs a rebuild pass over the seen table: the blob grows in place inside
+the same cogrouped merge task. ``BlobFilter`` owns that chain for both
+seen-filter kinds; a kind is a codec over ONE layer. Bloom layer i is
+sized by bloom_params(cap0·2^i, fpp0·2^-i), so total fpp is bounded by
+Σ fpp0·2^-i < 2·fpp0 FOREVER and the layer count grows log2(n/cap0);
+the cuckoo codec (operators/cuckoo.py) doubles its bucket count instead.
 
-Blob layout (little-endian): uint64 magic "SBLOOM01" | uint64 n_layers |
-n_layers × (uint64 m_bits, uint64 k, uint64 cap, uint64 n) | concatenated
-bitmaps (m_bits/8 bytes each).
+Blob layout (little-endian, ``BlobFilter.encode``): uint64 kind magic |
+uint64 n_layers | n_layers × per-layer meta (uint64 words) | concatenated
+per-layer payloads. Blobs are self-describing (the meta carries every
+layer's geometry), so probe tasks need no driver-shared geometry.
 
-``BlobFilter`` is the cogroup merge/probe driver; ``PartitionedBloom`` is
-this format's codec on it, and operators/cuckoo.py supplies the other.
+- Bloom, magic "SBLOOM01": meta (m_bits, k, cap, n); payload the
+  m_bits/8-byte bitmap.
+- cuckoo, magic "CUKCHN02": meta (n_buckets, n_stash, n); payload
+  uint16 table[n_buckets·4] | uint64 stash[n_stash].
 """
 
 from __future__ import annotations
@@ -70,9 +73,7 @@ BLOOM_SCHEMA = T.StructType(
     ]
 )
 
-_MAGIC = np.uint64(0x53424C4F4F4D3031)  # "SBLOOM01"
 _HDR = 16  # magic + n_layers
-_LMETA = 32  # m, k, cap, n per layer
 
 
 def bloom_params(expected_n: int, fpp: float = 0.01) -> tuple[int, int]:
@@ -121,94 +122,89 @@ def probe_bits(bits: bytes, h1: np.ndarray, h2: np.ndarray, m: int, k: int) -> n
     return ((arr[byte_idx] & masks) != 0).all(axis=1)
 
 
-@dataclass
-class _Layer:
-    m: int
-    k: int
-    cap: int
-    n: int
-    bits: bytes
-
-
-def serialize_layers(layers: list[_Layer]) -> bytes:
-    header = np.array([_MAGIC, len(layers)], dtype=np.uint64)
-    meta = np.array(
-        [[l.m, l.k, l.cap, l.n] for l in layers], dtype=np.uint64
-    )
-    return header.tobytes() + meta.tobytes() + b"".join(l.bits for l in layers)
-
-
-def deserialize_layers(blob: bytes) -> list[_Layer]:
-    magic, n_layers = np.frombuffer(blob[:_HDR], dtype=np.uint64)
-    if magic != _MAGIC:
-        raise ValueError(
-            "not a scalable-Bloom blob (bad magic) — was this warehouse "
-            "built with seen_filter='cuckoo' or an older blob format?"
-        )
-    n_layers = int(n_layers)
-    meta = np.frombuffer(
-        blob[_HDR:_HDR + n_layers * _LMETA], dtype=np.uint64
-    ).reshape(n_layers, 4)
-    layers, off = [], _HDR + n_layers * _LMETA
-    for m, k, cap, n in meta:
-        m, k, cap, n = int(m), int(k), int(cap), int(n)
-        layers.append(_Layer(m, k, cap, n, blob[off:off + m // 8]))
-        off += m // 8
-    return layers
-
-
-def _fresh_layer(i: int, cap0: int, fpp0: float) -> _Layer:
-    """Layer i geometry per the scalable-Bloom schedule: capacity doubles,
-    target fpp halves — total fpp stays < 2·fpp0 at any size."""
-    cap = cap0 << i
-    m, k = bloom_params(cap, fpp0 * (0.5 ** i))
-    return _Layer(m, k, cap, 0, b"\x00" * (m // 8))
-
-
-def probe_layers(layers: list[_Layer], h1: np.ndarray,
-                 h2: np.ndarray) -> np.ndarray:
-    out = np.zeros(len(h1), dtype=bool)
-    for l in layers:
-        miss = ~out
-        if not miss.any():
-            break
-        out[miss] = probe_bits(l.bits, h1[miss], h2[miss], l.m, l.k)
-    return out
-
-
-def insert_layers(layers: list[_Layer], h1: np.ndarray, h2: np.ndarray,
-                  cap0: int, fpp0: float) -> list[_Layer]:
-    """Fill the newest layer to its capacity; overflow appends the next
-    (2× cap, ½ fpp) layer — growth happens inside the merge task, never a
-    rebuild over the seen table."""
-    i = 0
-    while i < len(h1):
-        last = layers[-1]
-        room = last.cap - last.n
-        if room <= 0:
-            layers.append(_fresh_layer(len(layers), cap0, fpp0))
-            continue
-        take = min(room, len(h1) - i)
-        last.bits = build_bits(
-            h1[i:i + take], h2[i:i + take], last.m, last.k, base=last.bits
-        )
-        last.n += take
-        i += take
-    return layers
-
-
 class BlobFilter:
-    """The cogroup driver both seen-filter kinds share: merge and probe
-    over (part_id, bits, n_items, n_layers, fill) blob rows.
+    """A scalable seen filter over one codec's layers, and the cogroup
+    driver both kinds share: merge and probe over (part_id, bits, n_items,
+    n_layers, fill) blob rows.
+
+    The decoded state of a blob is its list of layers, oldest first; every
+    layer has ``n`` (items in it) and ``cap`` (items it takes before the
+    chain grows). This class owns growth (``insert``), the OR probe
+    (``contains``), ``stats`` and the blob framing (``encode``/``decode``,
+    module docstring). A codec supplies ``MAGIC``/``KIND`` (the blob's kind
+    tag and the name decode errors give), ``META`` (uint64 words of
+    per-layer meta), ``layer(i)`` (an empty layer i of the growth
+    schedule), ``add(layer, h1, h2) -> n_added`` and
+    ``has(layer, h1, h2) -> bool array`` over one layer, and
+    ``meta(layer)``, ``payload(layer)`` and
+    ``load(meta, blob, off) -> (layer, end)`` for the framing.
 
     All per-row work happens inside cogrouped applyInPandas tasks; the
     driver only moves (part_id, blob) rows, never URLs, and each task
-    touches exactly one blob. A kind is a codec over its decoded state:
-    ``fresh()``, ``decode(blob, n_items)``, ``encode(state)``,
-    ``insert(state, h1, h2) -> (state, n_added)``,
-    ``contains(state, h1, h2) -> bool array`` and
-    ``stats(state) -> (n_layers, newest-layer fill)``.
+    touches exactly one blob.
     """
+
+    MAGIC: np.uint64
+    KIND: str
+    META: int
+
+    def fresh(self) -> list:
+        return [self.layer(0)]
+
+    def insert(self, layers: list, h1: np.ndarray, h2: np.ndarray) -> tuple[list, int]:
+        """Fill the newest layer to its capacity; overflow appends the next
+        layer — growth happens inside the merge task, never a rebuild over
+        the seen table. Splitting is positional (the first `room` keys
+        stay): membership is chain-wide, and each key lives in exactly one
+        layer (what cuckoo's per-copy delete needs)."""
+        added = i = 0
+        while i < len(h1):
+            last = layers[-1]
+            room = last.cap - last.n
+            if room <= 0:
+                layers.append(self.layer(len(layers)))
+                continue
+            take = min(room, len(h1) - i)
+            n = self.add(last, h1[i:i + take], h2[i:i + take])
+            last.n += n
+            added += n
+            i += take
+        return layers, added
+
+    def contains(self, layers: list, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
+        out = np.zeros(len(h1), dtype=bool)
+        for layer in layers:
+            miss = ~out
+            if not miss.any():
+                break
+            out[miss] = self.has(layer, h1[miss], h2[miss])
+        return out
+
+    def stats(self, layers: list) -> tuple[int, float]:
+        """(layer count, newest layer's fill fraction)."""
+        last = layers[-1]
+        return len(layers), last.n / last.cap if last.cap else 0.0
+
+    def encode(self, layers: list) -> bytes:
+        head = np.array([self.MAGIC, len(layers)], dtype=np.uint64)
+        meta = np.array([self.meta(l) for l in layers], dtype=np.uint64)
+        return head.tobytes() + meta.tobytes() + b"".join(self.payload(l) for l in layers)
+
+    def decode(self, blob: bytes) -> list:
+        magic, n_layers = np.frombuffer(blob[:_HDR], dtype=np.uint64)
+        if magic != self.MAGIC:
+            raise ValueError(
+                f"not a {self.KIND} seen-filter blob (bad magic) — was this "
+                f"warehouse built with another seen_filter kind? The kinds "
+                f"share the seen_bloom table but not a blob format."
+            )
+        off = _HDR + int(n_layers) * self.META * 8
+        meta = np.frombuffer(blob[_HDR:off], dtype=np.uint64).reshape(-1, self.META)
+        layers = []
+        for row in meta:
+            layer, off = self.load([int(v) for v in row], blob, off)
+            layers.append(layer)
+        return layers
 
     def _update(self, blobs: DataFrame, hashes: DataFrame, op) -> DataFrame:
         """blobs(part_id, bits, n_items) ⊕ hashes(part_id, h1, h2) through
@@ -219,7 +215,7 @@ class BlobFilter:
         def run(key, blob_pdf: pd.DataFrame, hashes_pdf: pd.DataFrame) -> pd.DataFrame:
             if len(blob_pdf):
                 n0 = int(blob_pdf["n_items"].iloc[0])
-                state = self.decode(blob_pdf["bits"].iloc[0], n0)
+                state = self.decode(blob_pdf["bits"].iloc[0])
             else:
                 n0, state = 0, self.fresh()
             state, delta = op(
@@ -267,9 +263,7 @@ class BlobFilter:
             if len(blob_pdf) == 0:
                 cand_pdf["maybe_seen"] = False
             else:
-                state = self.decode(
-                    blob_pdf["bits"].iloc[0], int(blob_pdf["n_items"].iloc[0])
-                )
+                state = self.decode(blob_pdf["bits"].iloc[0])
                 cand_pdf["maybe_seen"] = self.contains(
                     state, cand_pdf[h1_col].to_numpy(), cand_pdf[h2_col].to_numpy()
                 )
@@ -282,39 +276,54 @@ class BlobFilter:
         )
 
 
+@dataclass
+class _Layer:
+    m: int
+    k: int
+    cap: int
+    n: int
+    bits: bytes
+
+
 class PartitionedBloom(BlobFilter):
     """Scalable-Bloom codec (module docstring): capacity is a starting
     point, not a ceiling. ``n_items`` counts inserted rows."""
 
-    def __init__(self, m_bits: int, k_hashes: int, capacity: int | None = None,
-                 fpp: float | None = None):
-        self.m = m_bits
-        self.k = k_hashes
-        # (m, k)-only construction (legacy callers/tests): invert the
-        # optimal-k identities — cap ≈ m·ln2/k, fpp ≈ 2^-k
-        self.cap0 = capacity if capacity else max(1, int(m_bits * math.log(2) / k_hashes))
-        self.fpp0 = fpp if fpp else 0.5 ** k_hashes
+    MAGIC = np.uint64(0x53424C4F4F4D3031)  # "SBLOOM01"
+    KIND = "bloom"
+    META = 4
+
+    def __init__(self, capacity: int, fpp: float = 0.01):
+        self.cap0 = capacity
+        self.fpp0 = fpp
 
     @classmethod
     def for_capacity(cls, capacity: int, fpp: float = 0.01) -> "PartitionedBloom":
-        m, k = bloom_params(capacity, fpp)
-        return cls(m, k, capacity=capacity, fpp=fpp)
+        return cls(capacity, fpp)
 
-    def fresh(self) -> list[_Layer]:
-        return [_fresh_layer(0, self.cap0, self.fpp0)]
+    def layer(self, i: int) -> _Layer:
+        """Capacity doubles, target fpp halves: total fpp stays < 2·fpp0
+        at any size."""
+        cap = self.cap0 << i
+        m, k = bloom_params(cap, self.fpp0 * (0.5 ** i))
+        return _Layer(m, k, cap, 0, b"\x00" * (m // 8))
 
-    def decode(self, blob: bytes, n_items: int) -> list[_Layer]:
-        return deserialize_layers(blob)
+    def add(self, layer: _Layer, h1, h2) -> int:
+        layer.bits = build_bits(h1, h2, layer.m, layer.k, base=layer.bits)
+        return len(h1)
 
-    encode = staticmethod(serialize_layers)
-    contains = staticmethod(probe_layers)
+    def has(self, layer: _Layer, h1, h2) -> np.ndarray:
+        return probe_bits(layer.bits, h1, h2, layer.m, layer.k)
 
-    def insert(self, layers, h1, h2) -> tuple[list[_Layer], int]:
-        return insert_layers(layers, h1, h2, self.cap0, self.fpp0), len(h1)
+    def meta(self, layer: _Layer) -> tuple[int, ...]:
+        return layer.m, layer.k, layer.cap, layer.n
 
-    def stats(self, layers) -> tuple[int, float]:
-        last = layers[-1]
-        return len(layers), last.n / last.cap if last.cap else 0.0
+    def payload(self, layer: _Layer) -> bytes:
+        return layer.bits
+
+    def load(self, meta: list[int], blob: bytes, off: int) -> tuple[_Layer, int]:
+        m, k, cap, n = meta
+        return _Layer(m, k, cap, n, blob[off:off + m // 8]), off + m // 8
 
 
 def with_bloom_hashes(df: DataFrame, url_col: str,

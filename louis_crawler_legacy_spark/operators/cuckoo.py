@@ -1,8 +1,9 @@
 """Partitioned cuckoo-filter URL-seen set — the north rule's alternative to
 the Bloom layer (operators/bloom.py), selectable via
-``CrawlConfig(seen_filter="cuckoo")``. It is a codec on the Bloom layer's
-per-partition blob driver (bloom.BlobFilter); this module holds the numpy
-kernels and the blob format.
+``CrawlConfig(seen_filter="cuckoo")``. It is a codec over one layer (a
+cuckoo table) on the scalable chain and cogroup driver both kinds share
+(bloom.BlobFilter, which also holds the blob layout); this module holds
+the numpy kernels and the one operation Bloom lacks, deletion.
 
 Why a cuckoo filter next to the Bloom filter:
 
@@ -11,65 +12,52 @@ Why a cuckoo filter next to the Bloom filter:
   expiry rewrites the whole seen table anyway and rebuilds the blobs in
   that pass (see the CAVEAT below),
 - **bounded lookups**: a probe reads exactly two 4-slot buckets (plus a
-  tiny overflow stash), independent of occupancy,
+  tiny overflow stash) per table, independent of occupancy,
 - **lower fpp per bit at high load**: 16-bit fingerprints give
   fpp ≈ 2·b/2^16 ≈ 1.2e-4 at ~84% load.
 
 Same two-stage dedup contract as the Bloom layer: **a miss is definitively
 new** (zero false negatives — overflowing inserts go to an exact stash
 instead of being dropped, so the filter never forgets), only hits take the
-exact left-anti join. Same physical shape too: one blob row per URL-hash
-partition (``part_id, bits, n_items``), grouped by part_id in
-bloom.BlobFilter so each task touches exactly one blob, all per-row work
-vectorized numpy — the kick loop iterates over *attempt rounds* (each
-round a full-array numpy pass with first-writer-wins conflict
-resolution), never over rows.
+exact left-anti join. All per-row work is vectorized numpy — the kick loop
+iterates over *attempt rounds* (each round a full-array numpy pass with
+first-writer-wins conflict resolution), never over rows.
 
 Hashing reuses the JVM-side columns from bloom.with_bloom_hashes:
 h1 → bucket index, h2 → 16-bit fingerprint. The alternate bucket is the
 standard partial-key involution i2 = i1 XOR (fp · K) (Fan et al.,
 "Cuckoo Filter: Practically Better Than Bloom", CoNEXT 2014), so a stored
-fingerprint's other bucket is derivable from where it sits.
+fingerprint's other bucket is derivable from where it sits. A stash key
+is (min(i1, i2) << 16) | fp — canonical-bucket keyed so probe and delete
+find it from either bucket. Insert/delete are MULTISET operations, the
+standard cuckoo-filter contract that keeps per-copy deletion sound — see
+insert_many/delete_chain.
 
-Blob layout (little-endian): uint64 magic "CUKFILT1" | uint64 n_buckets |
-uint64 n_stash | uint16 table[n_buckets * 4] | uint64 stash_keys[n_stash],
-where a stash key is (min(i1, i2) << 16) | fp — canonical-bucket keyed so
-probe and delete find it from either bucket. The magic guards against
-feeding a raw Bloom bitmap (same table, different seen_filter config) into
-the cuckoo decoder. Insert/delete are MULTISET operations, the standard
-cuckoo-filter contract that keeps per-copy deletion sound — see
-insert_many/delete_many.
+**Growth**: a single table saturates on a sustained crawl — past ~84%
+load the kick loop starts failing and every overflow lands in the exact
+stash, which would grow without bound inside one blob. So layer i of a
+blob's chain is a table of nb0·2^i buckets, filled to ``LOAD`` (a stored
+fingerprint can't be re-homed into a bigger table — the original h1 bits
+above the old bucket mask are gone — so chaining, not rebuild, is the
+growth move). Each table's stash only ever holds kick-failures from below
+its cap — bounded by construction; fpp grows linearly in chain length
+(≈1.2e-4 per table), log-bounded overall.
 
-**Unbounded growth (round-3 scale fix)**: a single table saturates on a
-sustained crawl — past ~84% load the kick loop starts failing and every
-overflow lands in the exact stash, which would grow without bound inside
-one blob. A partition's blob is therefore a CHAIN of cuckoo tables
-("CUKCHN02" framing): inserts fill the newest table up to its load cap,
-a full table appends the next one at 2× buckets (a stored fingerprint
-can't be re-homed into a bigger table — the original h1 bits above the
-old bucket mask are gone — so chaining, not rebuild, is the growth move);
-probe ORs all tables; delete walks the chain and forwards only
-still-unsatisfied keys (per-key masks). CAVEAT — chained deletes weaken
-the single-table contract: a key whose copy lives in a NEWER table can
-match a collider's copy (same 16-bit fp + bucket pair under the older
-table's smaller mask) in an OLDER table and consume it, leaving the
-collider a false NEGATIVE (probability ~per-table fpp per deleted key;
-planted repro in tests/test_cuckoo.py). The crawl engine therefore never
-deletes: plans/crawl.expire_urls rebuilds every blob from the surviving
-exact seen rows, for both filter kinds, in the same pass that rewrites
-the seen table. ``delete_blobs`` stays a library operation with this
-edge. Each table's stash only ever holds kick-failures from below its
-cap — bounded by construction; chain length grows log2(n/cap0); fpp grows
-linearly in chain length (≈1.2e-4 per table), log-bounded overall.
-
-Chain layout: uint64 magic "CUKCHN02" | uint64 n_tables | n_tables ×
-(uint64 n_buckets, uint64 n_stash, uint64 n_items) | per-table payload
-(uint16 table[nb·4] | uint64 stash[ns]). A v1 single-table blob decodes
-as a one-entry chain (n_items from the blob row), so pre-growth
-warehouses stay readable.
+CAVEAT — ``delete_chain`` walks the tables and forwards only
+still-unsatisfied keys, which weakens the single-table contract: a key
+whose copy lives in a NEWER table can match a collider's copy (same 16-bit
+fp + bucket pair under the older table's smaller mask) in an OLDER table
+and consume it, leaving the collider a false NEGATIVE (probability ~per-
+table fpp per deleted key; planted repro in tests/test_cuckoo.py). The
+crawl engine therefore never deletes: plans/crawl.expire_urls rebuilds
+every blob from the surviving exact seen rows, for both filter kinds, in
+the same pass that rewrites the seen table. ``delete_blobs`` stays a
+library operation with this edge.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -77,18 +65,13 @@ from pyspark.sql import DataFrame
 from louis_crawler_legacy_spark.operators.bloom import BlobFilter
 
 SLOTS = 4
+LOAD = 0.84  # fill fraction at which a table's chain grows the next one
 _FP_MASK = np.uint64(0xFFFF)
 _ALT_K = np.uint64(0x5BD1E995)  # odd multiplier scatters the 16-bit fp
 _MAX_KICK_ROUNDS = 250
 
-# blob magic: distinguishes a cuckoo blob from a raw Bloom bitmap sharing
-# the same table/schema — deserializing the wrong kind must be a clear
-# error, not garbage membership answers
-_MAGIC = np.uint64(0x43554B46494C5431)  # "CUKFILT1"
-_HEADER = np.dtype(np.uint64).itemsize * 3
 
-
-def cuckoo_buckets(expected_n: int, load: float = 0.84) -> int:
+def cuckoo_buckets(expected_n: int, load: float = LOAD) -> int:
     """Power-of-two bucket count holding expected_n fingerprints at ~load."""
     need = max(int(np.ceil(max(expected_n, 1) / (SLOTS * load))), 2)
     return 1 << int(need - 1).bit_length()
@@ -125,46 +108,26 @@ def _stash_keys_of(b: np.ndarray, fp: np.ndarray, nb: int) -> np.ndarray:
     return (cmin << np.uint64(16)) | fp.astype(np.uint64)
 
 
-def empty_state(nb: int) -> tuple[np.ndarray, np.ndarray]:
-    """A fresh (table, stash) pair — the one layout every caller shares."""
-    return (
-        np.zeros((nb, SLOTS), dtype=np.uint16),
-        np.zeros(0, dtype=np.uint64),
-    )
+@dataclass
+class _Table:
+    """One layer: a bucket table, its overflow stash and its key count."""
+
+    table: np.ndarray  # uint16 fingerprints, (n_buckets, SLOTS); 0 = empty
+    stash: np.ndarray  # uint64 stash keys
+    n: int
+
+    @property
+    def cap(self) -> int:
+        """Keys the table takes before the chain grows the next one."""
+        return int(self.table.shape[0] * SLOTS * LOAD)
 
 
-def serialize(table: np.ndarray, stash: np.ndarray) -> bytes:
-    header = np.array([_MAGIC, table.shape[0], len(stash)], dtype=np.uint64)
-    return header.tobytes() + table.tobytes() + stash.tobytes()
-
-
-def deserialize(blob: bytes) -> tuple[np.ndarray, np.ndarray]:
-    magic, nb, ns = np.frombuffer(blob[:_HEADER], dtype=np.uint64)
-    if magic != _MAGIC:
-        raise ValueError(
-            "not a cuckoo-filter blob (bad magic) — was this warehouse "
-            "built with seen_filter='bloom'? The two filter kinds share "
-            "the seen_bloom table but not a blob format."
-        )
-    nb, ns = int(nb), int(ns)
-    t_end = _HEADER + nb * SLOTS * 2
-    table = (
-        np.frombuffer(blob[_HEADER:t_end], dtype=np.uint16)
-        .reshape(nb, SLOTS)
-        .copy()
-    )
-    stash = np.frombuffer(blob[t_end:t_end + ns * 8], dtype=np.uint64).copy()
-    return table, stash
-
-
-def probe_filter(blob: bytes, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-    """Vectorized membership → bool array over a single-table (v1) blob.
-    No false negatives by construction (stash catches what the table
-    couldn't place)."""
-    if len(h1) == 0:
-        return np.zeros(0, dtype=bool)
-    table, stash = deserialize(blob)
-    return _probe_state(table, stash, np.asarray(h1), np.asarray(h2))
+def _distinct(h1: np.ndarray, h2: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """The keys deduped on the full (h1, h2) pair: a 128-bit match is the
+    same URL, not a filter-granularity collision."""
+    h1, h2 = np.asarray(h1), np.asarray(h2)
+    _, uniq = np.unique(np.stack([h1, h2], axis=1), axis=0, return_index=True)
+    return h1[uniq], h2[uniq]
 
 
 def insert_many(
@@ -177,7 +140,7 @@ def insert_many(
     MULTISET semantics (standard cuckoo filter): distinct keys that collide
     at filter granularity — same fingerprint AND same bucket pair — each
     keep their own copy, so deleting one key never un-members a collider
-    (delete_many removes ONE copy). Deduping against the table here would
+    (delete_chain removes ONE copy). Deduping against the table here would
     silently merge colliders and make deletion unsound. Exact duplicates
     WITHIN a batch are deduped on the full (h1, h2) hash pair — a 128-bit
     match is the same URL, not a collision. Re-inserting a key already
@@ -185,11 +148,9 @@ def insert_many(
     never does (each URL enters `seen` exactly once per warehouse, and
     expire_urls rebuilds the blobs without it before any re-add)."""
     nb = table.shape[0]
-    h1 = np.asarray(h1)
-    h2 = np.asarray(h2)
-    _, uniq = np.unique(np.stack([h1, h2], axis=1), axis=0, return_index=True)
-    fp = _fingerprint(h2[uniq])
-    cur = _bucket1(h1[uniq], nb)
+    h1, h2 = _distinct(h1, h2)
+    fp = _fingerprint(h2)
+    cur = _bucket1(h1, nb)
     n_new = len(fp)
 
     flat = table.reshape(-1)
@@ -306,117 +267,6 @@ def _delete_keys(
     return table, stash, deleted
 
 
-def delete_many(
-    table: np.ndarray, stash: np.ndarray, h1: np.ndarray, h2: np.ndarray
-) -> tuple[np.ndarray, np.ndarray, int]:
-    """Remove the given keys (Bloom can't do this). Clears ONE fingerprint
-    copy per requested key — from whichever bucket holds it, else from the
-    stash (cuckoo semantics: the filter is a multiset of copies, so a
-    collider's copy survives its partner's deletion). Exact duplicates in
-    one call are deduped on the full (h1, h2) pair; distinct keys that
-    collide at filter granularity each remove their own copy. Sole
-    remaining edge: two colliding keys deleted in ONE call whose copies sit
-    in the same bucket may clear only one copy this call — an error in the
-    SAFE direction (the leftover copy is a false positive, never a false
-    negative)."""
-    h1 = np.asarray(h1)
-    h2 = np.asarray(h2)
-    _, uniq = np.unique(np.stack([h1, h2], axis=1), axis=0, return_index=True)
-    table, stash, deleted = _delete_keys(table, stash, h1[uniq], h2[uniq])
-    return table, stash, int(deleted.sum())
-
-
-# --- table chain (growth) ---------------------------------------------------
-
-_MAGIC2 = np.uint64(0x43554B43484E3032)  # "CUKCHN02"
-_CHDR = 16  # magic + n_tables
-_CMETA = 24  # nb, ns, n per table
-LOAD = 0.84
-
-
-def table_cap(nb: int, load: float = LOAD) -> int:
-    """Items a table accepts before the chain grows the next one."""
-    return int(nb * SLOTS * load)
-
-
-def serialize_chain(states: list[tuple[np.ndarray, np.ndarray, int]]) -> bytes:
-    header = np.array([_MAGIC2, len(states)], dtype=np.uint64)
-    meta = np.array(
-        [[t.shape[0], len(s), n] for t, s, n in states], dtype=np.uint64
-    )
-    payload = b"".join(t.tobytes() + s.tobytes() for t, s, _ in states)
-    return header.tobytes() + meta.tobytes() + payload
-
-
-def deserialize_chain(blob: bytes,
-                      n_items: int = 0) -> list[tuple[np.ndarray, np.ndarray, int]]:
-    magic = np.frombuffer(blob[:8], dtype=np.uint64)[0]
-    if magic == _MAGIC:  # v1 single-table blob → one-entry chain
-        table, stash = deserialize(blob)
-        return [(table, stash, n_items)]
-    if magic != _MAGIC2:
-        raise ValueError(
-            "not a cuckoo blob (bad magic) — was this warehouse built with "
-            "seen_filter='bloom'? The two filter kinds share the seen_bloom "
-            "table but not a blob format."
-        )
-    n_tables = int(np.frombuffer(blob[8:16], dtype=np.uint64)[0])
-    meta = np.frombuffer(
-        blob[_CHDR:_CHDR + n_tables * _CMETA], dtype=np.uint64
-    ).reshape(n_tables, 3)
-    states, off = [], _CHDR + n_tables * _CMETA
-    for nb, ns, n in meta:
-        nb, ns, n = int(nb), int(ns), int(n)
-        t_end = off + nb * SLOTS * 2
-        table = (
-            np.frombuffer(blob[off:t_end], dtype=np.uint16)
-            .reshape(nb, SLOTS).copy()
-        )
-        stash = np.frombuffer(blob[t_end:t_end + ns * 8], dtype=np.uint64).copy()
-        states.append((table, stash, n))
-        off = t_end + ns * 8
-    return states
-
-
-def insert_chain(
-    states: list[tuple[np.ndarray, np.ndarray, int]],
-    h1: np.ndarray, h2: np.ndarray,
-) -> list[tuple[np.ndarray, np.ndarray, int]]:
-    """Fill the newest table to its load cap; overflow appends a 2× table.
-    Splitting is positional (first `room` keys stay) — membership is
-    chain-wide, so placement doesn't matter for probes, and each key still
-    lives in exactly one table for per-copy deletion."""
-    i = 0
-    while i < len(h1):
-        table, stash, n = states[-1]
-        room = table_cap(table.shape[0]) - n
-        if room <= 0:
-            states.append(
-                empty_state(table.shape[0] * 2) + (0,)
-            )
-            continue
-        take = min(room, len(h1) - i)
-        table, stash, n_new = insert_many(
-            table, stash, h1[i:i + take], h2[i:i + take]
-        )
-        states[-1] = (table, stash, n + n_new)
-        i += take
-    return states
-
-
-def probe_chain(
-    states: list[tuple[np.ndarray, np.ndarray, int]],
-    h1: np.ndarray, h2: np.ndarray,
-) -> np.ndarray:
-    out = np.zeros(len(h1), dtype=bool)
-    for table, stash, _ in states:
-        miss = ~out
-        if not miss.any():
-            break
-        out[miss] = _probe_state(table, stash, h1[miss], h2[miss])
-    return out
-
-
 def _probe_state(table: np.ndarray, stash: np.ndarray,
                  h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
     if len(h1) == 0:
@@ -432,14 +282,18 @@ def _probe_state(table: np.ndarray, stash: np.ndarray,
     return hit
 
 
-def delete_chain(
-    states: list[tuple[np.ndarray, np.ndarray, int]],
-    h1: np.ndarray, h2: np.ndarray,
-) -> tuple[list[tuple[np.ndarray, np.ndarray, int]], int]:
-    """Delete ONE copy per requested key across the chain. Keys are deduped
-    on (h1, h2); each table only sees the keys the earlier tables did NOT
-    satisfy — forwarding a satisfied key would re-run the delete against
-    another table where only a collider's copy could match.
+def delete_chain(tables: list[_Table], h1: np.ndarray,
+                 h2: np.ndarray) -> tuple[list[_Table], int]:
+    """Delete ONE copy per requested key across the chain — from whichever
+    bucket holds it, else from the stash (cuckoo semantics: the filter is a
+    multiset of copies, so a collider's copy survives its partner's
+    deletion). Keys are deduped on (h1, h2); each table only sees the keys
+    the earlier tables did NOT satisfy — forwarding a satisfied key would
+    re-run the delete against another table where only a collider's copy
+    could match. Within one table, two colliding keys deleted in ONE call
+    whose copies sit in the same bucket may clear only one copy this call —
+    an error in the SAFE direction (a false positive, never a false
+    negative).
 
     UNSAFE-DIRECTION EDGE (chains of ≥2 tables only): the oldest-first
     walk stops at the FIRST match, which may be a collider's copy in an
@@ -447,30 +301,31 @@ def delete_chain(
     the collider then reads as deleted (false negative). See the module
     docstring; the engine's expiry rebuilds from exact rows instead
     (plans/crawl.expire_urls)."""
-    h1 = np.asarray(h1)
-    h2 = np.asarray(h2)
-    _, uniq = np.unique(np.stack([h1, h2], axis=1), axis=0, return_index=True)
-    h1u, h2u = h1[uniq], h2[uniq]
+    h1u, h2u = _distinct(h1, h2)
     n_deleted = 0
-    for idx, (table, stash, n) in enumerate(states):
+    for t in tables:
         if len(h1u) == 0:
             break
-        table, stash, deleted = _delete_keys(table, stash, h1u, h2u)
+        t.table, t.stash, deleted = _delete_keys(t.table, t.stash, h1u, h2u)
         d = int(deleted.sum())
-        states[idx] = (table, stash, max(n - d, 0))
+        t.n = max(t.n - d, 0)
         n_deleted += d
         h1u, h2u = h1u[~deleted], h2u[~deleted]
-    return states, n_deleted
+    return tables, n_deleted
 
 
 class PartitionedCuckoo(BlobFilter):
-    """Cuckoo-chain codec on the shared blob driver (bloom.BlobFilter):
-    same merge_blobs/probe surface and (part_id, bits, n_items) blob rows
-    as the Bloom layer, so crawl.py switches kinds without touching the
-    round pipeline. Each blob is a growth chain of tables (module
-    docstring), so capacity is a starting size, not a ceiling, and every
-    stash stays bounded. ``n_items`` counts deduplicated keys.
+    """Cuckoo-table codec on the shared scalable chain and blob driver
+    (bloom.BlobFilter): same merge_blobs/probe surface and (part_id, bits,
+    n_items) blob rows as the Bloom layer, so crawl.py switches kinds
+    without touching the round pipeline. Capacity is a starting size, not a
+    ceiling, and every stash stays bounded. ``n_items`` counts
+    deduplicated keys.
     """
+
+    MAGIC = np.uint64(0x43554B43484E3032)  # "CUKCHN02"
+    KIND = "cuckoo"
+    META = 3
 
     def __init__(self, n_buckets: int):
         self.nb = n_buckets
@@ -479,30 +334,37 @@ class PartitionedCuckoo(BlobFilter):
     def for_capacity(cls, expected_n: int, load: float = LOAD) -> "PartitionedCuckoo":
         return cls(cuckoo_buckets(expected_n, load))
 
-    def fresh(self) -> list[tuple[np.ndarray, np.ndarray, int]]:
-        return [empty_state(self.nb) + (0,)]
+    def layer(self, i: int) -> _Table:
+        nb = self.nb << i
+        return _Table(np.zeros((nb, SLOTS), dtype=np.uint16), np.zeros(0, dtype=np.uint64), 0)
 
-    decode = staticmethod(deserialize_chain)
-    encode = staticmethod(serialize_chain)
-    contains = staticmethod(probe_chain)
+    def add(self, t: _Table, h1, h2) -> int:
+        t.table, t.stash, n_new = insert_many(t.table, t.stash, h1, h2)
+        return n_new
 
-    def insert(self, states, h1, h2):
-        n0 = sum(n for _, _, n in states)
-        states = insert_chain(states, h1, h2)
-        return states, sum(n for _, _, n in states) - n0
+    def has(self, t: _Table, h1, h2) -> np.ndarray:
+        return _probe_state(t.table, t.stash, h1, h2)
 
-    def stats(self, states) -> tuple[int, float]:
-        last_t, _, last_n = states[-1]
-        last_cap = table_cap(last_t.shape[0])
-        return len(states), last_n / last_cap if last_cap else 0.0
+    def meta(self, t: _Table) -> tuple[int, ...]:
+        return t.table.shape[0], len(t.stash), t.n
+
+    def payload(self, t: _Table) -> bytes:
+        return t.table.tobytes() + t.stash.tobytes()
+
+    def load(self, meta: list[int], blob: bytes, off: int) -> tuple[_Table, int]:
+        nb, ns, n = meta
+        t_end = off + nb * SLOTS * 2
+        table = np.frombuffer(blob[off:t_end], dtype=np.uint16).reshape(nb, SLOTS).copy()
+        stash = np.frombuffer(blob[t_end:t_end + ns * 8], dtype=np.uint64).copy()
+        return _Table(table, stash, n), t_end + ns * 8
 
     def delete_blobs(self, filters: DataFrame, del_hashes: DataFrame) -> DataFrame:
         """Remove (part_id, h1, h2) keys so those URLs probe as unseen
         again — the capability the Bloom layer lacks. Subject to the
         chained-delete edge in the module docstring."""
 
-        def delete(states, h1, h2):
-            states, n_del = delete_chain(states, h1, h2)
-            return states, -n_del
+        def delete(tables, h1, h2):
+            tables, n_del = delete_chain(tables, h1, h2)
+            return tables, -n_del
 
         return self._update(filters, del_hashes, delete)

@@ -225,10 +225,11 @@ class CrawlConfig:
     bloom_fpp: float = 0.01
     # approximate-membership layer for the seen set: "bloom" (bitmap,
     # operators/bloom.py) or "cuckoo" (fingerprint table,
-    # operators/cuckoo.py). Both are codecs on one cogroup probe/merge
-    # driver (bloom.BlobFilter); crawl results are identical (both layers
-    # are exact-verified prefilters) and expiry rebuilds either kind the
-    # same way — the choice is an ops tradeoff (bloom: smallest bits/key;
+    # operators/cuckoo.py). Each kind is a one-layer codec on one scalable
+    # chain and cogroup probe/merge driver (bloom.BlobFilter: growth,
+    # blob framing, probe); crawl results are identical (both layers are
+    # exact-verified prefilters) and expiry rebuilds either kind the same
+    # way — the choice is an ops tradeoff (bloom: smallest bits/key;
     # cuckoo: lower fpp per bit at high load, bounded 2-bucket lookups).
     seen_filter: str = "bloom"
     base_timestamp: int = 1_700_000_000  # last_crawled = base + round (P5)
@@ -1349,7 +1350,8 @@ class CrawlEngine:
         exact by construction: no false negatives, no chained-delete
         collider edge (operators/cuckoo.py). Returns the number of URLs
         expired; a following ``run(seeds=urls)`` refetches them
-        (bootstrap's seeds ∖ seen reconciliation no longer filters them)."""
+        (bootstrap's seeds ∖ seen reconciliation no longer filters them).
+        A call that matches no seen URL writes nothing."""
         if not urls:
             return 0
         cfg = self.config
@@ -1369,6 +1371,11 @@ class CrawlEngine:
                 F.broadcast(url_df.withColumn("_gone", F.lit(True))), "url", "left"
             ).localCheckpoint(eager=False)
             n_expired = int(marked.agg(F.count("_gone").alias("gone")).first()["gone"])
+            if n_expired == 0:
+                # nothing to expire: writing the snapshot anyway would turn
+                # every later engine on this warehouse into upsert mode
+                release(marked)
+                return 0
             keep = marked.filter(F.col("_gone").isNull()).drop("_gone")
             hashes = bloom_mod.with_bloom_hashes(
                 keep.select("url"), "url", cfg.num_partitions

@@ -1,5 +1,6 @@
-"""Bloom seen-set tests: no false negatives (property), bounded false
-positives, Spark cogroup probe/merge round-trip."""
+"""Bloom seen-set tests through the codec API (fresh/insert/contains/
+encode/decode): no false negatives (property), bounded false positives,
+growth, Spark cogroup probe/merge round-trip."""
 
 from __future__ import annotations
 
@@ -17,37 +18,38 @@ from louis_crawler_legacy_spark.operators import bloom
 )
 @settings(max_examples=50, deadline=None)
 def test_no_false_negatives(items, probes):
-    m, k = bloom.bloom_params(max(len(items), 1), 0.01)
+    pb = bloom.PartitionedBloom.for_capacity(max(len(items), 1), 0.01)
     h1 = np.array(items, dtype=np.int64)
     h2 = h1 * np.int64(31) + np.int64(7)  # any deterministic second hash
-    bits = bloom.build_bits(h1, h2, m, k)
-    got = bloom.probe_bits(bits, h1, h2, m, k)
+    layers, _ = pb.insert(pb.fresh(), h1, h2)
+    got = pb.contains(layers, h1, h2)
     assert got.all(), "inserted item reported absent"
 
 
 def test_false_positive_rate_bounded():
     rng = np.random.default_rng(42)
     n = 20_000
-    m, k = bloom.bloom_params(n, 0.01)
+    pb = bloom.PartitionedBloom.for_capacity(n, 0.01)
     ins1 = rng.integers(-(2**62), 2**62, n, dtype=np.int64)
     ins2 = rng.integers(-(2**62), 2**62, n, dtype=np.int64)
-    bits = bloom.build_bits(ins1, ins2, m, k)
+    layers, _ = pb.insert(pb.fresh(), ins1, ins2)
     probe1 = rng.integers(-(2**62), 2**62, n, dtype=np.int64)
     probe2 = rng.integers(-(2**62), 2**62, n, dtype=np.int64)
-    fp = bloom.probe_bits(bits, probe1, probe2, m, k).mean()
+    fp = pb.contains(layers, probe1, probe2).mean()
     assert fp < 0.03, f"false positive rate {fp:.4f} too high"
 
 
 def test_incremental_merge_preserves_members():
-    m, k = bloom.bloom_params(1000, 0.01)
+    pb = bloom.PartitionedBloom.for_capacity(1000, 0.01)
     a1 = np.arange(100, dtype=np.int64)
     a2 = a1 * 13 + 1
     b1 = np.arange(100, 200, dtype=np.int64)
     b2 = b1 * 13 + 1
-    bits = bloom.build_bits(a1, a2, m, k)
-    bits = bloom.build_bits(b1, b2, m, k, base=bits)
-    assert bloom.probe_bits(bits, a1, a2, m, k).all()
-    assert bloom.probe_bits(bits, b1, b2, m, k).all()
+    layers, _ = pb.insert(pb.fresh(), a1, a2)
+    layers = pb.decode(pb.encode(layers))  # each merge starts from the blob
+    layers, _ = pb.insert(layers, b1, b2)
+    assert pb.contains(layers, a1, a2).all()
+    assert pb.contains(layers, b1, b2).all()
 
 
 def test_scalable_growth_3x_capacity_bounds_fpp(spark):
@@ -56,6 +58,7 @@ def test_scalable_growth_3x_capacity_bounds_fpp(spark):
     (a) measured fpp stays under ~2× configured (the scalable-Bloom bound),
     (b) zero false negatives, (c) the chain actually grew."""
     cap, fpp = 2_000, 0.01
+    pb = bloom.PartitionedBloom.for_capacity(cap, fpp)
     rng = np.random.default_rng(11)
     n = 3 * cap
     h1 = rng.integers(-(2**62), 2**62, n, dtype=np.int64)
@@ -64,25 +67,24 @@ def test_scalable_growth_3x_capacity_bounds_fpp(spark):
     # h1 → pairwise full-collisions at rate n/m) and inflate fpp ~10x
     h2 = rng.integers(-(2**62), 2**62, n, dtype=np.int64)
 
-    layers = [bloom._fresh_layer(0, cap, fpp)]
+    layers = pb.fresh()
     # insert in crawl-round-sized batches (growth decisions happen at batch
     # boundaries inside the merge task)
     for i in range(0, n, 500):
-        layers = bloom.insert_layers(layers, h1[i:i + 500], h2[i:i + 500],
-                                     cap, fpp)
+        layers, _ = pb.insert(layers, h1[i:i + 500], h2[i:i + 500])
     assert len(layers) >= 2  # grew: 3x capacity needs cap + 2·cap layers
     assert sum(l.n for l in layers) == n
     # (b) no false negatives
-    assert bloom.probe_layers(layers, h1, h2).all()
+    assert pb.contains(layers, h1, h2).all()
     # (a) fpp over fresh keys < 2x configured
     probe1 = rng.integers(-(2**62), 2**62, 50_000, dtype=np.int64)
     probe2 = rng.integers(-(2**62), 2**62, 50_000, dtype=np.int64)
-    measured = bloom.probe_layers(layers, probe1, probe2).mean()
+    measured = pb.contains(layers, probe1, probe2).mean()
     assert measured < 2 * fpp, f"fpp {measured:.4f} exceeds 2x configured"
     # round-trip through the serialized blob
-    blob = bloom.serialize_layers(layers)
-    layers2 = bloom.deserialize_layers(blob)
-    assert bloom.probe_layers(layers2, h1, h2).all()
+    blob = pb.encode(layers)
+    layers2 = pb.decode(blob)
+    assert pb.contains(layers2, h1, h2).all()
 
 
 def test_merge_blobs_grows_past_capacity(spark):
@@ -111,7 +113,7 @@ def test_merge_blobs_grows_past_capacity(spark):
 
 def test_spark_probe_and_merge(spark):
     num_parts = 4
-    pb = bloom.PartitionedBloom(*bloom.bloom_params(10_000, 0.01))
+    pb = bloom.PartitionedBloom.for_capacity(10_000, 0.01)
 
     seen = spark.createDataFrame(
         [(f"http://h{i % 7}.ca/p{i}", f"h{i % 7}.ca") for i in range(500)],
@@ -153,7 +155,7 @@ def test_hot_host_skew_balanced_and_correct(spark):
     tasks stay balanced while dedup results are unchanged (VERDICT r01
     scale-killer #2)."""
     num_parts = 8
-    pb = bloom.PartitionedBloom(*bloom.bloom_params(10_000, 0.01))
+    pb = bloom.PartitionedBloom.for_capacity(10_000, 0.01)
     urls = [f"http://hot.ca/p{i}" for i in range(900)] + [
         f"http://cold{i}.ca/p" for i in range(100)
     ]

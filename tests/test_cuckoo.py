@@ -1,6 +1,7 @@
-"""Cuckoo seen-set tests: zero false negatives (property + overfill),
-bounded false positives, deletion (the capability Bloom lacks), and the
-Spark cogroup merge/probe/delete round-trip."""
+"""Cuckoo seen-set tests through the codec API (fresh/insert/contains/
+encode/decode, delete_chain): zero false negatives (property + overfill),
+bounded false positives, deletion (the capability Bloom lacks), the kind
+guard, and the Spark cogroup merge/probe/delete round-trip."""
 
 from __future__ import annotations
 
@@ -13,76 +14,83 @@ from pyspark.sql import functions as F
 from louis_crawler_legacy_spark.operators import bloom, cuckoo
 
 
-def _fresh(capacity: int = 1_000):
-    return cuckoo.empty_state(cuckoo.cuckoo_buckets(capacity))
+def _codec(capacity: int = 1_000) -> cuckoo.PartitionedCuckoo:
+    return cuckoo.PartitionedCuckoo.for_capacity(capacity)
 
 
 def _h2(h1: np.ndarray) -> np.ndarray:
     return h1 * np.int64(31) + np.int64(7)
 
 
+def _overfilled(capacity: int, h1: np.ndarray):
+    """One table fed past its capacity through the codec's one-layer
+    ``add`` (``insert`` would grow the chain instead)."""
+    pc = _codec(capacity)
+    table = pc.layer(0)
+    table.n += pc.add(table, h1, _h2(h1))
+    return pc, table
+
+
 @given(st.lists(st.integers(min_value=-(2**63), max_value=2**63 - 1), max_size=200))
 @settings(max_examples=50, deadline=None)
 def test_no_false_negatives(items):
-    table, stash = _fresh(max(len(items), 1))
+    pc = _codec(max(len(items), 1))
     h1 = np.array(items, dtype=np.int64)
-    table, stash, _ = cuckoo.insert_many(table, stash, h1, _h2(h1))
-    blob = cuckoo.serialize(table, stash)
-    assert cuckoo.probe_filter(blob, h1, _h2(h1)).all(), "inserted item absent"
+    tables, _ = pc.insert(pc.fresh(), h1, _h2(h1))
+    tables = pc.decode(pc.encode(tables))
+    assert pc.contains(tables, h1, _h2(h1)).all(), "inserted item absent"
 
 
 def test_overfill_goes_to_stash_never_drops():
-    """Insert 4x the filter's capacity: every key must still probe present
+    """Insert 4x the table's capacity: every key must still probe present
     (overflow lands in the exact stash — the crawl contract is that a miss
     is DEFINITIVELY new, so the filter may never forget)."""
-    table, stash = _fresh(250)
     rng = np.random.default_rng(7)
     h1 = rng.integers(-(2**62), 2**62, 1_000, dtype=np.int64)
-    table, stash, _ = cuckoo.insert_many(table, stash, h1, _h2(h1))
-    assert len(stash) > 0, "expected overflow at 4x capacity"
-    blob = cuckoo.serialize(table, stash)
-    assert cuckoo.probe_filter(blob, h1, _h2(h1)).all()
+    pc, table = _overfilled(250, h1)
+    assert len(table.stash) > 0, "expected overflow at 4x capacity"
+    tables = pc.decode(pc.encode([table]))
+    assert pc.contains(tables, h1, _h2(h1)).all()
 
 
 def test_false_positive_rate_bounded():
-    table, stash = _fresh(20_000)
+    pc = _codec(20_000)
     rng = np.random.default_rng(42)
     ins = rng.integers(-(2**62), 2**62, 20_000, dtype=np.int64)
-    table, stash, _ = cuckoo.insert_many(table, stash, ins, _h2(ins))
+    tables, _ = pc.insert(pc.fresh(), ins, _h2(ins))
     probe = rng.integers(-(2**62), 2**62, 20_000, dtype=np.int64)
-    blob = cuckoo.serialize(table, stash)
-    fp = cuckoo.probe_filter(blob, probe, _h2(probe)).mean()
+    fp = pc.contains(tables, probe, _h2(probe)).mean()
     # 16-bit fingerprints: theoretical fpp ~ 1.2e-4; allow a wide margin
     assert fp < 0.01, f"false positive rate {fp:.5f} too high"
 
 
 def test_incremental_insert_preserves_members():
-    table, stash = _fresh(1_000)
+    pc = _codec(1_000)
     a = np.arange(100, dtype=np.int64)
     b = np.arange(100, 200, dtype=np.int64)
-    table, stash, na = cuckoo.insert_many(table, stash, a, _h2(a))
-    table, stash, nb_ = cuckoo.insert_many(table, stash, b, _h2(b))
+    tables, na = pc.insert(pc.fresh(), a, _h2(a))
+    tables, nb_ = pc.insert(tables, b, _h2(b))
     assert (na, nb_) == (100, 100)
-    blob = cuckoo.serialize(table, stash)
-    assert cuckoo.probe_filter(blob, a, _h2(a)).all()
-    assert cuckoo.probe_filter(blob, b, _h2(b)).all()
+    tables = pc.decode(pc.encode(tables))
+    assert pc.contains(tables, a, _h2(a)).all()
+    assert pc.contains(tables, b, _h2(b)).all()
 
 
 def test_within_batch_duplicates_counted_once():
-    table, stash = _fresh(1_000)
+    pc = _codec(1_000)
     h1 = np.array([5, 5, 5, 9], dtype=np.int64)
-    table, stash, n_new = cuckoo.insert_many(table, stash, h1, _h2(h1))
+    tables, n_new = pc.insert(pc.fresh(), h1, _h2(h1))
     assert n_new == 2
     # MULTISET contract: a later merge of the same keys adds copies (the
     # engine never re-adds — each URL enters seen once per warehouse);
     # what matters is that per-copy deletes bring it back to absent
-    table, stash, n_again = cuckoo.insert_many(table, stash, h1, _h2(h1))
+    tables, n_again = pc.insert(tables, h1, _h2(h1))
     assert n_again == 2
     for expected_left in (True, False):
-        table, stash, n_del = cuckoo.delete_many(table, stash, h1, _h2(h1))
+        tables, n_del = cuckoo.delete_chain(tables, h1, _h2(h1))
         assert n_del == 2
-        blob = cuckoo.serialize(table, stash)
-        got = cuckoo.probe_filter(blob, h1, _h2(h1))
+        tables = pc.decode(pc.encode(tables))
+        got = pc.contains(tables, h1, _h2(h1))
         assert got.all() if expected_left else not got.any()
 
 
@@ -91,7 +99,7 @@ def test_colliding_keys_survive_partner_deletion():
     filter granularity (same fingerprint + same bucket pair) each keep a
     copy, so expiring one must not un-member the other (a false negative
     would make the crawl re-fetch a seen URL and duplicate its rows)."""
-    table, stash = _fresh(1_000)
+    pc = _codec(1_000)
     h1 = np.array([12345], dtype=np.int64)
     fp_a = cuckoo._fingerprint(np.array([777], dtype=np.int64))[0]
     cand = np.arange(1, 1_000_000, dtype=np.int64)
@@ -100,69 +108,78 @@ def test_colliding_keys_survive_partner_deletion():
 
     ins_h1 = np.array([12345, 12345], dtype=np.int64)
     ins_h2 = np.array([777, h2_b], dtype=np.int64)
-    table, stash, n = cuckoo.insert_many(table, stash, ins_h1, ins_h2)
+    tables, n = pc.insert(pc.fresh(), ins_h1, ins_h2)
     assert n == 2  # colliders are separate copies, not "already present"
 
-    table, stash, nd = cuckoo.delete_many(
-        table, stash, h1, np.array([777], dtype=np.int64)
+    tables, nd = cuckoo.delete_chain(
+        tables, h1, np.array([777], dtype=np.int64)
     )
     assert nd == 1
-    blob = cuckoo.serialize(table, stash)
-    assert cuckoo.probe_filter(blob, h1, np.array([h2_b], dtype=np.int64))[0]
-    table, stash, nd2 = cuckoo.delete_many(
-        table, stash, h1, np.array([h2_b], dtype=np.int64)
+    tables = pc.decode(pc.encode(tables))
+    assert pc.contains(tables, h1, np.array([h2_b], dtype=np.int64))[0]
+    tables, nd2 = cuckoo.delete_chain(
+        tables, h1, np.array([h2_b], dtype=np.int64)
     )
     assert nd2 == 1
-    blob = cuckoo.serialize(table, stash)
-    assert not cuckoo.probe_filter(blob, ins_h1, ins_h2).any()
+    tables = pc.decode(pc.encode(tables))
+    assert not pc.contains(tables, ins_h1, ins_h2).any()
 
 
-def test_bloom_blob_rejected_by_magic():
-    """Feeding a Bloom bitmap (same table, seen_filter='bloom' warehouse)
-    into the cuckoo decoder must be a clear error, not garbage answers."""
-    bits = bloom.build_bits(
-        np.arange(50, dtype=np.int64), np.arange(50, dtype=np.int64) * 13 + 1,
-        *bloom.bloom_params(1_000, 0.01),
-    )
-    with pytest.raises(ValueError, match="magic"):
-        cuckoo.deserialize(bits)
+@pytest.mark.parametrize(
+    "writer, reader",
+    [("bloom", "cuckoo"), ("cuckoo", "bloom")],
+    ids=["bloom_blob_into_cuckoo", "cuckoo_blob_into_bloom"],
+)
+def test_bloom_blob_rejected_by_magic(writer, reader):
+    """Feeding one kind's blob (same seen_bloom table, a warehouse built
+    with the other seen_filter) into the other kind's decoder must be a
+    clear error naming the decoder's kind, not garbage answers."""
+    codecs = {
+        "bloom": bloom.PartitionedBloom.for_capacity(1_000, 0.01),
+        "cuckoo": _codec(1_000),
+    }
+    keys = np.arange(50, dtype=np.int64)
+    w = codecs[writer]
+    blob = w.encode(w.insert(w.fresh(), keys, keys * 13 + 1)[0])
+    with pytest.raises(ValueError, match=f"not a {reader} .*bad magic"):
+        codecs[reader].decode(blob)
 
 
 def test_delete_restores_nonmembership():
-    table, stash = _fresh(1_000)
+    pc = _codec(1_000)
     keys = np.arange(500, dtype=np.int64)
-    table, stash, _ = cuckoo.insert_many(table, stash, keys, _h2(keys))
+    tables, _ = pc.insert(pc.fresh(), keys, _h2(keys))
     victims = keys[::5]
-    table, stash, n_del = cuckoo.delete_many(table, stash, victims, _h2(victims))
+    tables, n_del = cuckoo.delete_chain(tables, victims, _h2(victims))
     assert n_del == len(victims)
-    blob = cuckoo.serialize(table, stash)
-    assert not cuckoo.probe_filter(blob, victims, _h2(victims)).any()
+    tables = pc.decode(pc.encode(tables))
+    assert not pc.contains(tables, victims, _h2(victims)).any()
     kept = np.setdiff1d(keys, victims)
-    assert cuckoo.probe_filter(blob, kept, _h2(kept)).all()
+    assert pc.contains(tables, kept, _h2(kept)).all()
     # deleting again is a no-op
-    table, stash, n2 = cuckoo.delete_many(table, stash, victims, _h2(victims))
+    tables, n2 = cuckoo.delete_chain(tables, victims, _h2(victims))
     assert n2 == 0
 
 
 def test_delete_from_stash():
-    table, stash = _fresh(250)  # force overflow
     rng = np.random.default_rng(3)
     h1 = rng.integers(-(2**62), 2**62, 1_000, dtype=np.int64)
-    table, stash, _ = cuckoo.insert_many(table, stash, h1, _h2(h1))
-    assert len(stash) > 0
-    table, stash2, n_del = cuckoo.delete_many(table, stash, h1, _h2(h1))
-    assert n_del == 1_000 and len(stash2) == 0
-    blob = cuckoo.serialize(table, stash2)
-    assert not cuckoo.probe_filter(blob, h1, _h2(h1)).any()
-    assert (table == 0).all()
+    pc, table = _overfilled(250, h1)  # force overflow
+    assert len(table.stash) > 0
+    tables, n_del = cuckoo.delete_chain([table], h1, _h2(h1))
+    assert n_del == 1_000 and len(tables[0].stash) == 0
+    tables = pc.decode(pc.encode(tables))
+    assert not pc.contains(tables, h1, _h2(h1)).any()
+    assert (tables[0].table == 0).all()
 
 
 def test_serialize_roundtrip():
-    table, stash = _fresh(100)
+    pc = _codec(100)
     h1 = np.arange(50, dtype=np.int64)
-    table, stash, _ = cuckoo.insert_many(table, stash, h1, _h2(h1))
-    t2, s2 = cuckoo.deserialize(cuckoo.serialize(table, stash))
-    assert (t2 == table).all() and (s2 == stash).all()
+    tables, _ = pc.insert(pc.fresh(), h1, _h2(h1))
+    (t2,) = pc.decode(pc.encode(tables))
+    assert (t2.table == tables[0].table).all()
+    assert (t2.stash == tables[0].stash).all() and t2.n == tables[0].n == 50
 
 
 def test_chain_growth_3x_capacity_bounds_stash(spark):
@@ -172,44 +189,33 @@ def test_chain_growth_3x_capacity_bounds_stash(spark):
     sub-cap kick failures may land there), zero false negatives, fpp still
     tiny, and per-copy deletion works across the chain."""
     cap = 1_000
-    states = [cuckoo.empty_state(cuckoo.cuckoo_buckets(cap)) + (0,)]
+    pc = _codec(cap)
+    tables = pc.fresh()
     rng = np.random.default_rng(5)
     n = 3 * cap
     h1 = rng.integers(-(2**62), 2**62, n, dtype=np.int64)
     for i in range(0, n, 250):
-        states = cuckoo.insert_chain(states, h1[i:i + 250], _h2(h1[i:i + 250]))
-    assert len(states) >= 2
-    assert sum(s[2] for s in states) == n
-    for _, stash, _ in states:
-        assert len(stash) < 64, f"stash grew to {len(stash)} — not bounded"
-    assert cuckoo.probe_chain(states, h1, _h2(h1)).all()
+        tables, _ = pc.insert(tables, h1[i:i + 250], _h2(h1[i:i + 250]))
+    assert len(tables) >= 2
+    assert sum(t.n for t in tables) == n
+    for t in tables:
+        assert len(t.stash) < 64, f"stash grew to {len(t.stash)} — not bounded"
+    assert pc.contains(tables, h1, _h2(h1)).all()
     probe = rng.integers(-(2**62), 2**62, 50_000, dtype=np.int64)
-    fp = cuckoo.probe_chain(states, probe, _h2(probe)).mean()
+    fp = pc.contains(tables, probe, _h2(probe)).mean()
     assert fp < 0.01  # ~1.2e-4 per table, len(chain) tables
 
     # serialize round-trip
-    states2 = cuckoo.deserialize_chain(cuckoo.serialize_chain(states))
-    assert cuckoo.probe_chain(states2, h1, _h2(h1)).all()
+    tables2 = pc.decode(pc.encode(tables))
+    assert pc.contains(tables2, h1, _h2(h1)).all()
 
     # chain delete: every key deletable exactly once, wherever it lives
     victims = h1[::7]
-    states2, n_del = cuckoo.delete_chain(states2, victims, _h2(victims))
+    tables2, n_del = cuckoo.delete_chain(tables2, victims, _h2(victims))
     assert n_del == len(victims)
-    assert not cuckoo.probe_chain(states2, victims, _h2(victims)).any()
+    assert not pc.contains(tables2, victims, _h2(victims)).any()
     kept = np.setdiff1d(h1, victims)
-    assert cuckoo.probe_chain(states2, kept, _h2(kept)).all()
-
-
-def test_v1_blob_reads_as_chain():
-    """A pre-growth single-table blob stays readable (decodes as a
-    one-entry chain)."""
-    table, stash = _fresh(500)
-    keys = np.arange(300, dtype=np.int64)
-    table, stash, _ = cuckoo.insert_many(table, stash, keys, _h2(keys))
-    v1_blob = cuckoo.serialize(table, stash)
-    states = cuckoo.deserialize_chain(v1_blob, n_items=300)
-    assert len(states) == 1 and states[0][2] == 300
-    assert cuckoo.probe_chain(states, keys, _h2(keys)).all()
+    assert pc.contains(tables2, kept, _h2(kept)).all()
 
 
 def test_spark_probe_merge_delete(spark):
@@ -342,6 +348,17 @@ def test_expire_requests_outside_seen_never_reach_the_filter(
     )
     target = scraped[0]
 
+    # a call that matches no seen URL writes nothing: no snapshot, no blob
+    # rebuild, and a fresh engine on the warehouse keeps appending
+    hist = (eng.seen.history(), eng.blooms.history())
+    assert eng.expire_urls(["http://never.invalid/a"]) == 0
+    assert (eng.seen.history(), eng.blooms.history()) == hist
+    fresh = CrawlEngine(
+        spark, corpus_mod.corpus_df(spark, corpus), str(tmp_path / "wh"), cfg
+    )
+    fresh._load_state()
+    assert not fresh._upsert
+
     # two never-crawled URLs + the same seen URL twice → exactly one expiry
     n = eng.expire_urls(
         ["http://never.invalid/a", "http://never.invalid/b", target, target]
@@ -412,8 +429,9 @@ def test_delete_chain_cross_table_collider_edge_documented():
     always rebuilds the blobs from the surviving seen rows
     (plans/crawl.expire_urls; growth-expire test below), so this library
     edge is documented, not load-bearing."""
-    nb0 = cuckoo.cuckoo_buckets(100)  # 32 buckets
-    cap0 = cuckoo.table_cap(nb0)
+    pc = _codec(100)
+    nb0 = pc.nb  # 32 buckets
+    cap0 = pc.layer(0).cap
 
     # two distinct keys with the SAME fingerprint; same bucket in the
     # nb0 table (h1 ≡ mod nb0) but different buckets in the 2×nb0 table
@@ -436,17 +454,12 @@ def test_delete_chain_cross_table_collider_edge_documented():
 
     # K' first (lands in table 1), fillers up to the growth cap, then K
     # (lands in table 2)
-    states = [cuckoo.empty_state(nb0) + (0,)]
-    states = cuckoo.insert_chain(
-        states, np.array([h1b]), np.array([h2b])
-    )
+    states, _ = pc.insert(pc.fresh(), np.array([h1b]), np.array([h2b]))
     filler = np.arange(10**6, 10**6 + cap0 - 1, dtype=np.int64)
-    states = cuckoo.insert_chain(states, filler, _h2(filler))
-    states = cuckoo.insert_chain(
-        states, np.array([h1a]), np.array([h2a])
-    )
+    states, _ = pc.insert(states, filler, _h2(filler))
+    states, _ = pc.insert(states, np.array([h1a]), np.array([h2a]))
     assert len(states) >= 2
-    assert cuckoo.probe_chain(states, np.array([h1b]), np.array([h2b]))[0]
+    assert pc.contains(states, np.array([h1b]), np.array([h2b]))[0]
 
     states, n_del = cuckoo.delete_chain(
         states, np.array([h1a]), np.array([h2a])
@@ -456,10 +469,8 @@ def test_delete_chain_cross_table_collider_edge_documented():
     # K' is now a false negative (and K, whose copy survives in table 2,
     # still probes seen). If this assertion ever flips, delete_chain
     # became chain-safe.
-    assert not cuckoo.probe_chain(
-        states, np.array([h1b]), np.array([h2b])
-    )[0]
-    assert cuckoo.probe_chain(states, np.array([h1a]), np.array([h2a]))[0]
+    assert not pc.contains(states, np.array([h1b]), np.array([h2b]))[0]
+    assert pc.contains(states, np.array([h1a]), np.array([h2a]))[0]
 
 
 def test_expire_rebuilds_multi_table_cuckoo_partitions(spark, tmp_path):

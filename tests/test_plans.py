@@ -240,7 +240,7 @@ def test_bucketed_seen_state_probe_never_shuffles_blobs(spark, tmp_path):
 
     from louis_crawler_legacy_spark.operators import bloom
 
-    pb = bloom.PartitionedBloom(*bloom.bloom_params(10_000, 0.01))
+    pb = bloom.PartitionedBloom.for_capacity(10_000, 0.01)
     seen = spark.createDataFrame(
         [(f"http://h{i % 5}.ca/p{i}",) for i in range(300)], ["url"]
     )
